@@ -51,32 +51,9 @@ object Extract {
   // text-density / link-density block classifier (north rule). For
   // non-HTML text this is the identity.
   // -------------------------------------------------------------------------
-  private val tagPattern = Pattern.compile("(?is)<[^>]*>")
-  private val anchorPattern = Pattern.compile("(?is)<a\\b[^>]*>(.*?)</a>")
-  private val blockSplitters =
-    Pattern.compile("(?is)</?(?:div|p|nav|footer|header|ul|ol|li|table|tr|h[1-6]|br|body|html|section|article|aside)[^>]*>")
-  private val scriptStyle =
-    Pattern.compile("(?is)<(script|style)\\b[^>]*>.*?</\\1>")
-  // Structural chrome pruning (Trafilatura-style): whole <nav>/<aside>/
-  // <footer>/<header>/<head> subtrees are boilerplate by POSITION, not by
-  // their text features — a nav bar of plain words passes any density
-  // test yet is never main content. Non-greedy, so a same-tag nested
-  // subtree degrades to partial pruning (heuristic, documented); an
-  // unclosed tag leaves the subtree to the density classifier.
-  private val pruneSubtrees =
-    Pattern.compile("(?is)<(head|nav|aside|footer|header)\\b[^>]*>.*?</\\1>")
-
   def isHtml(text: String): Boolean =
     text.contains("<html") || text.contains("<body") || text.contains("<div") ||
       text.contains("<p>") || text.contains("</a>")
-
-  // hoisted: String.replaceAll/split compile their pattern on EVERY call,
-  // and stripTags runs once per anchor plus once per block of every HTML
-  // turn (~17% of the generator mix) — measured 52 us per HTML turn before
-  private val wsRun = Pattern.compile("\\s+")
-
-  private def stripTags(s: String): String =
-    wsRun.matcher(tagPattern.matcher(s).replaceAll(" ")).replaceAll(" ").trim
 
   /** One flat-text block of an HTML page with its shallow text features
     * (Kohlschütter et al., WSDM 2010: word count + link density are the
@@ -91,21 +68,268 @@ object Extract {
     * tags, strip remaining inline tags, collapse whitespace; per block
     * compute word count and link density (chars inside <a> / total text
     * chars of the block).
+    *
+    * A tag scanner, in time linear in the page length: one sweep drops
+    * script/style elements, a second drops chrome elements from what is
+    * left, a third cuts blocks and reads each block's text and link
+    * chars. Every forward search for a `>` or a closer either moves the
+    * cursor past what it read, stops at the tag that ends the block, or,
+    * when it finds nothing, is remembered: a `>` or closer missing after
+    * one start is missing after every later start, so unclosed tags do
+    * not rescan the rest of the page.
+    *
+    * The output equals, byte for byte, that of the regex form kept in the
+    * tests as the oracle `RegexTextBlocks` (`<(script|style)\b[^>]*>.*?</\1>`,
+    * the same for `head|nav|aside|footer|header`, a split at block tags,
+    * then per block `<a\b[^>]*>(.*?)</a>` and `<[^>]*>` with `\s+`
+    * collapsed and `String.trim`). The golden checksum rests on its
+    * quirks, kept here:
+    *  - names and closers match ASCII case-insensitively: `</SCRIPT>`
+    *    closes `<script>`;
+    *  - after a script/style/chrome/anchor name comes a `\b`: the next
+    *    char may not be a letter, digit, `_` or non-spacing mark (JDK 17);
+    *  - a tag needs a `>` and ends at the first one, quotes or not
+    *    (`<a title="1>2">` ends at the `>` after `1`); a lone `<` is text;
+    *  - an element ends at the FIRST closer of its name, so a same-name
+    *    nested subtree is pruned only in part, and one with no closer is
+    *    kept for the density classifier;
+    *  - script/style go first and each dropped element becomes one space,
+    *    so the prune never sees a closer inside a script;
+    *  - block tags match a name PREFIX with no boundary: `<pre>`,
+    *    `<link>`, `<track>`, `<param>` (any `<p…`, `<li…`, `<tr…`,
+    *    `<br…`) split blocks too;
+    *  - an anchor runs to the first `</a>` in its block, and its link chars
+    *    are the length of its body stripped as a string of its own;
+    *  - whitespace is Java `\s` (` \t\n\x0B\f\r`) collapsed to one space,
+    *    then `String.trim`, which also drops other chars <= ' ' at the
+    *    ends; so a block's word count is its number of spaces plus one.
     */
-  def textBlocks(html: String): Vector[TextBlock] = {
-    val noScript = scriptStyle.matcher(html).replaceAll(" ")
-    val noChrome = pruneSubtrees.matcher(noScript).replaceAll(" ")
-    blockSplitters.split(noChrome).toVector.flatMap { raw =>
-      val m = anchorPattern.matcher(raw)
-      var linkChars = 0
-      while (m.find()) linkChars += stripTags(m.group(1)).length
-      val txt = stripTags(raw)
-      if (txt.isEmpty) None
-      else {
-        val words = wsRun.split(txt).count(_.nonEmpty)
-        Some(TextBlock(txt, words, linkChars.toDouble / txt.length))
+  def textBlocks(html: String): Vector[TextBlock] =
+    splitBlocks(dropElements(dropElements(html, ScriptStyle), Chrome))
+
+  private val ScriptStyle = Array("script", "style")
+  // Structural chrome pruning (Trafilatura-style): whole <nav>/<aside>/
+  // <footer>/<header>/<head> subtrees are boilerplate by POSITION, not by
+  // their text features — a nav bar of plain words passes any density
+  // test yet is never main content. Listed in the regex's alternation
+  // order; `head` cannot shadow `header`, as `\b` must follow the name.
+  private val Chrome = Array("head", "nav", "aside", "footer", "header")
+
+  /** `s` with each `<name …>…</name>` element of the names given
+    * (lowercase ASCII letters) replaced by one space, left to right.
+    */
+  private def dropElements(s: String, names: Array[String]): String = {
+    val unclosed = new Array[Boolean](names.length)
+    // the last `>` found; starts only grow, so it stays the first `>` after
+    // any later start that is not past it
+    var gt = -1
+    var sb: java.lang.StringBuilder = null // made at the first drop
+    var r = 0 // s[0, r) is settled into sb
+    var lt = s.indexOf('<')
+    while (lt >= 0) {
+      val k = openTag(s, lt + 1, names)
+      var next = lt + 1
+      if (k >= 0 && !unclosed(k)) {
+        val from = lt + 1 + names(k).length
+        if (gt < from) gt = s.indexOf('>', from)
+        if (gt < 0) next = s.length // no `>` left: no later element can open
+        else {
+          val close = indexOfCloser(s, gt + 1, s.length, names(k))
+          if (close < 0) unclosed(k) = true
+          else {
+            if (sb == null) sb = new java.lang.StringBuilder(s.length)
+            sb.append(s, r, lt).append(' ')
+            r = close + names(k).length + 3
+            next = r
+          }
+        }
+      }
+      lt = s.indexOf('<', next)
+    }
+    if (sb == null) s else sb.append(s, r, s.length).toString
+  }
+
+  /** Split `s` at block tags into [[TextBlock]]s, dropping blocks with no
+    * text. Every search from inside a block stops at the `<` or `>` of the
+    * block tag that ends it.
+    */
+  private def splitBlocks(s: String): Vector[TextBlock] = {
+    val out = Vector.newBuilder[TextBlock]
+    val tmp = new Array[Char](s.length)
+    var start = 0
+    var lt = s.indexOf('<')
+    while (lt >= 0) {
+      var next = lt + 1
+      if (isBlockTag(s, if (lt + 1 < s.length && s.charAt(lt + 1) == '/') lt + 2 else lt + 1)) {
+        val gt = s.indexOf('>', lt + 1)
+        if (gt < 0) next = s.length // no `>` left: the rest is the last block
+        else {
+          addBlock(s, start, lt, tmp, out)
+          start = gt + 1
+          next = start
+        }
+      }
+      lt = s.indexOf('<', next)
+    }
+    addBlock(s, start, s.length, tmp, out)
+    out.result()
+  }
+
+  private def addBlock(s: String, from: Int, end: Int, tmp: Array[Char],
+      out: collection.mutable.Growable[TextBlock]): Unit = {
+    val len = collapse(s, from, end, tmp)
+    val lo = trimStart(tmp, len)
+    val hi = trimEnd(tmp, lo, len)
+    if (lo < hi) {
+      var words = 1
+      var j = lo
+      while (j < hi) {
+        if (tmp(j) == ' ') words += 1
+        j += 1
+      }
+      val text = new String(tmp, lo, hi - lo) // before linkChars reuses tmp
+      out += TextBlock(text, words, linkChars(s, from, end, tmp).toDouble / text.length)
+    }
+  }
+
+  /** Stripped text length of every `<a …>…</a>` body in block s[from, end). */
+  private def linkChars(s: String, from: Int, end: Int, tmp: Array[Char]): Int = {
+    var sum = 0
+    var lt = s.indexOf('<', from)
+    while (lt >= 0 && lt < end) {
+      var next = lt + 1
+      if (lt + 1 < end && (s.charAt(lt + 1) | 0x20) == 'a' && boundaryAt(s, lt + 2, end)) {
+        val gt = s.indexOf('>', lt + 2)
+        val close = if (gt < 0 || gt >= end) -1 else indexOfCloser(s, gt + 1, end, "a")
+        // with no `>` or no closer after this start, none follows a later one
+        if (close < 0) next = end
+        else {
+          val len = collapse(s, gt + 1, close, tmp)
+          val lo = trimStart(tmp, len)
+          sum += trimEnd(tmp, lo, len) - lo
+          next = close + 4
+        }
+      }
+      lt = s.indexOf('<', next)
+    }
+    sum
+  }
+
+  /** Write s[from, end) to out[0, ·) with each tag (`<` to the first `>`
+    * before end) as a space and each run of Java `\s` collapsed into one
+    * space, leading spaces dropped; returns the length written.
+    */
+  private def collapse(s: String, from: Int, end: Int, out: Array[Char]): Int = {
+    var tags = true // false once a `<` has no `>` before end: no later one has
+    var w = 0
+    var i = from
+    while (i < end) {
+      val c = s.charAt(i)
+      var gt = -1
+      if (c == '<' && tags) {
+        gt = s.indexOf('>', i + 1)
+        tags = gt >= 0 && gt < end
+      }
+      if (c == '<' && tags || c == ' ' || (c >= '\t' && c <= '\r')) {
+        if (w > 0 && out(w - 1) != ' ') {
+          out(w) = ' '
+          w += 1
+        }
+        i = if (c == '<') gt + 1 else i + 1
+      } else {
+        out(w) = c
+        w += 1
+        i += 1
       }
     }
+    w
+  }
+
+  // String.trim bounds of a[0, len): chars <= ' ' are cut at both ends
+  private def trimStart(a: Array[Char], len: Int): Int = {
+    var lo = 0
+    while (lo < len && a(lo) <= ' ') lo += 1
+    lo
+  }
+
+  private def trimEnd(a: Array[Char], lo: Int, len: Int): Int = {
+    var hi = len
+    while (hi > lo && a(hi - 1) <= ' ') hi -= 1
+    hi
+  }
+
+  /** Index of the name in `names` that s opens with at j, followed by a
+    * `\b` boundary, or -1.
+    */
+  private def openTag(s: String, j: Int, names: Array[String]): Int = {
+    var k = 0
+    while (k < names.length) {
+      if (startsWithName(s, j, names(k)) && boundaryAt(s, j + names(k).length, s.length))
+        return k
+      k += 1
+    }
+    -1
+  }
+
+  /** Whether s opens a block tag name at j (regex prefix
+    * `div|p|nav|footer|header|ul|ol|li|table|tr|h[1-6]|br|body|html|
+    * section|article|aside`, no boundary).
+    */
+  private def isBlockTag(s: String, j: Int): Boolean =
+    j < s.length && ((s.charAt(j) | 0x20).toChar match {
+      case 'p' => true
+      case 'd' => startsWithName(s, j, "div")
+      case 'n' => startsWithName(s, j, "nav")
+      case 'f' => startsWithName(s, j, "footer")
+      case 'h' =>
+        (j + 1 < s.length && s.charAt(j + 1) >= '1' && s.charAt(j + 1) <= '6') ||
+          startsWithName(s, j, "header") || startsWithName(s, j, "html")
+      case 'u' => startsWithName(s, j, "ul")
+      case 'o' => startsWithName(s, j, "ol")
+      case 'l' => startsWithName(s, j, "li")
+      case 't' => startsWithName(s, j, "table") || startsWithName(s, j, "tr")
+      case 'b' => startsWithName(s, j, "br") || startsWithName(s, j, "body")
+      case 's' => startsWithName(s, j, "section")
+      case 'a' => startsWithName(s, j, "article") || startsWithName(s, j, "aside")
+      case _ => false
+    })
+
+  /** Whether s holds `name` (lowercase ASCII letters) at j, ASCII
+    * case-insensitively: `c | 0x20` lowers exactly the two cases of a
+    * letter onto it.
+    */
+  private def startsWithName(s: String, j: Int, name: String): Boolean = {
+    if (j + name.length > s.length) return false
+    var k = 0
+    while (k < name.length) {
+      if ((s.charAt(j + k) | 0x20) != name.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  /** JDK 17 `\b` after a name at j, in a string ending at `end` (a block
+    * ends at a `<`, so no surrogate pair straddles it): end of input, or
+    * a code point that is not a letter, digit, `_` or non-spacing mark.
+    */
+  private def boundaryAt(s: String, j: Int, end: Int): Boolean =
+    j >= end || {
+      val cp = s.codePointAt(j)
+      !(cp == '_' || Character.isLetterOrDigit(cp) ||
+        Character.getType(cp) == Character.NON_SPACING_MARK)
+    }
+
+  /** First index in [from, end) where s holds `</name>`, ASCII
+    * case-insensitively, or -1.
+    */
+  private def indexOfCloser(s: String, from: Int, end: Int, name: String): Int = {
+    var i = s.indexOf('<', from)
+    while (i >= 0 && i + name.length + 3 <= end) {
+      if (s.charAt(i + 1) == '/' && startsWithName(s, i + 2, name) &&
+        s.charAt(i + 2 + name.length) == '>') return i
+      i = s.indexOf('<', i + 1)
+    }
+    -1
   }
 
   /** Keep blocks whose link density < 0.35 and word count >= 5; join kept

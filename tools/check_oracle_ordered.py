@@ -1,7 +1,15 @@
 #!/usr/bin/env python3
 """Order-sensitive variant of tools/check_oracle.py: compares the exact
 row sequence of the Spark parquet (file-order) against the oracle SQL's
-ORDER BY output. Columns still aligned by name."""
+ORDER BY output. Columns still aligned by name.
+
+The oracle SQL must end in a total ORDER BY (one that breaks every tie):
+rows that tie on the sort key may come back from DuckDB in any order, so
+a partial ORDER BY can report a FAIL for a correct result.
+
+Usage: check_oracle_ordered.py [sfDir] [outDir], with the same defaults
+as check_oracle.py (the sf0.01 tables of TESTDATA.md, Verify's output).
+"""
 import json
 import sys
 
@@ -47,8 +55,9 @@ def main(sf_dir, out_dir):
             n_fail += 1
         elif got != want:
             diffs = [(i, a, b) for i, (a, b) in enumerate(zip(got, want)) if a != b]
-            print(f"FAIL {name}: {len(got)} vs {len(want)} rows, "
-                  f"first order-diffs: {diffs[:2]}")
+            print(f"FAIL {name}: {len(got)} vs {len(want)} rows, ", end="")
+            print(f"first order-diffs: {diffs[:2]}" if diffs else
+                  f"extra spark={got[len(want):][:1]} extra oracle={want[len(got):][:1]}")
             n_fail += 1
         else:
             n_pass += 1
@@ -57,4 +66,6 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+    sys.exit(main(sf, out))
