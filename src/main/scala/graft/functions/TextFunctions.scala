@@ -245,30 +245,18 @@ object TextFunctions {
   // ---------------------------------------------------------------------
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, v) => s + v)
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity, backed by the native codegen'd expression
     * (graft.plans.CosineSimExpr): the same sequential-fold double math as
-    * the HOF form below, at compiled-loop speed and without breaking the
-    * surrounding whole-stage-codegen span (zip_with/aggregate have no
-    * codegen — the embedding queries pay one interpreted cosine per
-    * candidate pair on the old path).
+    * the higher-order-function form (`cosineHof`, kept in test scope next
+    * to VecExprsSpec as its reference), at compiled-loop speed and without
+    * breaking the surrounding whole-stage-codegen span (zip_with/aggregate
+    * have no codegen — the embedding queries pay one interpreted cosine
+    * per candidate pair on the old path).
     */
   def cosine(aF: Column, bF: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.plans.CosineSimExpr(
       GraftColumnBridge.expression(aF), GraftColumnBridge.expression(bF)))
-  }
-
-  /** The original higher-order-function cosine — kept (non-public API) as
-    * the executable spec the native expression is asserted bit-equal to.
-    */
-  private[graft] def cosineHof(aF: Column, bF: Column): Column = {
-    val a = toDouble(aF); val b = toDouble(bF)
-    dot(a, b) / (l2norm(a) * l2norm(b))
   }
 
   /** Random-hyperplane LSH bucket for an embedding (sign-bit signature
@@ -279,14 +267,6 @@ object TextFunctions {
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
     val r = new graft.gen.Rng(seed)
     Seq.fill(nPlanes)(Seq.fill(dim)(r.nextDouble() * 2 - 1))
-  }
-
-  def lshBucket(vecF: Column, planes: Seq[Seq[Double]]): Column = {
-    val v = toDouble(vecF)
-    val bits = planes.map { p =>
-      when(dot(v, typedLit(p)) >= 0, lit("1")).otherwise(lit("0"))
-    }
-    concat(bits: _*)
   }
 
   /** OR-amplified hyperplane LSH: `bands` independent bucket keys of
@@ -301,17 +281,14 @@ object TextFunctions {
       seed: Long = 42L): Seq[Seq[Seq[Double]]] =
     Seq.tabulate(bands)(b => hyperplanes(rowsPerBand, dim, seed + 1000L * b))
 
-  def lshBucketBands(vecF: Column, bandPlanes: Seq[Seq[Seq[Double]]]): Column =
-    array(bandPlanes.zipWithIndex.map { case (planes, b) =>
-      concat(lit(s"$b-"), lshBucket(vecF, planes))
-    }: _*)
-
-  /** Native codegen'd forms of [[lshBucket]] / [[lshBucketBands]]: the
-    * hyperplanes are regenerated inside the expression from the same
-    * (count, dim, seed) primitives, so the keys are identical to the HOF
-    * forms over `hyperplanes(nPlanes, dim, seed)` — asserted bit-equal in
-    * VecExprsSpec — while the 32 plane dot products per row run as one
-    * compiled loop instead of 32 interpreted `aggregate` folds.
+  /** Native codegen'd forms of the higher-order-function `lshBucket` /
+    * `lshBucketBands` (kept in test scope next to VecExprsSpec as their
+    * reference): the hyperplanes are regenerated inside the expression
+    * from the same (count, dim, seed) primitives, so the keys are
+    * identical to the HOF forms over `hyperplanes(nPlanes, dim, seed)` —
+    * asserted bit-equal in VecExprsSpec — while the 32 plane dot products
+    * per row run as one compiled loop instead of 32 interpreted
+    * `aggregate` folds.
     */
   def lshBucketNative(vecF: Column, nPlanes: Int, dim: Int,
       seed: Long = 42L): Column = {

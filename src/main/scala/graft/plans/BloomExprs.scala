@@ -33,13 +33,6 @@ object BloomExprs {
     column(new BloomFilterAggregate(new XxHash64(Seq(expression(c))),
       expectedItems).toAggregateExpression())
 
-  /** Membership probe of `c` against a Bloom binary built by
-    * [[bloomAgg]]. False is definitive absence; true means "verify".
-    */
-  def bloomMightContain(bloom: Column, c: Column): Column =
-    column(BloomFilterMightContain(expression(bloom),
-      new XxHash64(Seq(expression(c)))))
-
   /** Probe `c` against the one-row Bloom-binary aggregate `bloomDf`
     * (the output of `df.agg(bloomAgg(...))`), wired as a scalar
     * subquery — the exact shape Catalyst's `InjectRuntimeFilter`

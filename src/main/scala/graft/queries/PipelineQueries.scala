@@ -82,7 +82,7 @@ object PipelineQueries {
     "list_sort(list_distinct(list_transform(generate_series(1, least(length(text), 2000) - 4), i -> substr(text, i, 5))))"
 
   /** Sequential-fold dot product of a double-list variable `v` with a
-    * plane literal — bit-identical to TextFunctions.dot's left fold
+    * plane literal — bit-identical to the HOF reference dot's left fold
     * (same multiply order, same add order), so the LSH sign bits match
     * Spark exactly.
     */
@@ -92,12 +92,12 @@ object PipelineQueries {
       s"generate_series(1, ${plane.length}), i -> v[i] * ($lits)[i])), (a, x) -> a + x)"
   }
 
-  /** Sign-bit bucket string over `v` — mirrors TextFunctions.lshBucket. */
+  /** Sign-bit bucket string over `v` — mirrors the HOF reference lshBucket. */
   private def sqlBucket(planes: Seq[Seq[Double]]): String =
     planes.map(p => s"(CASE WHEN ${sqlDot(p)} >= 0 THEN '1' ELSE '0' END)")
       .mkString("||")
 
-  /** Banded hyperplane keys over `v` — mirrors TextFunctions.lshBucketBands. */
+  /** Banded hyperplane keys over `v` — mirrors the HOF reference lshBucketBands. */
   private def sqlHyperBandKeys(bandPlanes: Seq[Seq[Seq[Double]]]): String =
     bandPlanes.zipWithIndex.map { case (ps, b) => s"'$b-' || ${sqlBucket(ps)}" }
       .mkString("[", ",\n      ", "]")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextFunctions._
+import graft.plans.HofVecReference.lshBucket
 
 class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 

@@ -22,8 +22,9 @@ class ExtractTurnExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     ExtractTurnExpr.register(spark)
     val turns = TranscriptGen.turns(20, 16).toVector
-    val df = turns.map(t => (t.conv_id, t.turn_idx, t.text))
-      .toDF("conv_id", "turn_idx", "text")
+      .map(t => (t.conv_id, t.turn_idx, t.text)) :+
+      ("conv-big", 0, "QTY 9 x Code Y\n" * 20000) // 300 K chars of line items
+    val df = turns.toDF("conv_id", "turn_idx", "text")
     val et = call_function("extract_turn", $"text")
     val got = df.select($"conv_id", $"turn_idx",
         et.getField("doc_type"), et.getField("extracted_text"),
@@ -32,9 +33,9 @@ class ExtractTurnExprSpec extends AnyFunSuite with BeforeAndAfterAll {
         et.getField("status"))
       .as[(String, Int, String, String, String, String, Boolean, Double, String)]
       .collect().sortBy(r => (r._1, r._2))
-    val want = turns.map { t =>
-      val e = Extract.extractTurn(t.conv_id, t.turn_idx, t.text)
-      (t.conv_id, t.turn_idx, e.doc_type, e.extracted_text,
+    val want = turns.map { case (convId, turnIdx, text) =>
+      val e = Extract.extractTurn(convId, turnIdx, text)
+      (convId, turnIdx, e.doc_type, e.extracted_text,
         Extract.fieldsToJson(e.fields), Extract.sectionsToJson(e.sections),
         e.signature_present, e.confidence, e.status)
     }.sortBy(r => (r._1, r._2))

@@ -12,8 +12,8 @@ import graft.functions.TextFunctions
   * corpus vectors, double perturbed vectors, and the null/degenerate
   * edges (empty, zero-norm, length mismatch, null element). Any drift
   * here would silently break the DuckDB oracle hashes of five catalog
-  * entries, so the HOF forms stay in TextFunctions as the executable
-  * spec.
+  * entries, so the HOF forms stay in test scope (HofVecReference) as the
+  * executable spec.
   */
 class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,7 +36,7 @@ class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = floatVecs(60, 64, 7L).grouped(2).map(p => (p(0), p(1))).toSeq
     val df = rows.toDF("a", "b")
       .withColumn("nat", TextFunctions.cosine($"a", $"b"))
-      .withColumn("hof", TextFunctions.cosineHof($"a", $"b"))
+      .withColumn("hof", HofVecReference.cosineHof($"a", $"b"))
     val got = df.select($"nat", $"hof").collect()
     assert(got.nonEmpty)
     got.foreach { r =>
@@ -54,7 +54,7 @@ class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("b", transform($"a", (x, i) =>
         x * (lit(1.0) + (pmod(i, lit(5)) - lit(2)).cast("double") * lit(0.004))))
       .withColumn("nat", TextFunctions.cosine($"a", $"b"))
-      .withColumn("hof", TextFunctions.cosineHof($"a", $"b"))
+      .withColumn("hof", HofVecReference.cosineHof($"a", $"b"))
     df.select($"nat", $"hof").collect().foreach { r =>
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
@@ -79,7 +79,7 @@ class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.set("spark.sql.ansi.enabled", "false")
       val df = cases.toDF("a", "b")
         .withColumn("nat", TextFunctions.cosine($"a", $"b"))
-        .withColumn("hof", TextFunctions.cosineHof($"a", $"b"))
+        .withColumn("hof", HofVecReference.cosineHof($"a", $"b"))
       df.select($"nat", $"hof").collect().foreach { r =>
         assert(r.isNullAt(0), s"native not null: $r")
         assert(r.isNullAt(1), s"hof not null: $r")
@@ -98,10 +98,10 @@ class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = floatVecs(40, 64, 13L).map(Tuple1(_)).toDF("v")
       .withColumn("nat_bucket", TextFunctions.lshBucketNative($"v", 4, 64))
       .withColumn("hof_bucket",
-        TextFunctions.lshBucket($"v", TextFunctions.hyperplanes(4, 64)))
+        HofVecReference.lshBucket($"v", TextFunctions.hyperplanes(4, 64)))
       .withColumn("nat_bands", TextFunctions.lshBucketBandsNative($"v", 4, 8, 64))
       .withColumn("hof_bands",
-        TextFunctions.lshBucketBands($"v", TextFunctions.hyperplaneBands(4, 8, 64)))
+        HofVecReference.lshBucketBands($"v", TextFunctions.hyperplaneBands(4, 8, 64)))
     val got = df.select($"nat_bucket", $"hof_bucket", $"nat_bands", $"hof_bands")
       .collect()
     got.foreach { r =>
@@ -118,7 +118,7 @@ class VecExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("d", TextFunctions.toDouble($"v"))
       .withColumn("nat", TextFunctions.lshBucketBandsNative($"d", 4, 8, 64))
       .withColumn("hof",
-        TextFunctions.lshBucketBands($"d", TextFunctions.hyperplaneBands(4, 8, 64)))
+        HofVecReference.lshBucketBands($"d", TextFunctions.hyperplaneBands(4, 8, 64)))
     df.select($"nat", $"hof").collect().foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1))
     }

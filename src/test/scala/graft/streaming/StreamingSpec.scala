@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -268,5 +268,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want)
     assert(want.nonEmpty && !want.exists(_._3 == "late"),
       "horizon bound leaked the +20 min reaction")
+  }
+
+  test("dedup and SFT context assembly run over a parquet file source") {
+    import graft.engine.TranscriptsTable
+    // snapshot 2 regenerates the identical conversations (same
+    // convOffset), so every (conv_id, turn_idx) key appears twice
+    val dir = Files.createTempDirectory("stream-src").toString
+    TranscriptsTable.appendSnapshot(spark, s"$dir/t", 1, 0, 20, 32, 2)
+    TranscriptsTable.appendSnapshot(spark, s"$dir/t", 2, 0, 20, 32, 2)
+    val table = TranscriptsTable.readAll(spark, s"$dir/t")
+    val unique = table.select("conv_id", "turn_idx").distinct().count()
+    assert(table.count() == 2 * unique)
+    def drain(out: Dataset[_], name: String): Long = {
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation",
+          Files.createTempDirectory(s"ckpt-$name").toString)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      spark.table(name).count()
+    }
+    // the streaming file source insists on partition inference over the
+    // snapshot=/bucket= layout: flatten both snapshots into a plain dir
+    table.write.parquet(s"$dir/flat")
+    val flat = spark.readStream.schema(table.schema).parquet(s"$dir/flat")
+    assert(drain(StreamingExtract.dedupStream(flat), "file_dedup_out") == unique)
+    // one SFT example per assistant turn of one snapshot
+    val snap1 = s"$dir/t/snapshot=1"
+    val snapStream = spark.readStream.schema(table.schema)
+      .option("recursiveFileLookup", "true").parquet(snap1)
+    val assistants = spark.read.option("recursiveFileLookup", "true")
+      .parquet(snap1).filter("role = 'assistant'").count()
+    assert(drain(StreamingExtract.contextWindows(spark, snapStream),
+      "file_ctx_out") == assistants)
   }
 }
