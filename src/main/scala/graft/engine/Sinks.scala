@@ -78,15 +78,11 @@ object Sinks {
     sb.result()
   }
 
+  /** Append `df` to `cfg.table` (Spark applies `truncate` only under
+    * overwrite, so the shared writer's option block holds here too).
+    */
   def mirrorToJdbc(df: DataFrame, cfg: JdbcConfig): Unit =
-    df.write.mode("append")
-      .format("jdbc")
-      .option("url", cfg.url)
-      .option("dbtable", cfg.table)
-      .option("batchsize", 1000)
-      .option("isolationLevel", "READ_COMMITTED")
-      .options(cfg.options)
-      .save()
+    jdbcTableWriter(cfg)(df, cfg.table, false)
 
   /** Table-write indirection: production writes through Spark's JDBC
     * source; tests inject an in-memory writer (this container ships no

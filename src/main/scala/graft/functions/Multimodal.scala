@@ -225,16 +225,6 @@ object Multimodal {
     out
   }
 
-  /** Media frame whose payloads are [[pngBytes]] — real bytes the
-    * [[PngHeaderDecoder]] round-trips by actual parsing.
-    */
-  def pngMediaFrom(spark: SparkSession, docIds: DataFrame): DataFrame = {
-    import spark.implicits._
-    docIds.select($"doc_id".cast("long")).as[Long]
-      .map(id => MediaRow(id, "image/png", pngBytes(id)))
-      .toDF()
-  }
-
   /** Deterministic REAL classic-PDF bytes for doc_id: header %PDF-1.m
     * (m = id % 8), a catalog, a page tree with K = 1 + id % 5 kids, K
     * page objects, an xref table carrying the objects' REAL byte
@@ -268,16 +258,6 @@ object Multimodal {
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     if (docId % 11 == 0) bytes(1) = 'X'.toByte // %XDF-… — header broken
     bytes
-  }
-
-  /** Media frame whose payloads are [[pdfBytes]] — real bytes the
-    * [[PdfHeaderDecoder]] round-trips by actual parsing.
-    */
-  def pdfMediaFrom(spark: SparkSession, docIds: DataFrame): DataFrame = {
-    import spark.implicits._
-    docIds.select($"doc_id".cast("long")).as[Long]
-      .map(id => MediaRow(id, "application/pdf", pdfBytes(id)))
-      .toDF()
   }
 
   /** REAL decoder arm #3 — WAV/RIFF (the audio media type): parses the
@@ -368,16 +348,6 @@ object Multimodal {
     ascii(36, "data"); le32(40, dataSize.toLong)
     if (docId % 11 == 0) out(0) = (out(0) ^ 0xff).toByte
     out
-  }
-
-  /** Media frame whose payloads are [[wavBytes]] — real bytes the
-    * [[WavHeaderDecoder]] round-trips by actual parsing.
-    */
-  def wavMediaFrom(spark: SparkSession, docIds: DataFrame): DataFrame = {
-    import spark.implicits._
-    docIds.select($"doc_id".cast("long")).as[Long]
-      .map(id => MediaRow(id, "audio/wav", wavBytes(id)))
-      .toDF()
   }
 
   /** REAL decoder arm #4 — JPEG/JFIF (the reference's other image type:
@@ -483,13 +453,15 @@ object Multimodal {
     bytes
   }
 
-  /** Media frame whose payloads are [[jpegBytes]] — real bytes the
-    * [[JpegHeaderDecoder]] round-trips by actual marker-walk parsing.
+  /** Media frame of `mediaType` whose payloads are `bytes(doc_id)` — e.g.
+    * [[pngBytes]], [[pdfBytes]], [[wavBytes]] or [[jpegBytes]], real bytes
+    * the matching header decoder round-trips by actual parsing.
     */
-  def jpegMediaFrom(spark: SparkSession, docIds: DataFrame): DataFrame = {
+  def mediaFrom(spark: SparkSession, docIds: DataFrame, mediaType: String,
+      bytes: Long => Array[Byte]): DataFrame = {
     import spark.implicits._
     docIds.select($"doc_id".cast("long")).as[Long]
-      .map(id => MediaRow(id, "image/jpeg", jpegBytes(id)))
+      .map(id => MediaRow(id, mediaType, bytes(id)))
       .toDF()
   }
 }

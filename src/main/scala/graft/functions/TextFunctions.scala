@@ -1,7 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.plans.{ExtractTurnBridge, ExtractTurnExpr, TextHashBridge, UnicodeBridge}
 
 /** UDF-free, codegen-friendly column functions for the text/dedup/
   * similarity operators. Everything here compiles to Catalyst built-in
@@ -10,6 +14,16 @@ import org.apache.spark.sql.functions._
   * same expression is pushable/prunable at 100 TB.
   */
 object TextFunctions {
+
+  /** `bridge.method(input, args...)` as a column: Spark's StaticInvoke
+    * compiles to one static call, so the projection around it stays
+    * inside whole-stage codegen, and a null input gives null without
+    * calling the bridge.
+    */
+  private def invoke(bridge: AnyRef, method: String, dataType: DataType,
+      input: Column, args: Expression*): Column =
+    GraftColumnBridge.column(StaticInvoke(bridge.getClass, dataType, method,
+      GraftColumnBridge.expression(input) +: args, returnNullable = false))
 
   /** P4 tokenizer as a pure expression: lowercase alnum tokens, len>2,
     * distinct, sorted. Reference: S3searchFileContentByString.py:29-37.
@@ -94,16 +108,14 @@ object TextFunctions {
 
   /** MinHash signature of a token array: for each of `k` salted hash
     * functions, the minimum hash over the tokens. Returns array<long>.
-    * Backed by the native codegen'd expression (graft.plans.MinHashSigExpr)
+    * Backed by the compiled bridge (graft.plans.TextHashBridge.minHashSig)
     * — identical integer math to the HOF form, compiled-loop speed (the
     * per-char `aggregate` HOF has no codegen and ran interpreted at
     * ~40 ms/doc in round 2).
     */
-  def minHashSig(toks: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.MinHashSigExpr(GraftColumnBridge.expression(toks), k))
-  }
+  def minHashSig(toks: Column, k: Int): Column =
+    invoke(TextHashBridge, "minHashSig", ArrayType(LongType, containsNull = true),
+      toks, Literal(k))
 
   /** LSH band key: the signature banded into groups of `rows` values,
     * each band hashed to one long. Returns array<string> of band keys.
@@ -119,52 +131,56 @@ object TextFunctions {
 
   /** SimHash over tokens: 32-bit majority-vote fingerprint built from the
     * per-token polynomial hashes (bit b weighted +1/-1). Backed by the
-    * native codegen'd expression (graft.plans.SimHashExpr) — same math.
+    * compiled bridge (graft.plans.TextHashBridge.simHash) — same math.
     */
-  def simHash(toks: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.SimHashExpr(GraftColumnBridge.expression(toks)))
-  }
+  def simHash(toks: Column): Column =
+    invoke(TextHashBridge, "simHash", LongType, toks)
 
   /** Count of `text`'s character bigrams that are in the trained `model`
-    * set. Backed by the native codegen'd expression
-    * (graft.plans.BigramHitsExpr) — scores straight off the string, no
-    * per-row bigram array and no interpreted `filter` HOF, so the
-    * typicality scoring pass stays inside whole-stage codegen.
+    * set. Backed by the compiled bridge
+    * (graft.plans.TextHashBridge.bigramHits) — scores straight off the
+    * string, no per-row bigram array and no interpreted `filter` HOF, so
+    * the typicality scoring pass stays inside whole-stage codegen. The
+    * model rides along as one HashSet literal, shared by every row.
     */
   def bigramHits(text: Column, model: Seq[String]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.BigramHitsExpr(GraftColumnBridge.expression(text), model))
+    val set = new java.util.HashSet[String](math.max(16, model.size * 2))
+    model.foreach(set.add)
+    invoke(TextHashBridge, "bigramHits", IntegerType, text, Literal.fromObject(set))
   }
 
   /** Gopher repetition-filter signals of `text` as a struct
     * `(n_words, n_distinct, top_bigram, top_n)` — word count, distinct
     * words, and the modal word-bigram with its count (ties to the
     * lexicographically largest bigram), all in one compiled pass
-    * (graft.plans.GopherStatsExpr) inside whole-stage codegen.
+    * (graft.plans.TextHashBridge.gopherStats) inside whole-stage codegen.
     */
-  def gopherStats(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.GopherStatsExpr(GraftColumnBridge.expression(text)))
+  def gopherStats(text: Column): Column =
+    invoke(TextHashBridge, "gopherStats", StructType(Seq(
+      StructField("n_words", IntegerType, nullable = false),
+      StructField("n_distinct", IntegerType, nullable = false),
+      StructField("top_bigram", StringType, nullable = true),
+      StructField("top_n", LongType, nullable = true))), text)
+
+  /** Space-joined word n-grams of `text` under the alnum tokenizer
+    * (`[^a-z0-9]+` boundaries after lower(); fewer than n tokens → empty
+    * array) — the exact-substring window generator
+    * (graft.plans.TextHashBridge.alnumGrams).
+    */
+  def alnumGrams(text: Column, n: Int): Column = {
+    require(n >= 1, "alnum_grams n must be >= 1")
+    invoke(TextHashBridge, "alnumGrams", ArrayType(StringType, containsNull = false),
+      text, Literal(n))
   }
 
   /** Space-joined word n-grams of `text` (tokens = maximal non-whitespace
-    * runs of the lowercased text; fewer than n words → empty array).
-    * Backed by the native codegen'd expression (graft.plans.WordGramsExpr).
+    * runs of the lowercased text; fewer than n words → empty array)
+    * — graft.plans.TextHashBridge.wordGrams.
     */
-  def alnumGrams(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.AlnumGramsExpr(GraftColumnBridge.expression(text), n))
-  }
-
   def wordGrams(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.WordGramsExpr(GraftColumnBridge.expression(text), n))
+    require(n >= 1, "word_grams n must be >= 1")
+    invoke(TextHashBridge, "wordGrams", ArrayType(StringType, containsNull = false),
+      text, Literal(n))
   }
 
   /** Distinct word n-grams of `text` with within-doc occurrence counts
@@ -173,57 +189,59 @@ object TextFunctions {
     * doc_id).count()` — row-local map-side combining taken to its limit.
     */
   def wordGramCounts(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.WordGramCountsExpr(GraftColumnBridge.expression(text), n))
+    require(n >= 1, "word_gram_counts n must be >= 1")
+    invoke(TextHashBridge, "wordGramCounts", ArrayType(StructType(Seq(
+      StructField("g", StringType, nullable = false),
+      StructField("c", LongType, nullable = false))), containsNull = false),
+      text, Literal(n))
   }
 
   /** Sum of a broadcast micro-log table over the hashed word n-grams of
-    * a token array (codegen'd graft.plans.HashedGramMicroSumExpr) — the
+    * a token array (graft.plans.TextHashBridge.hashedGramMicroSum) — the
     * scoring pass of the hashed-feature model family (DSIR weights,
-    * LM-perplexity gate). Bucket = polyHash(gram, seed) % table.length.
+    * LM-perplexity gate). Bucket = polyHash(gram, seed) % table.length;
+    * the table rides along as one long[] literal.
     */
   def hashedGramMicroSum(toks: Column, n: Int, seed: Long,
       table: Array[Long]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.HashedGramMicroSumExpr(
-      GraftColumnBridge.expression(toks), n, seed, table))
+    require(n >= 1, "hashed_gram_micro_sum n must be >= 1")
+    require(table.nonEmpty, "hashed_gram_micro_sum needs a non-empty table")
+    invoke(TextHashBridge, "hashedGramMicroSum", LongType, toks, Literal(n),
+      Literal(seed), Literal.fromObject(table), Literal(table.length.toLong))
   }
 
-  /** Bucket ids of a token array's hashed word n-grams (codegen'd
-    * graft.plans.HashedGramBucketsExpr) — the train-pass companion of
-    * [[hashedGramMicroSum]].
+  /** Bucket ids of a token array's hashed word n-grams
+    * (graft.plans.TextHashBridge.hashedGramBuckets) — the train-pass
+    * companion of [[hashedGramMicroSum]].
     */
   def hashedGramBuckets(toks: Column, n: Int, seed: Long, mod: Long): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.HashedGramBucketsExpr(
-      GraftColumnBridge.expression(toks), n, seed, mod))
+    require(n >= 1 && mod >= 1, "hashed_gram_buckets needs n >= 1, mod >= 1")
+    invoke(TextHashBridge, "hashedGramBuckets", ArrayType(LongType, containsNull = false),
+      toks, Literal(n), Literal(seed), Literal(mod))
   }
 
-  /** [n, sum c_i * micro-ln(c_i)] over the byte histogram (codegen'd
-    * graft.plans.CharEntropyPartsExpr) — the exact-integer parts of
-    * per-doc Shannon character entropy; combine as
+  /** [n, sum c_i * micro-ln(c_i)] over the byte histogram
+    * (graft.plans.TextHashBridge.charEntropyParts) — the exact-integer
+    * parts of per-doc Shannon character entropy; combine as
     * ln(n) - sum / (n * 1e6).
     */
-  def charEntropyParts(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.CharEntropyPartsExpr(
-      GraftColumnBridge.expression(text)))
-  }
+  def charEntropyParts(text: Column): Column =
+    invoke(TextHashBridge, "charEntropyParts", ArrayType(LongType, containsNull = false),
+      text)
 
-  /** Unicode NFC canonicalization (native codegen'd; DuckDB-named). */
-  def nfcNormalize(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.NfcNormalizeExpr(
-      GraftColumnBridge.expression(text)))
-  }
+  /** Unicode NFC canonicalization (compiled bridge; DuckDB-named). */
+  def nfcNormalize(text: Column): Column =
+    invoke(UnicodeBridge, "nfc", StringType, text)
 
-  /** Accent fold: NFD + combining-mark removal (native codegen'd). */
-  def stripAccents(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.StripAccentsExpr(
-      GraftColumnBridge.expression(text)))
-  }
+  /** Accent fold: NFD + combining-mark removal (compiled bridge). */
+  def stripAccents(text: Column): Column =
+    invoke(UnicodeBridge, "stripAccents", StringType, text)
+
+  /** The fused per-turn extractor as a struct column
+    * ([[graft.plans.ExtractTurnExpr.schema]]); SQL's `extract_turn(text)`.
+    */
+  def extractTurn(text: Column): Column =
+    invoke(ExtractTurnBridge, "eval", ExtractTurnExpr.schema, text)
 
   /** Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -253,11 +271,9 @@ object TextFunctions {
     * have no codegen — the embedding queries pay one interpreted cosine
     * per candidate pair on the old path).
     */
-  def cosine(aF: Column, bF: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
+  def cosine(aF: Column, bF: Column): Column =
     GraftColumnBridge.column(graft.plans.CosineSimExpr(
       GraftColumnBridge.expression(aF), GraftColumnBridge.expression(bF)))
-  }
 
   /** Random-hyperplane LSH bucket for an embedding (sign-bit signature
     * over `planes`): the ANN scale path — candidates are restricted to
@@ -291,31 +307,24 @@ object TextFunctions {
     * `aggregate` folds.
     */
   def lshBucketNative(vecF: Column, nPlanes: Int, dim: Int,
-      seed: Long = 42L): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
+      seed: Long = 42L): Column =
     GraftColumnBridge.column(graft.plans.HyperplaneBucketExpr(
       GraftColumnBridge.expression(vecF), nPlanes, dim, seed))
-  }
 
   def lshBucketBandsNative(vecF: Column, bands: Int, rowsPerBand: Int,
-      dim: Int, seed: Long = 42L): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
+      dim: Int, seed: Long = 42L): Column =
     GraftColumnBridge.column(graft.plans.HyperplaneBandsExpr(
       GraftColumnBridge.expression(vecF), bands, rowsPerBand, dim, seed))
-  }
 
   // ---------------------------------------------------------------------
   // Text-analysis metrics (training-data pipeline operators).
   // ---------------------------------------------------------------------
   /** Whitespace token count — `size(filter(split(c, "\\s+"), length > 0))`
-    * semantics via the codegen'd graft.plans.WordCountExpr (one compiled
+    * semantics via graft.plans.TextHashBridge.wordCount (one compiled
     * scan, no token-array materialization).
     */
-  def wsTokenCount(c: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.plans.WordCountExpr(GraftColumnBridge.expression(c)))
-  }
+  def wsTokenCount(c: Column): Column =
+    invoke(TextHashBridge, "wordCount", IntegerType, c)
 
   /** BPE-ish subword count: runs of letters, runs of digits, and single
     * punctuation marks each count as one token. Expressed via

@@ -56,16 +56,3 @@ final case class ExtractedTurn(
     confidence: Double,
     status: String
 )
-
-/** Per-partition lineage/metrics row (north rule: partition id, input
-  * files, turn count, success/failure counters). Reference analog: the
-  * run-summary JSON (`Ethan_PDFandJPG3.py:716-725`).
-  */
-final case class LineageRow(
-    run_id: String,
-    snapshot_id: Long,
-    partition_id: Int,
-    turn_count: Long,
-    ok_count: Long,
-    fail_count: Long
-)

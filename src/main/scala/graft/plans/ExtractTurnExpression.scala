@@ -1,21 +1,20 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSession
 import graft.extract.Extract
 
-/** Static bridge the generated code calls — keeps `doGenCode` a one-line
-  * invoke so the expression participates in whole-stage codegen (no
-  * interpreted fallback on the hot path).
+/** Static bridge the generated code calls — `TextFunctions.extractTurn`
+  * invokes it through Spark's StaticInvoke, so the expression
+  * participates in whole-stage codegen (no interpreted fallback on the
+  * hot path). A null text never reaches it: StaticInvoke returns null.
   */
 object ExtractTurnBridge {
   def eval(text: UTF8String): InternalRow = {
-    val e = Extract.extractTurn("", 0, if (text == null) null else text.toString)
+    val e = Extract.extractTurn("", 0, text.toString)
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(e.doc_type),
       UTF8String.fromString(e.extracted_text),
@@ -28,32 +27,15 @@ object ExtractTurnBridge {
   }
 }
 
-/** `extract_turn(text)` — the fused per-turn extractor as a native
-  * Catalyst scalar expression returning a typed struct. Preference path
-  * (b) of the operator policy: composes into any expression pipeline
+/** `extract_turn(text)` — the fused per-turn extractor as a Catalyst
+  * scalar expression returning a typed struct. Preference path (b) of
+  * the operator policy: composes into any expression pipeline
   * (filters/projections around it stay codegen'd and pushdown-able),
   * unlike a mapPartitions stage which fences the plan.
   *
   * Reference semantics: the full §2.5-2.8 pipeline of SURVEY.md
   * (classify -> anchors -> banks -> signature -> confidence).
   */
-case class ExtractTurnExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ExtractTurnExpr.schema
-
-  override def prettyName: String = "extract_turn"
-
-  override protected def nullSafeEval(input: Any): Any =
-    ExtractTurnBridge.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.ExtractTurnBridge.eval($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ExtractTurnExpr =
-    copy(child = newChild)
-}
-
 object ExtractTurnExpr {
   val schema: StructType = StructType(Seq(
     StructField("doc_type", StringType, nullable = false),
@@ -66,9 +48,11 @@ object ExtractTurnExpr {
     StructField("status", StringType, nullable = false)))
 
   /** Register `extract_turn` in the session's function registry so it is
-    * usable from SQL and via `functions.call_function`.
+    * usable from SQL and via `functions.call_function` — the same builder
+    * [[GraftExtensions]] injects.
     */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_turn", exprs => ExtractTurnExpr(exprs.head), "scala_udf")
+      "extract_turn", GraftExtensions.functions.toMap.apply("extract_turn"),
+      "scala_udf")
 }

@@ -1,10 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static bridge for the MinHash/SimHash hash loops — compiled JVM loops
@@ -380,241 +378,4 @@ object TextHashBridge {
     }
     new GenericArrayData(Array[Any](n, sum))
   }
-}
-
-/** `word_count(text)` — whitespace-token count as a native codegen'd
-  * expression (no token-array materialization, no interpreted filter HOF).
-  */
-case class WordCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "word_count"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.wordCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.wordCount($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordCountExpr =
-    copy(child = newChild)
-}
-
-/** `char_entropy_parts(text)` — [n, micro-log sum] of the byte histogram
-  * in one compiled scan (see [[TextHashBridge.charEntropyParts]]); the
-  * caller combines them into Shannon entropy with one ln + one division
-  * on exact integers.
-  */
-case class CharEntropyPartsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "char_entropy_parts"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.charEntropyParts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.charEntropyParts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyPartsExpr =
-    copy(child = newChild)
-}
-
-/** `hashed_gram_micro_sum(toks)` — the codegen'd scoring pass of the
-  * hashed-feature model family (DSIR importance weights, LM-perplexity
-  * gate): sums a broadcast micro-log table over the hashed word n-grams
-  * of the token array. The model table rides along as a referenced
-  * Array[Long] indexed by bucket, exactly the map the interpreted
-  * `aggregate`+`element_at` fold looked up per gram.
-  */
-case class HashedGramMicroSumExpr(child: Expression, n: Int, seed: Long,
-    table: Array[Long]) extends UnaryExpression {
-  require(n >= 1, "hashed_gram_micro_sum n must be >= 1")
-  require(table.nonEmpty, "hashed_gram_micro_sum needs a non-empty table")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hashed_gram_micro_sum"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.hashedGramMicroSum(input.asInstanceOf[ArrayData], n, seed,
-      table, table.length.toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("microTable", table, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.TextHashBridge.hashedGramMicroSum($c, $n, ${seed}L, $ref, ${table.length}L)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HashedGramMicroSumExpr =
-    copy(child = newChild)
-}
-
-/** `hashed_gram_buckets(toks)` — the codegen'd TRAIN pass of the
-  * hashed-feature model family: the bucket ids of the token array's
-  * word n-grams, ready to explode into the model aggregation.
-  */
-case class HashedGramBucketsExpr(child: Expression, n: Int, seed: Long,
-    mod: Long) extends UnaryExpression {
-  require(n >= 1 && mod >= 1, "hashed_gram_buckets needs n >= 1, mod >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hashed_gram_buckets"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.hashedGramBuckets(input.asInstanceOf[ArrayData], n, seed, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.TextHashBridge.hashedGramBuckets($c, $n, ${seed}L, ${mod}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedGramBucketsExpr =
-    copy(child = newChild)
-}
-
-/** `word_gram_counts(text, n)` — distinct word n-grams with within-doc
-  * occurrence counts as `array<struct<g:string, c:bigint>>`, codegen'd.
-  * Exploding this is the shuffle-free equivalent of exploding the raw
-  * gram stream and aggregating on (g, doc_id).
-  */
-case class WordGramCountsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "word_gram_counts n must be >= 1")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("g", StringType, nullable = false),
-    StructField("c", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "word_gram_counts"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.wordGramCounts(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.wordGramCounts($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramCountsExpr =
-    copy(child = newChild)
-}
-
-/** `word_grams(text, n)` — the space-joined word n-grams of `text` as a
-  * native codegen'd expression; the shingle generator for the
-  * decontamination and boilerplate-mask queries (one compiled pass off
-  * the string instead of an interpreted transform+slice+array_join
-  * chain over a pre-split token array).
-  */
-case class WordGramsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "word_grams n must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_grams"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.wordGrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.wordGrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramsExpr =
-    copy(child = newChild)
-}
-
-/** `alnum_grams(text, n)` — space-joined word n-grams under the
-  * alnum tokenizer (`[^a-z0-9]+` boundaries after lower()), codegen'd;
-  * the window generator for the exact-substring dedup family (one
-  * compiled pass instead of the interpreted regex-split + filter +
-  * transform/sequence + slice + array_join chain).
-  */
-case class AlnumGramsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "alnum_grams n must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "alnum_grams"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.alnumGrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.alnumGrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): AlnumGramsExpr =
-    copy(child = newChild)
-}
-
-/** `gopher_stats(text)` — the Gopher repetition-filter signals (word
-  * count, distinct-word count, modal word-bigram + its count) in ONE
-  * compiled pass over the string. The HOF form (array_sort of the per-row
-  * bigram array + an interpreted `aggregate` fold) had the right
-  * topology — row-local, zero wide shuffles — but ran outside codegen at
-  * ~40 ms/doc; this keeps the same semantics inside whole-stage codegen.
-  */
-case class GopherStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_distinct", IntegerType, nullable = false),
-    StructField("top_bigram", StringType, nullable = true),
-    StructField("top_n", LongType, nullable = true)))
-  override def prettyName: String = "gopher_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.gopherStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.gopherStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherStatsExpr =
-    copy(child = newChild)
-}
-
-/** `bigram_hits(text)` — counts the character bigrams of `text` that are
-  * in a trained model set, straight off the string (no per-row bigram
-  * array, no interpreted `filter` HOF — the scoring pass of the
-  * train-then-score typicality filter stays inside whole-stage codegen).
-  * A string shorter than 2 chars has no bigrams (returns 0).
-  */
-case class BigramHitsExpr(child: Expression, model: Seq[String])
-    extends UnaryExpression {
-  // one HashSet per (deserialized) expression instance, shared across rows
-  @transient private lazy val modelSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](math.max(16, model.size * 2))
-    model.foreach(s.add)
-    s
-  }
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bigram_hits"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.bigramHits(input.asInstanceOf[UTF8String], modelSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramModel", modelSet, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.bigramHits($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BigramHitsExpr =
-    copy(child = newChild)
-}
-
-/** `minhash_sig(tokens)` — the k-seed MinHash signature as a native
-  * expression with codegen (one-line invoke of the static bridge, so the
-  * surrounding projection stays inside whole-stage codegen).
-  */
-case class MinHashSigExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "minhash_sig"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.minHashSig(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.minHashSig($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-}
-
-/** `simhash(tokens)` — the 32-bit majority-vote fingerprint, codegen'd. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHashBridge.simHash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextHashBridge.simHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
 }

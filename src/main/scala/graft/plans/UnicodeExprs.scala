@@ -2,9 +2,6 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static bridge for Unicode normalization — the first cleanup pass of a
@@ -36,37 +33,4 @@ object UnicodeBridge {
       Normalizer.normalize(str, Normalizer.Form.NFD)).replaceAll("")
     if (folded == str) s else UTF8String.fromString(folded)
   }
-}
-
-/** `nfc_normalize(text)` — canonical-composition normalization as a
-  * native codegen'd expression (name matches DuckDB's, which the oracle
-  * uses to gate parity).
-  */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnicodeBridge.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UnicodeBridge.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
-}
-
-/** `strip_accents(text)` — NFD + combining-mark removal (DuckDB-named). */
-case class StripAccentsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "strip_accents"
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnicodeBridge.stripAccents(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UnicodeBridge.stripAccents($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): StripAccentsExpr =
-    copy(child = newChild)
 }

@@ -406,7 +406,7 @@ object PipelineQueries {
 
     // MinHash signatures (k=6) — portable polynomial hash family, so the
     // signature itself is oracle-gated bit-for-bit (computed by the native
-    // codegen'd MinHashSigExpr — one evaluation, compiled loops)
+    // codegen'd TextHashBridge.minHashSig — one evaluation, compiled loops)
     "dd_minhash_sig" -> Entry(
       (s, d) => {
         import s.implicits._
@@ -1004,7 +1004,7 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         val ids = rd(s, d, "documents").select($"doc_id").orderBy($"doc_id")
-        val media = Multimodal.pngMediaFrom(s, ids)
+        val media = Multimodal.mediaFrom(s, ids, "image/png", Multimodal.pngBytes)
         val dec = Multimodal.decodeFeatures(s, media, batchSize = 64,
           decoder = Multimodal.PngHeaderDecoder).toDF()
         val sig = element_at($"features", 1) === 1.0
@@ -1035,7 +1035,7 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         val ids = rd(s, d, "documents").select($"doc_id").orderBy($"doc_id")
-        val media = Multimodal.pdfMediaFrom(s, ids)
+        val media = Multimodal.mediaFrom(s, ids, "application/pdf", Multimodal.pdfBytes)
         val dec = Multimodal.decodeFeatures(s, media, batchSize = 64,
           decoder = Multimodal.PdfHeaderDecoder).toDF()
         val hdr = element_at($"features", 1) === 1.0
@@ -1064,7 +1064,7 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         val ids = rd(s, d, "documents").select($"doc_id").orderBy($"doc_id")
-        val media = Multimodal.wavMediaFrom(s, ids)
+        val media = Multimodal.mediaFrom(s, ids, "audio/wav", Multimodal.wavBytes)
         val dec = Multimodal.decodeFeatures(s, media, batchSize = 64,
           decoder = Multimodal.WavHeaderDecoder).toDF()
         val ok = element_at($"features", 1) === 1.0
@@ -1098,7 +1098,7 @@ object PipelineQueries {
       (s, d) => {
         import s.implicits._
         val ids = rd(s, d, "documents").select($"doc_id").orderBy($"doc_id")
-        val media = Multimodal.jpegMediaFrom(s, ids)
+        val media = Multimodal.mediaFrom(s, ids, "image/jpeg", Multimodal.jpegBytes)
         val dec = Multimodal.decodeFeatures(s, media, batchSize = 64,
           decoder = Multimodal.JpegHeaderDecoder).toDF()
         val soi = element_at($"features", 1) === 1.0
@@ -1919,7 +1919,7 @@ object PipelineQueries {
     // per-doc bigram mode is a property of the row, so instead of
     // shuffling every bigram of the corpus twice (explode -> count ->
     // argmax -> join back), each row computes its own stats in one
-    // compiled pass (gopherStats / plans.GopherStatsExpr: tokenize,
+    // compiled pass (gopherStats / TextHashBridge.gopherStats: tokenize,
     // distinct-count, hashmap bigram argmax with the max-count /
     // lexicographically-largest tiebreak the oracle's ORDER BY n DESC,
     // bg DESC mirrors) inside whole-stage codegen. Zero wide shuffles;
@@ -2625,7 +2625,7 @@ object PipelineQueries {
            |FROM p ORDER BY doc_id""".stripMargin
       }),
 
-    // Unicode NFC canonicalization (native codegen'd NfcNormalizeExpr):
+    // Unicode NFC canonicalization (codegen'd UnicodeBridge.nfc):
     // web text mixes decomposed combining sequences, precomposed chars,
     // and compatibility singletons (U+212B angstrom) for the same glyph —
     // every hash/dedup/token stage downstream sees spurious distinctions
@@ -2668,7 +2668,7 @@ object PipelineQueries {
              |FROM p ORDER BY doc_id""".stripMargin)),
 
     // Accent folding (NFD + combining-mark strip, native codegen'd
-    // StripAccentsExpr): 'café' and 'cafe' must collide for key
+    // UnicodeBridge.stripAccents): 'café' and 'cafe' must collide for key
     // canonicalization and fuzzy lookup — the match-normalization pass
     // that NFC deliberately does NOT perform. Inputs are precomposed
     // (the common wire form); the oracle is DuckDB's independent

@@ -182,7 +182,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gramShuffles = "hashpartitioning\\(g#".r.findAllIn(p).length
     assert(gramShuffles == 1,
       s"expected exactly 1 gram-keyed exchange, found $gramShuffles:\n" + p.take(2500))
-    assert(p.contains("word_gram_counts"), "row-local gram counting missing:\n" + p.take(1500))
+    assert(p.contains("TextHashBridge.wordGramCounts"), "row-local gram counting missing:\n" + p.take(1500))
   }
 
   test("gopher repetition computes the per-doc mode row-locally: no shuffle shapes at all") {

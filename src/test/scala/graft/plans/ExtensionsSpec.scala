@@ -54,6 +54,9 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getAs[Long]("sh") == TextHashBridge.simHash(toks))
     val wantMh = TextHashBridge.minHashSig(toks, 4).toLongArray.toSeq
     assert(row.getAs[scala.collection.Seq[Long]]("mh").toSeq == wantMh)
+    // an unaliased call is named after the SQL function, not the bridge
+    val name = spark.sql("SELECT extract_turn('MRN: 7')").columns.head
+    assert(name == "extract_turn(MRN: 7)", s"unaliased column named $name")
   }
 
   test("spark.sql.extensions registers cosine_sim for SQL") {

@@ -3,9 +3,19 @@
 
 Runs each oracle SQL from <outDir>/oracle_sql.json in DuckDB with the
 sfDir parquet tables registered by name, and compares against the parquet
-the Spark side wrote to <outDir>/<query>/. Columns are sorted by name,
-rows sorted, values compared exactly (with a tiny float tolerance knob to
-diagnose near-misses — the real driver hashes, so aim for exact).
+the Spark side wrote to <outDir>/<query>/. Columns are aligned by name and
+values compared exactly (floats rounded to 9 places). Two verdicts come
+from the same pass:
+
+- row set: both sides' rows sorted, then compared;
+- ORDERED: the Spark parquet's row sequence (file order) against the
+  oracle SQL's ORDER BY output. The oracle SQL must end in a total
+  ORDER BY (one that breaks every tie): rows that tie on the sort key may
+  come back from DuckDB in any order, so a partial ORDER BY can report a
+  FAIL for a correct result.
+
+Usage: check_oracle.py [sfDir] [outDir] (defaults: the sf0.01 tables of
+TESTDATA.md, graft.Verify's output). Exits 1 if either verdict has a FAIL.
 """
 import json
 import math
@@ -25,13 +35,23 @@ def norm(v):
     return v
 
 
-def rows_of(rel):
+def ordered_rows_of(rel):
+    """(cols, types, rows) with columns sorted by name, rows as fetched."""
     cols = rel.columns
     types = [str(t) for t in rel.types]
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     data = [tuple(norm(r[i]) for i in order) for r in rel.fetchall()]
-    data.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
     return [cols[i] for i in order], [types[i] for i in order], data
+
+
+def sort_rows(data):
+    return sorted(data, key=lambda t: tuple((x is None, str(x)) for x in t))
+
+
+def rows_of(rel):
+    """(cols, types, rows) with columns sorted by name and rows sorted."""
+    cols, types, data = ordered_rows_of(rel)
+    return cols, types, sort_rows(data)
 
 
 # Terminal types that historically drift at the round driver's typed-hash
@@ -48,22 +68,28 @@ def risky(t):
     return t.startswith("DECIMAL(")
 
 
+def extras(got, want):
+    return f"extra spark={got[len(want):][:1]} extra oracle={want[len(got):][:1]}"
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_fail = o_pass = o_fail = 0
     for name, sql in sorted(oracle.items()):
         try:
-            got_cols, got_types, got = rows_of(
+            got_cols, got_types, got_seq = ordered_rows_of(
                 con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')"))
-            want_cols, want_types, want = rows_of(con.sql(sql))
+            want_cols, want_types, want_seq = ordered_rows_of(con.sql(sql))
         except Exception as e:
             print(f"FAIL {name}: exception {e}")
             n_fail += 1
+            o_fail += 1
             continue
+        got, want = sort_rows(got_seq), sort_rows(want_seq)
         flagged = sorted({t for t in got_types + want_types if risky(t)})
         if got_types != want_types:
             drift = [(c, a, b) for c, a, b in
@@ -74,18 +100,27 @@ def main(sf_dir, out_dir):
         if got_cols != want_cols:
             print(f"FAIL {name}: columns spark={got_cols} oracle={want_cols}")
             n_fail += 1
-        elif got != want:
+            o_fail += 1
+            continue
+        if got != want:
             print(f"FAIL {name}: {len(got)} vs {len(want)} rows", end="")
             diffs = [(a, b) for a, b in zip(got, want) if a != b]
-            print(f", first diffs: {diffs[:2]}" if diffs else
-                  f", extra spark={got[len(want):][:1]} extra oracle={want[len(got):][:1]}")
+            print(f", first diffs: {diffs[:2]}" if diffs else f", {extras(got, want)}")
             n_fail += 1
         else:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
+        if got_seq != want_seq:
+            diffs = [(i, a, b) for i, (a, b) in enumerate(zip(got_seq, want_seq))
+                     if a != b]
+            print(f"FAIL ORDERED {name}: {len(got_seq)} vs {len(want_seq)} rows, ", end="")
+            print(f"first order-diffs: {diffs[:2]}" if diffs else extras(got_seq, want_seq))
+            o_fail += 1
+        else:
+            o_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
-    return 1 if n_fail else 0
-
+    print(f"== ORDERED: {o_pass} pass, {o_fail} fail ==")
+    return 1 if n_fail or o_fail else 0
 
 if __name__ == "__main__":
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
