@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.Extract
 
@@ -35,7 +35,9 @@ final case class ResultRow(
 /** The extraction pipeline (SURVEY.md §7): scan → [optional salted
   * repartition] → sortWithinPartitions(conv_id, turn_idx) → fused
   * mapPartitions extract → results + per-partition lineage, committed per
-  * snapshot for checkpoint-resume.
+  * snapshot for checkpoint-resume. A snapshot is two Spark jobs: the
+  * results write and a one-task lineage write. The scan declares the
+  * table's schema, so no schema-inference job runs.
   *
   * Scale notes (100 TB / 1000 executors):
   *  - The extract stage is NARROW: when the input is already bucketed by
@@ -94,17 +96,24 @@ object ExtractJob {
       input_files: Seq[String], turn_count: Long, ok_count: Long,
       fail_count: Long)
 
+  // built once per JVM: deriving a product encoder reflects over the case
+  // class on every call
+  private val TurnSlimEncoder: Encoder[TurnSlim] = Encoders.product[TurnSlim]
+  private val ResultRowEncoder: Encoder[ResultRow] = Encoders.product[ResultRow]
+  private val LineageRowEncoder: Encoder[LineageRow] = Encoders.product[LineageRow]
+
   /** Accumulated stats → the lineage table, driver-local (KB scale).
     * Empty partitions are dropped to match [[lineage]]'s groupBy shape.
+    * The rows are already in `partition_id` order, so `coalesce(1)` makes
+    * the write one task and one file without a shuffle.
     */
   def lineageFromStats(spark: SparkSession,
       stats: Map[Int, PartitionLineage], runId: String,
       snapshotId: Long): DataFrame = {
-    import spark.implicits._
-    stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
+    val rows = stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
       .map(s => LineageRow(runId, snapshotId, s.partitionId, s.inputFiles,
         s.turnCount, s.okCount, s.failCount))
-      .toDS().toDF()
+    spark.createDataset(rows)(LineageRowEncoder).toDF().coalesce(1)
   }
 
   /** Schemas for recovering typed columns from the JSON sink form:
@@ -140,20 +149,19 @@ object ExtractJob {
   def extract(spark: SparkSession, turns: DataFrame, salted: Boolean,
       saltBuckets: Int, presorted: Boolean = false,
       lineageAcc: Option[LineageAccumulator] = None): Dataset[ResultRow] = {
-    import spark.implicits._
     val withFile = turns
       .select(col("conv_id"), col("turn_idx"), col("text"),
         coalesce(input_file_name(), lit("")).as("input_file"))
     val parted =
       if (salted)
-        withFile.repartition($"conv_id", pmod(hash($"turn_idx"), lit(saltBuckets)))
+        withFile.repartition(col("conv_id"), pmod(hash(col("turn_idx")), lit(saltBuckets)))
       else withFile
     val ordered =
       if (presorted && !salted) parted
-      else parted.sortWithinPartitions($"conv_id", $"turn_idx")
+      else parted.sortWithinPartitions("conv_id", "turn_idx")
     ordered
-      .as[TurnSlim]
-      .mapPartitions { it =>
+      .as(TurnSlimEncoder)
+      .mapPartitions { (it: Iterator[TurnSlim]) =>
         val pid = TaskContext.getPartitionId()
         val mapped = it.map { t =>
           val e = Extract.extractTurn(t.conv_id, t.turn_idx, t.text)
@@ -197,7 +205,7 @@ object ExtractJob {
               }
             }
         }
-      }
+      }(ResultRowEncoder)
   }
 
   /** Per-partition lineage rows (north rule) RECOMPUTED from a results
@@ -228,13 +236,14 @@ object ExtractJob {
     val dir = Paths.get(s"$outDir/_commits")
     if (!Files.exists(dir)) Set.empty
     else {
+      // whole-name match: a `snapshot-N.done.tmp` left by a crash before
+      // the marker's rename is not a commit
       val re = """snapshot-(\d+)\.done""".r
       import scala.jdk.CollectionConverters._
       val stream = Files.list(dir)
       try
-        stream.iterator().asScala.flatMap { p =>
-          re.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong)
-        }.toSet
+        stream.iterator().asScala.map(_.getFileName.toString)
+          .collect { case re(id) => id.toLong }.toSet
       finally stream.close()
     }
   }
@@ -244,9 +253,11 @@ object ExtractJob {
     * paths are snapshot-scoped and written with overwrite, so a retry
     * after a crash before the marker is idempotent (exactly-once per
     * snapshot without ACID tables). The whole snapshot costs ONE pass
-    * over the input — lineage and the committed-turn count come from the
-    * [[LineageAccumulator]] filled by the write job's own tasks, not a
-    * second scan of the output.
+    * over the input and two Spark jobs: the results write, and a one-task
+    * write of the lineage rows, which come with the committed-turn count
+    * from the [[LineageAccumulator]] filled by the results job's own
+    * tasks, not a second scan of the output. The scan declares the table
+    * schema, so no schema-inference job runs before them.
     */
   def runSnapshot(spark: SparkSession, cfg: Config,
       snap: TranscriptsTable.SnapshotRef): Long = {

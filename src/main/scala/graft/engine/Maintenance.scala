@@ -118,7 +118,7 @@ object Maintenance {
     val st = Files.list(dir)
     try st.iterator().forEachRemaining { p =>
       val n = p.getFileName.toString
-      if (n.startsWith("v") && n.drop(1).forall(_.isDigit)) {
+      if (n.matches("v\\d+")) {
         val v = n.drop(1).toLong
         if (v < cur) {
           deleteRecursively(p)

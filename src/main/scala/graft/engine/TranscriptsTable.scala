@@ -2,9 +2,11 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.gen.TranscriptGen
+import graft.model.Turn
 
 /** Iceberg-shaped table layer over plain Parquet (no Iceberg runtime in
   * this environment — SURVEY.md §7). Emulates:
@@ -21,6 +23,14 @@ import graft.gen.TranscriptGen
 object TranscriptsTable {
 
   final case class SnapshotRef(id: Long, path: String, nConvs: Int, convOffset: Int)
+
+  /** The table's data schema: the [[Turn]] rows [[appendSnapshot]]
+    * writes. Reads declare it, so Spark skips the footer-reading job it
+    * otherwise runs on every read to infer a schema we already know; the
+    * `snapshot=`/`bucket=` partition columns are still discovered from
+    * the paths.
+    */
+  val Schema: StructType = Encoders.product[Turn].schema
 
   def manifestPath(baseDir: String): String = s"$baseDir/manifest.json"
 
@@ -119,24 +129,26 @@ object TranscriptsTable {
     ref
   }
 
-  /** Read one snapshot (bucket partition column dropped — it's layout,
-    * not data).
+  /** Read one snapshot with the declared [[Schema]] (the bucket
+    * partition column is dropped — it's layout, not data).
     */
   def readSnapshot(spark: SparkSession, snap: SnapshotRef): DataFrame =
-    spark.read.parquet(snap.path)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    spark.read.schema(Schema).parquet(snap.path)
+      .select(Schema.fieldNames.map(col): _*)
 
   /** Read every registered snapshot as one DataFrame. basePath makes the
     * sibling `snapshot=N` roots legal partition directories of one table —
     * without it Spark's partition discovery rejects a multi-snapshot read
     * as CONFLICTING_DIRECTORY_STRUCTURES (latent until a table actually
-    * held two snapshots). The explicit select drops the layout columns.
+    * held two snapshots). The select keeps the declared [[Schema]]'s
+    * columns, dropping the layout ones.
     */
   def readAll(spark: SparkSession, baseDir: String): DataFrame = {
     val snaps = readManifest(baseDir)
     require(snaps.nonEmpty, s"no snapshots registered under $baseDir")
-    spark.read.option("basePath", baseDir).parquet(snaps.map(_.path): _*)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    spark.read.schema(Schema).option("basePath", baseDir)
+      .parquet(snaps.map(_.path): _*)
+      .select(Schema.fieldNames.map(col): _*)
   }
 
 }

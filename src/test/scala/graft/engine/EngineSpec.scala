@@ -1,11 +1,14 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.extract.Extract
 import graft.gen.TranscriptGen
+import scala.jdk.CollectionConverters._
 
 class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -165,6 +168,33 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(all.count() == perSnap)
     assert(all.columns.toSeq ==
       Seq("conv_id", "turn_idx", "role", "text", "tool", "ts"))
+    // the declared read schema must stay what the writer puts in the files
+    val inferred = spark.read.option("basePath", dir)
+      .parquet(TranscriptsTable.readManifest(dir).map(_.path): _*)
+      .drop("snapshot", "bucket")
+    assert(all.schema == inferred.schema,
+      s"declared ${all.schema.treeString} != inferred ${inferred.schema.treeString}")
+  }
+
+  test("a presorted snapshot is two Spark jobs: results write, one-task lineage write") {
+    val dir = tmpDir(); val out = tmpDir()
+    val snap = TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 20, 32, buckets = 2)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ExtractJob.runSnapshot(spark, ExtractJob.Config(dir, out), snap)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 2, s"${jobs.get} jobs ran; expected the results and lineage writes")
+    val st = Files.list(Paths.get(s"$out/lineage/snapshot=1"))
+    val parquet = try st.iterator().asScala.count(_.toString.endsWith(".parquet"))
+      finally st.close()
+    assert(parquet == 1, s"lineage written as $parquet parquet files")
   }
 
   test("resume: completed snapshots are skipped; no duplicated or lost turns") {
@@ -177,6 +207,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     ExtractJob.runSnapshot(spark, cfg, snaps.head)
     val marker1 = ExtractJob.commitMarker(out, 1)
     val firstCommitTime = Files.getLastModifiedTime(marker1)
+    // a crash between writing snapshot 2's marker and renaming it into
+    // place leaves `snapshot-2.done.tmp`: that is no commit
+    Files.writeString(Paths.get(ExtractJob.commitMarker(out, 2).toString + ".tmp"),
+      """{"snapshot":2,"turns":0}""")
+    assert(ExtractJob.committedSnapshots(out) == Set(1L))
     // resume: must process exactly snapshot 2
     val processed = ExtractJob.run(spark, cfg)
     assert(processed.map(_._1) == Seq(2L))

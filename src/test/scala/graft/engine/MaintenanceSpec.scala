@@ -93,6 +93,8 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Maintenance.currentVersion(base) === Some(3L))
     // time travel: v2 readable (and distinct from v3) until vacuumed
     assert(Maintenance.readVersion(spark, base, 2L).count() === 2L)
+    // an entry named plain `v` is no version directory: skipped, not parsed
+    Files.createDirectories(java.nio.file.Paths.get(s"$base/v"))
     val removed = Maintenance.vacuum(base)
     assertThrows[IllegalArgumentException](
       Maintenance.readVersion(spark, base, 2L))
@@ -100,5 +102,6 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // current version intact and fully readable
     assert(Maintenance.readCurrent(spark, base).count() === 3L)
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/v1")))
+    assert(Files.exists(java.nio.file.Paths.get(s"$base/v")))
   }
 }
