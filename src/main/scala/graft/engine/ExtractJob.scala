@@ -2,23 +2,16 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.Extract
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.TextFunctions
 
-/** Internal row types carrying lineage columns alongside the semantic
-  * payload. `input_file` is captured at scan time (it does not survive a
-  * shuffle as a metadata function) and `partition_id` at extract time.
-  *
-  * TurnSlim is the pruned hot-path row: the extractor is a function of
-  * (conv_id, turn_idx, text) only, so role/tool/ts are projected away
-  * BEFORE the shuffle — less shuffle I/O and no per-row Timestamp
-  * materialization in the deserializer.
-  */
-final case class TurnSlim(
-    conv_id: String, turn_idx: Int, text: String, input_file: String)
-
-/** Flat sink-boundary row: `sections`/`fields`/`field_src` are canonical
+/** Flat sink-boundary row, with the lineage columns `input_file`
+  * (captured at scan time: it does not survive a shuffle as a metadata
+  * function) and `partition_id` (captured at extract time) beside the
+  * semantic payload. `sections`/`fields`/`field_src` are canonical
   * JSON strings (reference-faithful — the reference's sinks store JSON
   * text — and ~20x cheaper to write than nested parquet groups; recover
   * typed columns via `from_json` with
@@ -33,9 +26,9 @@ final case class ResultRow(
     partition_id: Int, input_file: String)
 
 /** The extraction pipeline (SURVEY.md §7): scan → [optional salted
-  * repartition] → sortWithinPartitions(conv_id, turn_idx) → fused
-  * mapPartitions extract → results + per-partition lineage, committed per
-  * snapshot for checkpoint-resume. A snapshot is two Spark jobs: the
+  * repartition] → sortWithinPartitions(conv_id, turn_idx) → the
+  * `extract_turn` projection → results + per-partition lineage, committed
+  * per snapshot for checkpoint-resume. A snapshot is two Spark jobs: the
   * results write and a one-task lineage write. The scan declares the
   * table's schema, so no schema-inference job runs.
   *
@@ -46,8 +39,10 @@ final case class ResultRow(
   *    (conv_id, pmod(hash(turn_idx), salt)) — the salt splits a skewed
   *    conversation (one conv with 10^6 turns) across `salt` tasks instead
   *    of serializing one straggler.
-  *  - Classifier/regex state is compiled once per JVM (object init), not
-  *    per row — the mapPartitions batching the north rule asks for.
+  *  - The extractor is one Catalyst expression ([[turnExtract]]), so the
+  *    extract runs inside the scan's (or the sort's) whole-stage codegen
+  *    stage, and the optimizer sees through it. Classifier/regex state is
+  *    compiled once per JVM (object init), not per row.
   *  - Lineage is collected DURING the write (a [[LineageAccumulator]]
   *    registered per extract task at iterator exhaustion) — the output is
   *    never re-scanned. At 100 TB the alternative (a second job over the
@@ -98,7 +93,6 @@ object ExtractJob {
 
   // built once per JVM: deriving a product encoder reflects over the case
   // class on every call
-  private val TurnSlimEncoder: Encoder[TurnSlim] = Encoders.product[TurnSlim]
   private val ResultRowEncoder: Encoder[ResultRow] = Encoders.product[ResultRow]
   private val LineageRowEncoder: Encoder[LineageRow] = Encoders.product[LineageRow]
 
@@ -135,6 +129,13 @@ object ExtractJob {
       /** optional JDBC mirror of the results (K1) — see [[Sinks]] */
       jdbc: Option[Sinks.JdbcConfig] = None)
 
+  /** The one per-turn extraction operator, which the batch job and the
+    * stream both project: `extract_turn` over `text`, a null text read as
+    * "" so that it quarantines as `failed:empty`, as the pure extractor
+    * does. (SQL `extract_turn(NULL)` stays NULL.)
+    */
+  val turnExtract: Column = TextFunctions.extractTurn(coalesce(col("text"), lit("")))
+
   /** Core transform: Dataset-native, pure, partition-count independent.
     *
     * @param presorted the input is our bucketed table read directly (rows
@@ -144,7 +145,10 @@ object ExtractJob {
     * @param lineageAcc when set, each task registers its partition's
     *        lineage stat at iterator exhaustion, so the caller gets the
     *        per-partition rollup from the SAME pass that wrote the rows
-    *        (see [[LineageAccumulator]] for the exactness argument).
+    *        (see [[LineageAccumulator]] for the exactness argument). The
+    *        result is then planned here: on the salted path its
+    *        shuffle-map stage runs during this call, as for `Dataset.rdd`,
+    *        and the write that follows runs only the result stage.
     */
   def extract(spark: SparkSession, turns: DataFrame, salted: Boolean,
       saltBuckets: Int, presorted: Boolean = false,
@@ -159,53 +163,49 @@ object ExtractJob {
     val ordered =
       if (presorted && !salted) parted
       else parted.sortWithinPartitions("conv_id", "turn_idx")
-    ordered
-      .as(TurnSlimEncoder)
-      .mapPartitions { (it: Iterator[TurnSlim]) =>
-        val pid = TaskContext.getPartitionId()
-        val mapped = it.map { t =>
-          val e = Extract.extractTurn(t.conv_id, t.turn_idx, t.text)
-          ResultRow(e.conv_id, e.turn_idx, e.doc_type, e.extracted_text,
-            Extract.sectionsToJson(e.sections), Extract.fieldsToJson(e.fields),
-            Extract.fieldsToJson(e.field_src),
-            e.signature_present, e.confidence, e.status, pid, t.input_file)
+    // two projections: the struct is computed once per row, then split
+    // into ResultRow's columns
+    val results = ordered
+      .select(col("conv_id"), col("turn_idx"), turnExtract.as("e"), col("input_file"))
+      .selectExpr("conv_id", "turn_idx", "e.doc_type", "e.extracted_text",
+        "e.sections", "e.fields", "e.field_src", "e.signature_present",
+        "e.confidence", "e.status", "spark_partition_id() AS partition_id",
+        "input_file")
+    lineageAcc.fold(results)(tapLineage(results, _)).as(ResultRowEncoder)
+  }
+
+  /** `results` with each partition's turns, oks and input files counted as
+    * its rows pass; the [[PartitionLineage]] is registered only when the
+    * partition's iterator is exhausted.
+    */
+  private def tapLineage(results: DataFrame, acc: LineageAccumulator): DataFrame = {
+    val status = results.schema.fieldIndex("status")
+    val file = results.schema.fieldIndex("input_file")
+    GraftColumnBridge.mapInternalPartitions(results) { it =>
+      val pid = TaskContext.getPartitionId()
+      val okStatus = UTF8String.fromString("ok")
+      var turns = 0L
+      var ok = 0L
+      // on the presorted path rows arrive file-contiguous, so one compare
+      // with the previous row's file skips the set; the salted path
+      // interleaves files at conversation boundaries, and the set keeps
+      // memory O(distinct files), not O(transitions)
+      var lastFile: UTF8String = null
+      val files = scala.collection.mutable.HashSet.empty[String]
+      it.map { r =>
+        turns += 1
+        if (r.getUTF8String(status) == okStatus) ok += 1
+        val f = r.getUTF8String(file)
+        if (f != lastFile) {
+          lastFile = f.clone() // f points into the reused row buffer
+          files += lastFile.toString
         }
-        lineageAcc match {
-          case None => mapped
-          case Some(acc) =>
-            // per-row bookkeeping must stay out of the hot loop's way:
-            // on the presorted path rows arrive file-contiguous, so one
-            // equals against the previous row's file skips everything;
-            // non-contiguous orders (the salted path interleaves files at
-            // every conversation boundary) fall through to a HashSet probe,
-            // keeping memory O(distinct files) instead of O(transitions)
-            new Iterator[ResultRow] {
-              private var turns = 0L
-              private var ok = 0L
-              private var lastFile: String = null
-              private val files = new scala.collection.mutable.HashSet[String]
-              private var registered = false
-              override def hasNext: Boolean = {
-                val h = mapped.hasNext
-                if (!h && !registered) {
-                  registered = true
-                  acc.add(PartitionLineage(pid,
-                    files.toList.sorted, turns, ok, turns - ok))
-                }
-                h
-              }
-              override def next(): ResultRow = {
-                val r = mapped.next()
-                turns += 1
-                if (r.status == "ok") ok += 1
-                val f = r.input_file
-                if ((f ne lastFile) && f != lastFile) files += f
-                lastFile = f
-                r
-              }
-            }
-        }
-      }(ResultRowEncoder)
+        r
+      } ++ {
+        acc.add(PartitionLineage(pid, files.toList.sorted, turns, ok, turns - ok))
+        Iterator.empty
+      }
+    }
   }
 
   /** Per-partition lineage rows (north rule) RECOMPUTED from a results

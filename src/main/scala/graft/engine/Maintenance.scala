@@ -32,11 +32,11 @@ object Maintenance {
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
-  def readCurrent(spark: SparkSession, base: String): DataFrame = {
-    val v = currentVersion(base).getOrElse(
-      throw new IllegalStateException(s"no _VERSION pointer under $base"))
-    spark.read.parquet(versionDir(base, v))
-  }
+  private def requireCurrent(base: String): Long = currentVersion(base).getOrElse(
+    throw new IllegalStateException(s"no _VERSION pointer under $base"))
+
+  def readCurrent(spark: SparkSession, base: String): DataFrame =
+    spark.read.parquet(versionDir(base, requireCurrent(base)))
 
   /** Time travel: read a specific retained version (any v <= current
     * that vacuum has not yet reclaimed).
@@ -78,7 +78,7 @@ object Maintenance {
       .join(updates.select(keys.map(org.apache.spark.sql.functions.col): _*)
         .dropDuplicates(keys), keys, "left_anti")
       .unionByName(updates)
-    val next = currentVersion(base).get + 1
+    val next = requireCurrent(base) + 1
     merged.write.mode("overwrite").parquet(versionDir(base, next))
     commitVersion(base, next)
     next
@@ -89,7 +89,7 @@ object Maintenance {
     */
   def compact(spark: SparkSession, base: String,
       targetBytes: Long): (Long, Int, Int) = {
-    val v = currentVersion(base).get
+    val v = requireCurrent(base)
     val dir = Paths.get(versionDir(base, v))
     var nFiles = 0
     var bytes = 0L
@@ -112,7 +112,7 @@ object Maintenance {
     * current version.
     */
   def vacuum(base: String): Seq[Long] = {
-    val cur = currentVersion(base).get
+    val cur = requireCurrent(base)
     val dir = Paths.get(base)
     val removed = scala.collection.mutable.ListBuffer.empty[Long]
     val st = Files.list(dir)

@@ -28,10 +28,11 @@ object ExtractTurnBridge {
 }
 
 /** `extract_turn(text)` — the fused per-turn extractor as a Catalyst
-  * scalar expression returning a typed struct. Preference path (b) of
-  * the operator policy: composes into any expression pipeline
-  * (filters/projections around it stay codegen'd and pushdown-able),
-  * unlike a mapPartitions stage which fences the plan.
+  * scalar expression returning a typed struct: the engine's one
+  * extraction operator, which `ExtractJob` and the stream project.
+  * Preference path (b) of the operator policy: composes into any
+  * expression pipeline (filters/projections around it stay codegen'd and
+  * pushdown-able).
   *
   * Reference semantics: the full §2.5-2.8 pipeline of SURVEY.md
   * (classify -> anchors -> banks -> signature -> confidence).

@@ -218,7 +218,7 @@ object PipelineQueries {
   /** Unbounded scale-probe variants of the id-bounded catalog entries
     * (the bounds exist to keep the DuckDB oracle's per-shingle hash cost
     * sane, not for the operator). Not oracle-gated — the catalog rows pin
-    * the semantics; [[graft.ScaleProbe]] runs these over 1x/10x/100x
+    * the semantics; `graft.Probe scale` runs these over 1x/10x/100x
     * corpora as direct linearity evidence for the 100x claims.
     */
   private[graft] val scaleProbes: Seq[(String, Q.Fn)] = Seq(

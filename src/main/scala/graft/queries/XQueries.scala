@@ -245,8 +245,8 @@ object XQueries {
     // the ENGINE path oracle-gated end-to-end: constructed conversations
     // (conv_id/turn_idx derived from doc_id, facesheet payloads) run
     // through ExtractJob.extract with the salted skew shuffle + secondary
-    // sort + fused mapPartitions — so the distributed path itself (not
-    // just the pure extractor) must reproduce the constructed truth
+    // sort + the extract_turn projection — so the distributed path itself
+    // (not just the pure extractor) must reproduce the constructed truth
     // per-turn under stable (conv_id, turn_idx) ordering.
     "x_e2e_engine" -> Entry(
       (s, d) => {

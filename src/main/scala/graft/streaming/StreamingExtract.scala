@@ -3,17 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model.Turn
+import graft.engine.ExtractJob
 
 /** Structured Streaming face of the engine.
   *
   * The reference is batch-only (SURVEY.md §2.10) and the north rule asks
   * for batch snapshot-resume, which `ExtractJob` provides. This module
   * adds the streaming ingest path a production deployment of the same
-  * engine would use: the SAME pure extractor applied per micro-batch, a
-  * watermarked windowed quality rollup, and stateful per-conversation
-  * sessionization via mapGroupsWithState — all over the identical
-  * transcripts schema, so batch and streaming share one code path.
+  * engine would use: the batch job's `extract_turn` projection applied
+  * per micro-batch, a watermarked windowed quality rollup, and stateful
+  * per-conversation sessionization via mapGroupsWithState — all over the
+  * identical transcripts schema, so batch and streaming share one code
+  * path.
   */
 object StreamingExtract {
 
@@ -23,17 +24,14 @@ object StreamingExtract {
     */
   val WatermarkDelay = "30 minutes"
 
-  /** Per-turn extraction on a stream: identical semantics to the batch
-    * job (same pure function), exactly-once per micro-batch under
+  /** Per-turn extraction on a stream: the batch job's own projection
+    * ([[ExtractJob.turnExtract]]), exactly-once per micro-batch under
     * checkpointing.
     */
-  def extractStream(spark: SparkSession, turns: DataFrame): DataFrame = {
-    import spark.implicits._
-    turns.as[Turn].map { t =>
-      val e = graft.extract.Extract.extractTurn(t.conv_id, t.turn_idx, t.text)
-      (e.conv_id, e.turn_idx, e.doc_type, e.confidence, e.status, t.ts)
-    }.toDF("conv_id", "turn_idx", "doc_type", "confidence", "status", "ts")
-  }
+  def extractStream(spark: SparkSession, turns: DataFrame): DataFrame =
+    turns
+      .select(col("conv_id"), col("turn_idx"), ExtractJob.turnExtract.as("e"), col("ts"))
+      .select("conv_id", "turn_idx", "e.doc_type", "e.confidence", "e.status", "ts")
 
   /** Streaming exact dedup at the ingest boundary: drop replayed turns by
     * their natural key within the watermark horizon — state is bounded by

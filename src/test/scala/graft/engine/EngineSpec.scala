@@ -154,6 +154,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toString).sorted.toVector
     assert(key(lin) == key(audit),
       "accumulator lineage differs from the audit recompute")
+    // the same on the salted path, whose shuffle interleaves input files
+    val saltedOut = tmpDir()
+    val saltedCfg = cfg.copy(outDir = saltedOut, salted = true, saltBuckets = 4)
+    ExtractJob.runSnapshot(spark, saltedCfg, snap)
+    val saltedAudit = ExtractJob.lineage(spark,
+      spark.read.parquet(s"$saltedOut/results/snapshot=1"), saltedCfg.runId, 1L)
+    assert(key(spark.read.parquet(s"$saltedOut/lineage/snapshot=1")) == key(saltedAudit),
+      "salted accumulator lineage differs from the audit recompute")
   }
 
   test("readAll spans multiple snapshots (sibling snapshot= roots, one table)") {

@@ -103,5 +103,9 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Maintenance.readCurrent(spark, base).count() === 3L)
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/v1")))
     assert(Files.exists(java.nio.file.Paths.get(s"$base/v")))
+    // no _VERSION pointer: the same clear error readCurrent gives
+    val empty = Files.createTempDirectory("graft-maint").toString
+    assertThrows[IllegalStateException](Maintenance.compact(spark, empty, 1L << 20))
+    assertThrows[IllegalStateException](Maintenance.vacuum(empty))
   }
 }

@@ -582,6 +582,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // salted mode has exactly one exchange (the explicit skew-handling shuffle)
     val salted = plan(ExtractJob.extract(spark, turns, salted = true, 4).toDF())
     assert("Exchange".r.findAllIn(salted).size >= 1)
+    // both extract with one extract_turn per row, visible to the
+    // optimizer: no opaque object-mapping stage
+    for (q <- Seq(p, salted)) {
+      assert("""ExtractTurnBridge\$?\.eval""".r.findAllIn(q).size == 1,
+        "expected exactly one extract_turn in the extract plan:\n" + q)
+      assert(!q.contains("MapPartitions"), "MapPartitions in the extract plan:\n" + q)
+    }
   }
 
   test("AQE splits the hot partition of a skewed sort-merge join at runtime") {
