@@ -29,9 +29,13 @@ object Probe {
       |  smoke                    row count and a sample of SparkEntry.entry
       |  scale [factor...]        best-of-2 times of the corpus-scaling catalog
       |                           entries over factor-x copies of the sf tables
-      |                           (default 1 10 100); writes BENCH/SCALE10X.md""".stripMargin
+      |                           (default 1 10 100); writes BENCH/SCALE10X.md
+      |                           only for the default sf dir and factors""".stripMargin
 
   private type Query = (SparkSession, String) => DataFrame
+
+  /** The factors `BENCH/SCALE10X.md` records. */
+  private val ScaleFactors = Seq(1, 10, 100)
 
   private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -67,8 +71,7 @@ object Probe {
         gateShares(_, rest.headOption.getOrElse("/tmp/gatediag/table"), cpus)
       case "smoke" :: _ => smoke
       case "scale" :: factors =>
-        scale(_, sfDir, if (factors.isEmpty) Seq(1, 10, 100) else factors.map(_.toInt),
-          cpus)
+        scale(_, sfDir, if (factors.isEmpty) ScaleFactors else factors.map(_.toInt), cpus)
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
@@ -178,7 +181,9 @@ object Probe {
     *    cliques, so per-row work stays comparable across factors; the
     *    planted-dup regime is exercised inside dd_embedding_lsh itself.
     *
-    * Output: one JSON line (machine-readable) + BENCH/SCALE10X.md.
+    * Output: one JSON line (machine-readable), and BENCH/SCALE10X.md
+    * when the run is the recorded one (`Bench.Defaults.SfDir`, factors
+    * 1 10 100), so a smoke run never replaces the committed report.
     */
   private def scale(spark: SparkSession, base: String, factors: Seq[Int],
       cpus: Int): Unit = {
@@ -295,6 +300,11 @@ object Probe {
     println()
     println(json)
     System.out.flush()
+    if (base != Bench.Defaults.SfDir || factors != ScaleFactors) {
+      System.err.println(s"[scale] BENCH/SCALE10X.md not written: it records factors " +
+        s"${ScaleFactors.mkString(" ")} over ${Bench.Defaults.SfDir}")
+      return
+    }
 
     val fmax = factors.max
     val md = new StringBuilder

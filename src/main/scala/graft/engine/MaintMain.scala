@@ -1,14 +1,18 @@
 package graft.engine
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Table-maintenance CLI: `runMain graft.engine.MaintMain <baseDir>`
-  * exercises the copy-on-write lifecycle on a results table under
-  * <baseDir> — init (v1) → MERGE upsert (v2) → compact (v3) → vacuum —
-  * printing version, row count and file count after each step. This is
-  * the operational entry point for the Maintenance ops (a demo table is
-  * created if the dir is empty; point it at a real results table to
-  * compact it for real).
+  * compacts and then vacuums the versioned table under <baseDir> (one
+  * written by `Maintenance.initTable`, with a `_VERSION` pointer),
+  * printing version and row count after each step. When <baseDir> does
+  * not exist it first builds a demo table there — init (v1) → MERGE
+  * upsert (v2) — so the run shows the whole copy-on-write lifecycle. An
+  * existing directory without `_VERSION` (an `ExtractJob` output, say) is
+  * not a versioned table: the run fails with `IllegalStateException` and
+  * writes nothing into it.
   */
 object MaintMain {
   def main(args: Array[String]): Unit = {
@@ -30,7 +34,7 @@ object MaintMain {
       println(s"[maint] $step: version=$v rows=$n")
     }
 
-    if (Maintenance.currentVersion(base).isEmpty) {
+    if (!Files.exists(Paths.get(base))) {
       val demo = (0 until 10000).map(i => (i.toLong, s"val$i"))
         .toDF("id", "v").repartition(32)
       Maintenance.initTable(spark, base, demo)

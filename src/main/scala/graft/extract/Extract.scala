@@ -6,7 +6,7 @@ import graft.model.{ExtractedTurn, Section}
 /** Pure extraction core — zero Spark dependencies.
   *
   * This object is BOTH the single-threaded golden oracle and the code the
-  * Spark engine runs inside `mapPartitions`; determinism and
+  * Spark engine runs inside its `extract_turn` expression; determinism and
   * parallelism-independence follow from purity (every function is total and
   * depends only on its arguments).
   *
@@ -1371,7 +1371,7 @@ object Extract {
   }
 
   // -------------------------------------------------------------------------
-  // Fused per-turn extractor — the mapPartitions body and the oracle.
+  // Fused per-turn extractor — the body of `extract_turn` and the oracle.
   // -------------------------------------------------------------------------
   def extractTurn(convId: String, turnIdx: Int, text: String): ExtractedTurn = {
     if (text == null || text.isEmpty)

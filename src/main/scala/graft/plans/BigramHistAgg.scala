@@ -1,17 +1,45 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Character-bigram histogram over an ASCII string column as a native
-  * TypedImperativeAggregate: one dense long[128*128] per task, updated
+/** A dense long[slots] histogram [[Sketch]]: partials merge by vector
+  * add, the buffer ships as `slots` big-endian longs, and the result is
+  * array<long> indexed by slot. Subclasses only say which slots an input
+  * value counts into.
+  */
+abstract class DenseHist(slots: Int) extends Sketch[Array[Long]] {
+  final def dataType: DataType = ArrayType(LongType, containsNull = false)
+  final def empty: Array[Long] = new Array[Long](slots)
+
+  final def merge(b: Array[Long], o: Array[Long]): Unit = {
+    var i = 0
+    while (i < slots) { b(i) += o(i); i += 1 }
+  }
+
+  final def result(b: Array[Long]): Any = new GenericArrayData(b)
+
+  final def toBytes(b: Array[Long]): Array[Byte] = {
+    val out = new Array[Byte](slots * 8)
+    val bb = java.nio.ByteBuffer.wrap(out)
+    var i = 0
+    while (i < slots) { bb.putLong(b(i)); i += 1 }
+    out
+  }
+
+  final def fromBytes(bytes: Array[Byte]): Array[Long] = {
+    val b = new Array[Long](slots)
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    var i = 0
+    while (i < slots) { b(i) = bb.getLong(); i += 1 }
+    b
+  }
+}
+
+/** Character-bigram histogram over an ASCII string column as a
+  * [[DenseHist]]: one dense long[128*128] per task, updated
   * by a tight byte loop, partials merged by vector add — NO per-bigram
   * row explosion and no bigram-keyed shuffle. This replaces the
   * explode(transform(sequence...)) + groupBy model-build of
@@ -25,85 +53,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * model contract as the LM/DSIR bucket tables.
   *
   * Input contract: the child string must be printable ASCII (the caller
-  * strips [^ -~] first); bytes >= 128 would alias buckets, so update
+  * strips [^ -~] first); bytes >= 128 would alias buckets, so add
   * masks to 7 bits exactly as code = (c1 & 0x7f) << 7 | (c2 & 0x7f) —
   * for the in-contract alphabet this is the identity.
   *
-  * eval returns array<long> of length 16384, index = c1*128 + c2; for
+  * The result is array<long> of length 16384, index = c1*128 + c2; for
   * 2-char ASCII strings the index order IS the lexicographic bigram
   * order, so "count desc, bigram asc" rankings read directly off the
   * dense array.
   */
-case class CharBigramHistAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+case object CharBigrams extends DenseHist(128 * 128) {
+  def name: String = "char_bigram_hist"
+  def accepts(t: DataType): Boolean = t == StringType
+  def inputName: String = "a STRING"
 
-  private val Slots = 128 * 128
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Slots)
-
-  override def update(b: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[UTF8String].getBytes
-      var i = 1
-      while (i < bytes.length) {
-        b(((bytes(i - 1) & 0x7f) << 7) | (bytes(i) & 0x7f)) += 1L
-        i += 1
-      }
+  def add(b: Array[Long], v: Any): Unit = {
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    var i = 1
+    while (i < bytes.length) {
+      b(((bytes(i - 1) & 0x7f) << 7) | (bytes(i) & 0x7f)) += 1L
+      i += 1
     }
-    b
   }
-
-  override def merge(b: Array[Long], o: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < Slots) { b(i) += o(i); i += 1 }
-    b
-  }
-
-  override def eval(b: Array[Long]): Any = new GenericArrayData(b)
-
-  override def serialize(b: Array[Long]): Array[Byte] = {
-    val out = new Array[Byte](Slots * 8)
-    val bb = java.nio.ByteBuffer.wrap(out)
-    var i = 0
-    while (i < Slots) { bb.putLong(b(i)); i += 1 }
-    out
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val b = new Array[Long](Slots)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    var i = 0
-    while (i < Slots) { b(i) = bb.getLong(); i += 1 }
-    b
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"char_bigram_hist requires a STRING child, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "char_bigram_hist"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CharBigramHistAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CharBigramHistAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CharBigramHistAgg =
-    copy(child = newChild)
 }
 
 /** Hashed word-n-gram bucket histogram (the TRAIN pass of the hashed-
   * feature model family — LM unigram buckets, DSIR bigram buckets) as a
-  * native TypedImperativeAggregate: dense long[mod] per task updated by
+  * [[DenseHist]]: dense long[mod] per task updated by
   * the same compiled gram-hash loop the scoring pass uses
   * (TextHashBridge), partials merged by vector add. Replaces the
   * explode(hashed_gram_buckets) + groupBy(bucket) model build, which
@@ -111,74 +87,23 @@ case class CharBigramHistAgg(
   * Generate — the histogram computes identical counts with O(mod)
   * state and no bucket-keyed shuffle.
   */
-case class HashedGramHistAgg(
-    child: Expression,
-    n: Int,
-    seed: Long,
-    mod: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+case class HashedGrams(n: Int, seed: Long, mod: Int) extends DenseHist(mod) {
   require(n >= 1 && mod >= 1, "hashed_gram_hist needs n >= 1, mod >= 1")
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](mod)
-
-  override def update(b: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val buckets = TextHashBridge.hashedGramBuckets(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n, seed, mod.toLong)
-      var i = 0
-      val m = buckets.numElements()
-      while (i < m) { b(buckets.getLong(i).toInt) += 1L; i += 1 }
-    }
-    b
+  def name: String = "hashed_gram_hist"
+  def accepts(t: DataType): Boolean = t match {
+    case ArrayType(StringType, _) => true
+    case _ => false
   }
+  def inputName: String = "an ARRAY<STRING>"
 
-  override def merge(b: Array[Long], o: Array[Long]): Array[Long] = {
+  def add(b: Array[Long], v: Any): Unit = {
+    val buckets = TextHashBridge.hashedGramBuckets(
+      v.asInstanceOf[ArrayData], n, seed, mod.toLong)
     var i = 0
-    while (i < mod) { b(i) += o(i); i += 1 }
-    b
+    val m = buckets.numElements()
+    while (i < m) { b(buckets.getLong(i).toInt) += 1L; i += 1 }
   }
-
-  override def eval(b: Array[Long]): Any = new GenericArrayData(b)
-
-  override def serialize(b: Array[Long]): Array[Byte] = {
-    val out = new Array[Byte](mod * 8)
-    val bb = java.nio.ByteBuffer.wrap(out)
-    var i = 0
-    while (i < mod) { bb.putLong(b(i)); i += 1 }
-    out
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val b = new Array[Long](mod)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    var i = 0
-    while (i < mod) { b(i) = bb.getLong(); i += 1 }
-    b
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_gram_hist requires an ARRAY<STRING> child, got ${other.catalogString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "hashed_gram_hist"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HashedGramHistAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HashedGramHistAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HashedGramHistAgg =
-    copy(child = newChild)
 }
 
 object BigramHistAgg {
@@ -186,13 +111,13 @@ object BigramHistAgg {
     * array column (polyHash(gram, seed) % mod slots).
     */
   def hashedGramHist(c: Column, n: Int, seed: Long, mod: Int): Column =
-    column(HashedGramHistAgg(expression(c), n, seed, mod).toAggregateExpression())
+    SketchAgg.aggregate(c, HashedGrams(n, seed, mod))
 
   /** Column face: dense 16384-slot char-bigram histogram of a string
-    * column (printable-ASCII contract; see [[CharBigramHistAgg]]).
+    * column (printable-ASCII contract; see [[CharBigrams]]).
     */
   def charBigramHist(c: Column): Column =
-    column(CharBigramHistAgg(expression(c)).toAggregateExpression())
+    SketchAgg.aggregate(c, CharBigrams)
 
   /** The bigram string for a histogram slot index. */
   def bigramOf(code: Int): String =

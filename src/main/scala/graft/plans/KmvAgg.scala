@@ -3,23 +3,17 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** KMV / bottom-k theta sketch (Bar-Yossef et al. 2002; the Theta-sketch
-  * framework of Dasgupta et al.) as a native Catalyst
-  * TypedImperativeAggregate: the k smallest DISTINCT hash values of the
-  * input column. Bounded O(k) state per task, partials merge by set
+  * framework of Dasgupta et al.) as a [[Sketch]] for [[SketchAgg]]: the
+  * k smallest DISTINCT hash values of the input column. Bounded O(k) state per task, partials merge by set
   * union capped at k — so distinct-count estimation (and, downstream,
   * sketch union/intersection set algebra) costs ONE map-side-combined
   * aggregation with NO value-keyed corpus shuffle: at 100 TB this
   * replaces `SELECT count(DISTINCT v)`'s full exchange the same way
-  * SpaceSavingAgg replaces the groupBy().count() of heavy hitters.
+  * [[SpaceSaving]] replaces the groupBy().count() of heavy hitters.
   *
   * Everything downstream is exact integer arithmetic on the returned
   * sorted array<long> (estimate = (k-1)*M div kth-value), so the result
@@ -28,58 +22,21 @@ import org.apache.spark.sql.types._
   * equality (the DuckDB mirror computes the identical sketch from a
   * sort + limit over distinct hashes).
   *
-  * eval returns the sketch as array<long>, ascending; fewer than k
+  * The result is the sketch as array<long>, ascending; fewer than k
   * entries means the input had fewer than k distinct values and the
   * sketch is exact.
   */
-case class KmvAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch]
-  with UnaryLike[Expression] {
-
-  // reject non-long children at analysis time: update() casts the child
-  // value to Long, so a mis-typed column would otherwise surface as an
-  // executor-side ClassCastException
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"kmv_sketch requires a BIGINT child, got ${child.dataType.catalogString}")
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(b: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) b.add(v.asInstanceOf[Long])
-    b
-  }
-
-  override def merge(b: KmvSketch, o: KmvSketch): KmvSketch = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: KmvSketch): Any =
-    new GenericArrayData(b.sortedValues)
-
-  override def serialize(b: KmvSketch): Array[Byte] = b.toBytes
-
-  override def deserialize(bytes: Array[Byte]): KmvSketch =
-    KmvSketch.fromBytes(k, bytes)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "kmv_sketch"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvAgg =
-    copy(child = newChild)
+case class Kmv(k: Int) extends Sketch[KmvSketch] {
+  def name: String = "kmv_sketch"
+  def accepts(t: DataType): Boolean = t == LongType
+  def inputName: String = "a BIGINT"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def empty: KmvSketch = new KmvSketch(k)
+  def add(b: KmvSketch, v: Any): Unit = b.add(v.asInstanceOf[Long])
+  def merge(b: KmvSketch, o: KmvSketch): Unit = b.mergeWith(o)
+  def result(b: KmvSketch): Any = new GenericArrayData(b.sortedValues)
+  def toBytes(b: KmvSketch): Array[Byte] = b.toBytes
+  def fromBytes(bytes: Array[Byte]): KmvSketch = KmvSketch.fromBytes(k, bytes)
 }
 
 /** The mutable bottom-k set: a sorted set of distinct hash values capped
@@ -132,5 +89,5 @@ object KmvSketch {
 
   /** Column face: bottom-k distinct-hash sketch of a long column. */
   def kmvSketch(c: Column, k: Int): Column =
-    column(KmvAgg(expression(c), k).toAggregateExpression())
+    SketchAgg.aggregate(c, Kmv(k))
 }

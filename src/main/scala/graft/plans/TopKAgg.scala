@@ -5,17 +5,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SpaceSaving (Metwally et al. 2005) top-k frequent-items summary as a
-  * native Catalyst TypedImperativeAggregate — ONE-PASS bounded-memory
+  * [[Sketch]] for [[SketchAgg]] — ONE-PASS bounded-memory
   * heavy hitters with NO item-keyed shuffle: each task keeps a k-counter
   * summary (map-side partial), partials merge pairwise (the mergeable-
   * summaries composition: an item absent from a summary contributes that
@@ -32,55 +28,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *    which is what makes the catalog entry sk_spacesaving_topk
   *    oracle-gateable by hash equality.
   *
-  * eval returns array<struct<item,cnt,err>> sorted by (cnt desc, item).
+  * The result is array<struct<item,cnt,err>> sorted by (cnt desc, item).
   */
-case class SpaceSavingAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SpaceSavingSummary]
-  with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): SpaceSavingSummary =
-    new SpaceSavingSummary(k)
-
-  override def update(b: SpaceSavingSummary, input: InternalRow): SpaceSavingSummary = {
-    val v = child.eval(input)
-    if (v != null) b.add(v.asInstanceOf[UTF8String].toString)
-    b
-  }
-
-  override def merge(b: SpaceSavingSummary, o: SpaceSavingSummary): SpaceSavingSummary = {
-    b.mergeWith(o); b
-  }
-
-  override def eval(b: SpaceSavingSummary): Any = {
-    val rows = b.sortedEntries.map { case (item, cnt, err) =>
-      InternalRow(UTF8String.fromString(item), cnt, err)
-    }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(b: SpaceSavingSummary): Array[Byte] = b.toBytes
-
-  override def deserialize(bytes: Array[Byte]): SpaceSavingSummary =
-    SpaceSavingSummary.fromBytes(k, bytes)
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+case class SpaceSaving(k: Int) extends Sketch[SpaceSavingSummary] {
+  def name: String = "spacesaving_topk"
+  def accepts(t: DataType): Boolean = t == StringType
+  def inputName: String = "a STRING"
+  def dataType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = false),
     StructField("cnt", LongType, nullable = false),
     StructField("err", LongType, nullable = false))), containsNull = false)
-
-  override def nullable: Boolean = false
-  override def prettyName: String = "spacesaving_topk"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): SpaceSavingAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SpaceSavingAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): SpaceSavingAgg =
-    copy(child = newChild)
+  def empty: SpaceSavingSummary = new SpaceSavingSummary(k)
+  def add(b: SpaceSavingSummary, v: Any): Unit =
+    b.add(v.asInstanceOf[UTF8String].toString)
+  def merge(b: SpaceSavingSummary, o: SpaceSavingSummary): Unit = b.mergeWith(o)
+  def result(b: SpaceSavingSummary): Any =
+    new GenericArrayData(b.sortedEntries.map { case (item, cnt, err) =>
+      InternalRow(UTF8String.fromString(item), cnt, err)
+    })
+  def toBytes(b: SpaceSavingSummary): Array[Byte] = b.toBytes
+  def fromBytes(bytes: Array[Byte]): SpaceSavingSummary =
+    SpaceSavingSummary.fromBytes(k, bytes)
 }
 
 /** The mutable k-counter summary: item -> (count, err). */
@@ -166,5 +134,5 @@ object SpaceSavingSummary {
 object TopKAgg {
   /** Column face: SpaceSaving top-k summary of a string column. */
   def spaceSavingTopK(c: Column, k: Int): Column =
-    column(SpaceSavingAgg(expression(c), k).toAggregateExpression())
+    SketchAgg.aggregate(c, SpaceSaving(k))
 }

@@ -12,8 +12,9 @@ import graft.extract.Extract
   * Same construct-and-recover strategy as DocQueries/XQueries: payloads
   * are BUILT from deterministic string ops over (doc_id, text) —
   * reproducible identically in DuckDB — and the Spark side runs the REAL
-  * extractor functions (the exact code the production mapPartitions stage
-  * runs) while the oracle emits the constructed ground truth.
+  * extractor functions (the code the production `extract_turn` operator
+  * runs; f8_quarantine runs the operator itself) while the oracle emits
+  * the constructed ground truth.
   */
 object OpQueries {
   import Q._
@@ -409,14 +410,10 @@ object OpQueries {
         val payload = when(pmod($"doc_id", lit(5)) === 0, lit(""))
           .otherwise(concat(lit("plain words "), tok($"text", 1)))
         val df = rd(s, d, "documents").select($"doc_id", payload.as("p"))
-        // output-order exchange below the 1:1 extractor (see runStr)
+        // output-order exchange below the extractor (see runStr)
         df.select(col("doc_id").cast("long"), col("p")).orderBy(col("doc_id"))
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, p) =>
-            val e = Extract.extractTurn(s"doc-$id", 0, p)
-            (id, e.status, e.doc_type)
-          })
-          .toDF("doc_id", "status", "doc_type")
+          .select($"doc_id", graft.functions.TextFunctions.extractTurn($"p").as("e"))
+          .select($"doc_id", $"e.status".as("status"), $"e.doc_type".as("doc_type"))
       },
       Some("""SELECT doc_id,
              |  CASE WHEN doc_id % 5 = 0 THEN 'failed:empty' ELSE 'ok' END AS status,

@@ -8,9 +8,9 @@ import graft.functions.Multimodal
 /** Training-data pipeline operators: deduplication (exact, MinHash,
   * SimHash, n-gram Jaccard, embedding cosine), similarity search
   * (brute-force and bucketed ANN), text analysis (language-ID, quality,
-  * token counts, fingerprint), multimodal plumbing, and the end-to-end
-  * extractor gates that run the REAL mapPartitions pipeline against
-  * constructed ground truth.
+  * token counts, fingerprint) and multimodal plumbing. The end-to-end
+  * extractor gates, which run the production `extract_turn` operator
+  * against constructed ground truth, are in [[XQueries]].
   */
 object PipelineQueries {
   import Q._

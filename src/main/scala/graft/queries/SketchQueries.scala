@@ -196,7 +196,7 @@ object SketchQueries {
            |FROM est ORDER BY df_exact DESC, token""".stripMargin
       }),
 
-    // SpaceSaving top-k via the native TypedImperativeAggregate
+    // SpaceSaving top-k via the native SketchAgg aggregate
     // (plans.TopKAgg): one-pass bounded-memory frequent items with NO
     // item-keyed shuffle — k counters per task, partials merged
     // pairwise. Gated in the EXACT regime (distinct sources = 20 <=
@@ -223,7 +223,7 @@ object SketchQueries {
     // event cohorts (A = click/view, B = purchase/signup) plus their
     // UNION and INTERSECTION — the sketch-level set operations no HLL
     // can do (HLL unions but cannot intersect). The sketch is the native
-    // bounded-state KmvAgg (plans/KmvAgg.scala): k=12 smallest distinct
+    // bounded-state Kmv SketchAgg (plans/KmvAgg.scala): k=12 smallest distinct
     // hashes per cohort, O(k) per task, map-side partial merges — the
     // corpus is never value-shuffled for the estimates. All downstream
     // algebra is exact integer arithmetic on the two 12-element arrays

@@ -2,13 +2,16 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.ExtractJob
 import graft.extract.Extract
+import graft.functions.TextFunctions
 
 /** End-to-end extractor gates: each query BUILDS document-shaped payloads
   * (facesheet / prescription / agreement / insurance — FIXTURES.md §2)
-  * from deterministic string ops over the `documents` table, runs the REAL
-  * fused extractor (`Extract.extractTurn`, the exact code the production
-  * mapPartitions stage runs), and emits scalar fields. The DuckDB oracle
+  * from deterministic string ops over the `documents` table, runs the
+  * production extraction operator (`extract_turn`, the projection
+  * `ExtractJob` runs, JSON packing of `fields`/`field_src` included), and
+  * emits scalar fields. The DuckDB oracle
   * reproduces the construction directly — ground truth by construction, so
   * these rows gate classifier + banks + merge precedence + confidence of
   * the actual pipeline code, not a SQL re-implementation of it.
@@ -18,32 +21,24 @@ object XQueries {
 
   import Q.{tok, cap, dateCol, sqlTok1, sqlTok2, sqlCap, sqlDate}
 
-  /** Run the real extractor over (doc_id, payload) rows. The
-    * output-order exchange runs BELOW the extractor, on the narrow
-    * (doc_id, payload) input: a terminal orderBy above it re-ran the
-    * whole extraction once more for range-partition sampling
-    * (RangePartitioner consumes every child partition to sketch
-    * bounds); the 1:1 order-preserving mapPartitions + projection keep
-    * the global order.
+  /** `extract_turn(p)` as column `e`, next to `doc_id`. The output-order
+    * exchange runs BELOW the extractor, on the narrow (doc_id, p) input:
+    * a terminal orderBy above it would re-run the whole extraction once
+    * more for range-partition sampling (RangePartitioner consumes every
+    * child partition to sketch bounds); the projections keep the order.
     */
-  private def runExtractor(s: SparkSession, df: DataFrame)(
-      project: graft.model.ExtractedTurn => Seq[Any],
-      schema: Seq[String]): DataFrame = {
-    import s.implicits._
-    val rows = df.select(col("doc_id").cast("long"), col("p"))
-      .orderBy(col("doc_id"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val e = Extract.extractTurn(s"doc-$id", 0, text)
-        (id, project(e).map(String.valueOf))
-      })
-    // expand the stringly-projected values into named columns
-    rows.select(
-      (col("_1").as("doc_id") +:
-        schema.zipWithIndex.map { case (n, i) =>
-          element_at(col("_2"), i + 1).as(n)
-        }): _*)
-  }
+  private def extracted(df: DataFrame): DataFrame =
+    df.select(col("doc_id").cast("long"), col("p")).orderBy(col("doc_id"))
+      .select(col("doc_id"), TextFunctions.extractTurn(col("p")).as("e"))
+
+  /** Value of key `k` in the JSON map `e.<mapCol>` ("" when absent). */
+  private def jsonKey(mapCol: String, k: String): Column =
+    coalesce(element_at(from_json(col(s"e.$mapCol"), ExtractJob.FieldsSchema), k), lit(""))
+  private def field(k: String): Column = jsonKey("fields", k).as(k)
+  private def src(k: String, as: String): Column = jsonKey("field_src", k).as(as)
+
+  private val docType = col("e.doc_type").as("doc_type")
+  private val confidence = round(col("e.confidence"), 6).cast("string").as("confidence")
 
   /** The facesheet-shaped payload shared by x_pipeline_facesheet and the
     * engine-path gate x_e2e_engine (one construction, one oracle formula).
@@ -72,26 +67,19 @@ object XQueries {
         import s.implicits._
         val payload = facesheetPayload($"doc_id", $"text")
         val df = rd(s, d, "documents").select($"doc_id", payload.as("p"))
-        runExtractor(s, df)(
-          e => Seq(e.doc_type,
-            e.fields.getOrElse("patient_name", ""),
-            e.fields.getOrElse("patient_first_name", ""),
-            e.fields.getOrElse("patient_last_name", ""),
-            e.fields.getOrElse("patient_dob", ""),
-            e.fields.getOrElse("patient_phone", ""),
-            // per-field provenance: the canonical bank fields come from
-            // the pattern arm, the raw "MRN:"/"Patient Name:" lines from
-            // the anchor arm (the bank's canonical names never collide
-            // with the anchor keys, so BOTH survive the merge — each
-            // with its own source)
-            e.field_src.getOrElse("patient_name", ""),
-            e.field_src.getOrElse("MRN", ""),
-            e.field_src.getOrElse("Patient Name", ""),
-            math.rint(e.confidence * 1e6) / 1e6),
-          Seq("doc_type", "patient_name", "patient_first_name",
-            "patient_last_name", "patient_dob", "patient_phone",
-            "src_patient_name", "src_mrn", "src_anchor_patient_name",
-            "confidence"))
+        extracted(df).select($"doc_id", docType,
+          field("patient_name"), field("patient_first_name"),
+          field("patient_last_name"), field("patient_dob"),
+          field("patient_phone"),
+          // per-field provenance: the canonical bank fields come from
+          // the pattern arm, the raw "MRN:"/"Patient Name:" lines from
+          // the anchor arm (the bank's canonical names never collide
+          // with the anchor keys, so BOTH survive the merge — each
+          // with its own source)
+          src("patient_name", "src_patient_name"),
+          src("MRN", "src_mrn"),
+          src("Patient Name", "src_anchor_patient_name"),
+          confidence)
       },
       Some(s"""SELECT doc_id,
               |  'FACESHEET' AS doc_type,
@@ -124,17 +112,10 @@ object XQueries {
           lit(". "), cap(tok($"text", 2)), lit(", MD - "),
           (lit(1000000000L) + $"doc_id").cast("string"))
         val df = rd(s, d, "documents").select($"doc_id", payload.as("p"))
-        runExtractor(s, df)(
-          e => Seq(e.doc_type,
-            e.fields.getOrElse("patient_name", ""),
-            e.fields.getOrElse("icd10", ""),
-            e.fields.getOrElse("qty", ""),
-            e.fields.getOrElse("item_code", ""),
-            e.fields.getOrElse("pump_type", ""),
-            e.fields.getOrElse("physician_name", ""),
-            e.fields.getOrElse("physician_npi", "")),
-          Seq("doc_type", "patient_name", "icd10", "qty", "item_code",
-            "pump_type", "physician_name", "physician_npi"))
+        extracted(df).select($"doc_id", docType,
+          field("patient_name"), field("icd10"), field("qty"),
+          field("item_code"), field("pump_type"), field("physician_name"),
+          field("physician_npi"))
       },
       Some(s"""SELECT doc_id,
               |  'PRESCRIPTION' AS doc_type,
@@ -163,14 +144,10 @@ object XQueries {
           lit("CUSTOMER AGREEMENT\nThis agreement sets forth the terms and conditions of service.\n"),
           tail)
         val df = rd(s, d, "documents").select($"doc_id", payload.as("p"))
-        runExtractor(s, df)(
-          e => Seq(e.doc_type,
-            e.fields.getOrElse("signed_by", ""),
-            e.fields.getOrElse("signed_date", ""),
-            e.signature_present,
-            math.rint(e.confidence * 1e6) / 1e6),
-          Seq("doc_type", "signed_by", "signed_date", "signature_present",
-            "confidence"))
+        extracted(df).select($"doc_id", docType,
+          field("signed_by"), field("signed_date"),
+          $"e.signature_present".cast("string").as("signature_present"),
+          confidence)
       },
       Some(s"""SELECT doc_id,
               |  'AGREEMENT' AS doc_type,
@@ -195,12 +172,8 @@ object XQueries {
           (lit(10000) + pmod($"doc_id", lit(90000))).cast("string"),
           lit("\nCopay: $"), (lit(5) + pmod($"doc_id", lit(45))).cast("string"))
         val df = rd(s, d, "documents").select($"doc_id", payload.as("p"))
-        runExtractor(s, df)(
-          e => Seq(e.doc_type,
-            e.fields.getOrElse("member_name", ""),
-            e.fields.getOrElse("member_id", ""),
-            math.rint(e.confidence * 1e6) / 1e6),
-          Seq("doc_type", "member_name", "member_id", "confidence"))
+        extracted(df).select($"doc_id", docType,
+          field("member_name"), field("member_id"), confidence)
       },
       Some(s"""SELECT doc_id,
               |  'INSURANCE' AS doc_type,

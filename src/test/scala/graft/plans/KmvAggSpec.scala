@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -67,5 +67,15 @@ class KmvAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(i => (i * 7919L) % 101L).distinct.sorted.take(8)
       assert(got(g) === expect, g)
     }
+  }
+
+  test("non-bigint child is rejected at analysis time") {
+    import spark.implicits._
+    val df = Seq("a", "b").toDF("v")
+    val e = intercept[AnalysisException] {
+      df.agg(kmvSketch($"v", 4)).collect()
+    }
+    assert(e.getMessage.contains("kmv_sketch requires a BIGINT child, got string"),
+      e.getMessage)
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -89,5 +89,15 @@ class TopKAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.foreach { case Row(_, _, c: Long, e: Long) =>
       assert(c === 100L); assert(e === 0L)
     }
+  }
+
+  test("non-string child is rejected at analysis time") {
+    import spark.implicits._
+    val df = Seq(1L, 2L).toDF("v")
+    val e = intercept[AnalysisException] {
+      df.agg(spaceSavingTopK($"v", 4)).collect()
+    }
+    assert(e.getMessage.contains("spacesaving_topk requires a STRING child, got bigint"),
+      e.getMessage)
   }
 }
