@@ -96,15 +96,11 @@ object TextFunctions {
   }
 
   /** Same polynomial hash over a full string (token), with a salt seed —
-    * the MinHash family member h_s(token).
+    * the MinHash family member h_s(token), compiled
+    * (graft.plans.TextHashBridge.polyHash).
     */
-  def polyHashStr(c: Column, seed: Long): Column = {
-    val codes = transform(
-      sequence(lit(1), length(c)),
-      i => ascii(c.substr(i, lit(1))).cast("long"))
-    aggregate(codes, lit(seed % HashMod),
-      (acc, x) => pmod(acc * 131 + x, lit(HashMod)))
-  }
+  def polyHashStr(c: Column, seed: Long): Column =
+    invoke(TextHashBridge, "polyHash", LongType, c, Literal(seed))
 
   /** MinHash signature of a token array: for each of `k` salted hash
     * functions, the minimum hash over the tokens. Returns array<long>.
@@ -304,12 +300,12 @@ object TextFunctions {
     * identical to the HOF forms over `hyperplanes(nPlanes, dim, seed)` —
     * asserted bit-equal in VecExprsSpec — while the 32 plane dot products
     * per row run as one compiled loop instead of 32 interpreted
-    * `aggregate` folds.
+    * `aggregate` folds. The single bucket is the bits of the one-band key
+    * "0-bits" (band 0 uses `seed` itself).
     */
   def lshBucketNative(vecF: Column, nPlanes: Int, dim: Int,
       seed: Long = 42L): Column =
-    GraftColumnBridge.column(graft.plans.HyperplaneBucketExpr(
-      GraftColumnBridge.expression(vecF), nPlanes, dim, seed))
+    element_at(lshBucketBandsNative(vecF, 1, nPlanes, dim, seed), 1).substr(3, nPlanes)
 
   def lshBucketBandsNative(vecF: Column, bands: Int, rowsPerBand: Int,
       dim: Int, seed: Long = 42L): Column =

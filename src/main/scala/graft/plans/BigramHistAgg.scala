@@ -79,13 +79,13 @@ case object CharBigrams extends DenseHist(128 * 128) {
 
 /** Hashed word-n-gram bucket histogram (the TRAIN pass of the hashed-
   * feature model family — LM unigram buckets, DSIR bigram buckets) as a
-  * [[DenseHist]]: dense long[mod] per task updated by
-  * the same compiled gram-hash loop the scoring pass uses
-  * (TextHashBridge), partials merged by vector add. Replaces the
-  * explode(hashed_gram_buckets) + groupBy(bucket) model build, which
-  * materialized one row per gram occurrence of the corpus through a
-  * Generate — the histogram computes identical counts with O(mod)
-  * state and no bucket-keyed shuffle.
+  * [[DenseHist]]: dense long[mod] per task, each gram counted into slot
+  * pmod(TextHashBridge.gramHash, mod) — the gram hash the scoring pass
+  * uses — with no per-row bucket array; partials merged by vector add.
+  * Replaces the explode(hashed_gram_buckets) + groupBy(bucket) model
+  * build, which materialized one row per gram occurrence of the corpus
+  * through a Generate — the histogram computes identical counts with
+  * O(mod) state and no bucket-keyed shuffle.
   */
 case class HashedGrams(n: Int, seed: Long, mod: Int) extends DenseHist(mod) {
   require(n >= 1 && mod >= 1, "hashed_gram_hist needs n >= 1, mod >= 1")
@@ -98,17 +98,19 @@ case class HashedGrams(n: Int, seed: Long, mod: Int) extends DenseHist(mod) {
   def inputName: String = "an ARRAY<STRING>"
 
   def add(b: Array[Long], v: Any): Unit = {
-    val buckets = TextHashBridge.hashedGramBuckets(
-      v.asInstanceOf[ArrayData], n, seed, mod.toLong)
+    val toks = v.asInstanceOf[ArrayData]
+    val m = TextHashBridge.gramCount(toks, n)
     var i = 0
-    val m = buckets.numElements()
-    while (i < m) { b(buckets.getLong(i).toInt) += 1L; i += 1 }
+    while (i < m) {
+      b(Math.floorMod(TextHashBridge.gramHash(toks, i, n, seed), mod)) += 1L
+      i += 1
+    }
   }
 }
 
 object BigramHistAgg {
   /** Column face: dense hashed word-n-gram bucket histogram of a token-
-    * array column (polyHash(gram, seed) % mod slots).
+    * array column (pmod(polyHash(gram, seed), mod) slots).
     */
   def hashedGramHist(c: Column, n: Int, seed: Long, mod: Int): Column =
     SketchAgg.aggregate(c, HashedGrams(n, seed, mod))

@@ -14,16 +14,17 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextHashBridge {
   val M: Long = 1000000007L
 
-  /** polyHashStr: acc = (acc * 131 + charCode) mod M, acc0 = seed mod M —
-    * identical to the `aggregate`-HOF form in TextFunctions.polyHashStr
-    * (ascii() = the character's code point; the corpus is ASCII).
+  /** polyHashStr: acc = pmod(acc * 131 + charCode, M) per UTF-16 char,
+    * acc0 = seed % M — the HOF form's math (pmod keeps a negative seed's
+    * steps in [0, M)), and its values on ASCII, where ascii() = charCode.
     */
-  def polyHash(s: UTF8String, seed: Long): Long = {
-    val str = s.toString
-    var acc = seed % M
+  def polyHash(s: UTF8String, seed: Long): Long = fold(seed % M, s.toString)
+
+  private def fold(acc0: Long, str: String): Long = {
+    var acc = acc0
     var i = 0
     while (i < str.length) {
-      acc = (acc * 131 + str.charAt(i).toLong) % M
+      acc = Math.floorMod(acc * 131 + str.charAt(i).toLong, M)
       i += 1
     }
     acc
@@ -98,27 +99,39 @@ object TextHashBridge {
   private def isWsChar(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** One-pass Gopher repetition stats off the raw text: word count,
-    * distinct-word count, and the per-doc modal word-bigram (max count,
-    * ties to the lexicographically largest bigram — the corpus is ASCII,
-    * where UTF-16, UTF-8-binary and DuckDB `ORDER BY bg DESC` orders all
-    * agree). Tokenization is exactly
-    * `filter(split(lower(text), "\\s+"), length > 0)`: maximal runs of
-    * non-`\s` characters (`\s` = the Java regex class) of the lowercased
-    * text. Returns (n_words, n_distinct, top_bigram, top_n); the bigram
-    * pair is null when the doc has fewer than two words.
+  /** The lowercased token runs of `s`: maximal non-`\s` runs
+    * (`filter(split(lower(t), "\\s+"), length > 0)`; `\s` = the Java
+    * regex class), or maximal `[a-z0-9]` runs when `alnum`
+    * (`filter(split(lower(t), "[^a-z0-9]+"), length > 0)`). A Boolean
+    * mode, not a `Char => Boolean`: `Function1` is not specialized for
+    * `Char`, so a function argument would box every character.
     */
-  def gopherStats(s: UTF8String): InternalRow = {
+  private def words(s: UTF8String, alnum: Boolean): java.util.ArrayList[String] = {
     val str = s.toLowerCase.toString
+    def isTok(c: Char): Boolean =
+      if (alnum) (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') else !isWsChar(c)
     val words = new java.util.ArrayList[String]()
     val L = str.length
     var i = 0
     while (i < L) {
-      while (i < L && isWsChar(str.charAt(i))) i += 1
+      while (i < L && !isTok(str.charAt(i))) i += 1
       val st = i
-      while (i < L && !isWsChar(str.charAt(i))) i += 1
+      while (i < L && isTok(str.charAt(i))) i += 1
       if (i > st) words.add(str.substring(st, i))
     }
+    words
+  }
+
+  /** One-pass Gopher repetition stats off the raw text: word count,
+    * distinct-word count, and the per-doc modal word-bigram (max count,
+    * ties to the lexicographically largest bigram — the corpus is ASCII,
+    * where UTF-16, UTF-8-binary and DuckDB `ORDER BY bg DESC` orders all
+    * agree), over the whitespace [[words]]. Returns (n_words, n_distinct,
+    * top_bigram, top_n); the bigram pair is null when the doc has fewer
+    * than two words.
+    */
+  def gopherStats(s: UTF8String): InternalRow = {
+    val words = this.words(s, alnum = false)
     val n = words.size
     val distinct = new java.util.HashSet[String](math.max(16, n * 2))
     var j = 0
@@ -149,28 +162,16 @@ object TextHashBridge {
     row
   }
 
-  /** All word n-grams of the text, space-joined, in one compiled pass:
-    * tokenize exactly like [[gopherStats]]
-    * (`filter(split(lower(text), "\\s+"), length > 0)`), then emit each
-    * gram as a SUBSTRING of the single-space-rejoined token string — no
-    * per-gram slice/join allocations (the HOF form allocated an array
-    * plus ~n small strings per gram, interpreted). Fewer than n words
-    * yields an empty array.
+  /** All n-grams of `words`, space-joined: each gram is a SUBSTRING of
+    * the single-space-rejoined token string, so there are no per-gram
+    * slice/join allocations (the HOF form allocated an array plus ~n
+    * small strings per gram, interpreted). Fewer than n words yields an
+    * empty array.
     */
-  def wordGrams(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toLowerCase.toString
-    val words = new java.util.ArrayList[String]()
-    val L = str.length
-    var i = 0
-    while (i < L) {
-      while (i < L && isWsChar(str.charAt(i))) i += 1
-      val st = i
-      while (i < L && !isWsChar(str.charAt(i))) i += 1
-      if (i > st) words.add(str.substring(st, i))
-    }
+  private def grams(words: java.util.ArrayList[String], n: Int): ArrayData = {
     val w = words.size
     if (w < n) return new GenericArrayData(new Array[Any](0))
-    val sb = new java.lang.StringBuilder(str.length)
+    val sb = new java.lang.StringBuilder
     val starts = new Array[Int](w)
     var k = 0
     while (k < w) {
@@ -190,48 +191,14 @@ object TextHashBridge {
     new GenericArrayData(out)
   }
 
+  /** Space-joined word n-grams over the whitespace [[words]]. */
+  def wordGrams(s: UTF8String, n: Int): ArrayData = grams(words(s, alnum = false), n)
 
-  /** Space-joined word n-grams under the ALNUM tokenizer
-    * (`filter(split(lower(text), "[^a-z0-9]+"), len > 0)` — the
-    * dd_exact_substring token stream), one compiled pass: same
-    * single-rejoin + substring-slicing trick as [[wordGrams]], but the
-    * token boundary is any non-[a-z0-9] char after lowercasing instead
-    * of whitespace. Fewer than n tokens yields an empty array.
+  /** Space-joined word n-grams over the alnum [[words]] (the
+    * dd_exact_substring token stream).
     */
-  def alnumGrams(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toLowerCase.toString
-    def isTok(c: Char): Boolean =
-      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-    val words = new java.util.ArrayList[String]()
-    val L = str.length
-    var i = 0
-    while (i < L) {
-      while (i < L && !isTok(str.charAt(i))) i += 1
-      val st = i
-      while (i < L && isTok(str.charAt(i))) i += 1
-      if (i > st) words.add(str.substring(st, i))
-    }
-    val w = words.size
-    if (w < n) return new GenericArrayData(new Array[Any](0))
-    val sb = new java.lang.StringBuilder(str.length)
-    val starts = new Array[Int](w)
-    var k = 0
-    while (k < w) {
-      starts(k) = sb.length
-      sb.append(words.get(k))
-      if (k < w - 1) sb.append(' ')
-      k += 1
-    }
-    val joined = sb.toString
-    val out = new Array[Any](w - n + 1)
-    k = 0
-    while (k <= w - n) {
-      val end = starts(k + n - 1) + words.get(k + n - 1).length
-      out(k) = UTF8String.fromString(joined.substring(starts(k), end))
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
+  def alnumGrams(s: UTF8String, n: Int): ArrayData = grams(words(s, alnum = true), n)
+
   /** DISTINCT word n-grams of the text with their within-doc occurrence
     * counts, in first-occurrence order (LinkedHashMap — deterministic).
     * This is the row-local limit of map-side combining for gram-stream
@@ -266,9 +233,26 @@ object TextHashBridge {
     new GenericArrayData(out)
   }
 
+  /** Number of word n-grams in a token array (n=1: the tokens). */
+  private[plans] def gramCount(toks: ArrayData, n: Int): Int =
+    math.max(toks.numElements() - n + 1, 0)
+
+  /** polyHash of the space-joined gram toks[i until i + n], folded token
+    * by token — the same value as hashing the joined string, without
+    * building it.
+    */
+  private[plans] def gramHash(toks: ArrayData, i: Int, n: Int, seed: Long): Long = {
+    var acc = fold(seed % M, toks.getUTF8String(i).toString)
+    var j = 1
+    while (j < n) {
+      acc = fold(Math.floorMod(acc * 131 + ' ', M), toks.getUTF8String(i + j).toString)
+      j += 1
+    }
+    acc
+  }
+
   /** Sum of per-gram micro-log table lookups over the token array's
-    * word n-grams: for each space-joined n-gram (n=1 -> the tokens
-    * themselves), bucket = polyHash(gram, seed) % mod, accumulate
+    * word n-grams: bucket = pmod([[gramHash]], mod), accumulate
     * table(bucket). The compiled form of the interpreted
     * `aggregate(toks, 0L, (acc, t) -> acc + element_at(tableLit,
     * pmod(polyHashStr(t, seed), mod)))` fold the DSIR / LM-perplexity
@@ -277,62 +261,28 @@ object TextHashBridge {
     */
   def hashedGramMicroSum(toks: ArrayData, n: Int, seed: Long,
       table: Array[Long], mod: Long): Long = {
-    val m = toks.numElements()
+    val m = gramCount(toks, n)
     var sum = 0L
-    if (n == 1) {
-      var i = 0
-      while (i < m) {
-        sum += table((polyHash(toks.getUTF8String(i), seed) % mod).toInt)
-        i += 1
-      }
-    } else {
-      var i = 0
-      while (i + n <= m) {
-        val sb = new java.lang.StringBuilder
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks.getUTF8String(i + j).toString)
-          j += 1
-        }
-        val h = polyHash(UTF8String.fromString(sb.toString), seed)
-        sum += table((h % mod).toInt)
-        i += 1
-      }
+    var i = 0
+    while (i < m) {
+      sum += table(Math.floorMod(gramHash(toks, i, n, seed), mod).toInt)
+      i += 1
     }
     sum
   }
 
-  /** Bucket ids of the token array's word n-grams:
-    * polyHash(gram, seed) % mod per space-joined gram — the compiled
-    * TRAIN-side companion of [[hashedGramMicroSum]] (the model pass
-    * explodes these Longs instead of interpreting a per-char HOF hash
-    * over materialized gram strings).
+  /** Bucket ids of the token array's word n-grams, pmod([[gramHash]],
+    * mod) per gram — the compiled TRAIN-side companion of
+    * [[hashedGramMicroSum]] (the model pass explodes these Longs instead
+    * of interpreting a per-char HOF hash over materialized gram strings).
     */
   def hashedGramBuckets(toks: ArrayData, n: Int, seed: Long,
       mod: Long): ArrayData = {
-    val m = toks.numElements()
-    val cnt = if (n == 1) m else math.max(m - n + 1, 0)
-    val out = new Array[Any](cnt)
-    if (n == 1) {
-      var i = 0
-      while (i < m) {
-        out(i) = polyHash(toks.getUTF8String(i), seed) % mod
-        i += 1
-      }
-    } else {
-      var i = 0
-      while (i + n <= m) {
-        val sb = new java.lang.StringBuilder
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks.getUTF8String(i + j).toString)
-          j += 1
-        }
-        out(i) = polyHash(UTF8String.fromString(sb.toString), seed) % mod
-        i += 1
-      }
+    val out = new Array[Any](gramCount(toks, n))
+    var i = 0
+    while (i < out.length) {
+      out(i) = Math.floorMod(gramHash(toks, i, n, seed), mod)
+      i += 1
     }
     new GenericArrayData(out)
   }

@@ -64,18 +64,6 @@ object VecBridge {
     if (d >= 0) '1' else '0'
   }
 
-  /** Single LSH bucket key: the concatenated sign bits over `planes`. */
-  def bucketKey(v: ArrayData, vFloat: Boolean,
-      planes: Array[Array[Double]]): UTF8String = {
-    val sb = new java.lang.StringBuilder(planes.length)
-    var p = 0
-    while (p < planes.length) {
-      sb.append(signBit(v, vFloat, planes(p)))
-      p += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
   /** OR-amplified band keys: `planes.length / rowsPerBand` bands of
     * `rowsPerBand` sign bits each, key format "b-bits" (matching
     * `concat(lit(s"$b-"), bits)` in the HOF form).
@@ -140,38 +128,13 @@ case class CosineSimExpr(left: Expression, right: Expression)
       newRight: Expression): CosineSimExpr = copy(left = newLeft, right = newRight)
 }
 
-/** `hyperplane_bucket(vec)` — the single LSH sign-bit bucket key. The
-  * hyperplanes are regenerated deterministically from (nPlanes, dim, seed)
-  * — primitive parameters, so expression equality (and therefore exchange
-  * reuse across self-joins) is structural.
-  */
-case class HyperplaneBucketExpr(child: Expression, nPlanes: Int, dim: Int,
-    seed: Long) extends UnaryExpression with VecArrayInput {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "hyperplane_bucket"
-
-  private lazy val vFloat = arrayIsFloat(child.dataType)
-  @transient private lazy val planes: Array[Array[Double]] =
-    graft.functions.TextFunctions.hyperplanes(nPlanes, dim, seed)
-      .map(_.toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecBridge.bucketKey(input.asInstanceOf[ArrayData], vFloat, planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VecBridge.bucketKey($c, $vFloat, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketExpr =
-    copy(child = newChild)
-}
-
 /** `hyperplane_bands(vec)` — the banded OR-amplified LSH keys
-  * (array<string> of "b-bits"), planes regenerated from primitives as
-  * above (band b uses seed + 1000*b, matching
-  * [[graft.functions.TextFunctions.hyperplaneBands]]).
+  * (array<string> of "b-bits"). The hyperplanes are regenerated
+  * deterministically from (bands, rowsPerBand, dim, seed) — primitive
+  * parameters, so expression equality (and therefore exchange reuse
+  * across self-joins) is structural. Band b uses seed + 1000*b, matching
+  * [[graft.functions.TextFunctions.hyperplaneBands]]; one band is the
+  * single LSH bucket.
   */
 case class HyperplaneBandsExpr(child: Expression, bands: Int,
     rowsPerBand: Int, dim: Int, seed: Long)

@@ -68,15 +68,15 @@ class BigramHistAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = (0 until 300).map(i => s"alpha beta g$i delta ${"rep " * (i % 4)}end")
     val df = spark.createDataset(rows).repartition(8)
       .select(split($"value", " ").as("toks"))
-    for (n <- Seq(1, 2); mod <- Seq(64, 256)) {
-      val hist = df.agg(BigramHistAgg.hashedGramHist($"toks", n, 515151L, mod))
+    for (seed <- Seq(515151L, -515151L); n <- Seq(1, 2); mod <- Seq(64, 256)) {
+      val hist = df.agg(BigramHistAgg.hashedGramHist($"toks", n, seed, mod))
         .collect()(0).getSeq[Long](0)
       val expected = df
-        .select(explode(hashedGramBuckets($"toks", n, 515151L, mod)).as("b"))
+        .select(explode(hashedGramBuckets($"toks", n, seed, mod)).as("b"))
         .groupBy($"b").agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
       val got = hist.zipWithIndex.collect { case (c, b) if c > 0 => b -> c }.toMap
-      assert(got === expected, s"n=$n mod=$mod")
+      assert(got === expected, s"seed=$seed n=$n mod=$mod")
     }
   }
 

@@ -6,7 +6,7 @@ import graft.functions.TextFunctions.toDouble
 
 /** The original higher-order-function forms of cosine and hyperplane LSH,
   * kept as the executable spec that the native expressions
-  * (CosineSimExpr, HyperplaneBucketExpr, HyperplaneBandsExpr) are
+  * (CosineSimExpr, HyperplaneBandsExpr and its one-band bucket) are
   * asserted bit-equal to in VecExprsSpec. Sequential left folds in double
   * precision; inputs are array<float> or array<double>.
   */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextFunctions._
+import graft.plans.HofHashReference.polyHashStrHof
 
 /** The native MinHash/SimHash expressions must be bit-identical to the
   * HOF (`aggregate`) formulation they replaced — every LSH oracle depends
@@ -24,11 +25,11 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The r2 HOF formulation, kept here as the parity reference. */
   private def minHashSigHof(toks: org.apache.spark.sql.Column, k: Int) =
     array((0 until k).map { s =>
-      array_min(transform(toks, t => polyHashStr(t, 0x9e3779b9L * (s + 1))))
+      array_min(transform(toks, t => polyHashStrHof(t, 0x9e3779b9L * (s + 1))))
     }: _*)
 
   private def simHashHof(toks: org.apache.spark.sql.Column) = {
-    val th = transform(toks, t => polyHashStr(t, 0x85ebca6bL))
+    val th = transform(toks, t => polyHashStrHof(t, 0x85ebca6bL))
     (0 until 32).map { b =>
       val vote = aggregate(th, lit(0L),
         (acc, h) => acc + when(pmod(shiftright(h, b), lit(2L)) === 1L, 1L).otherwise(-1L))
@@ -145,19 +146,26 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val weird = Seq(
       "  leading and   multiple   spaces ", "one", "", "a b a b a b",
-      "tab\tsep\nand newline\r\nmix", "x y z x y z x y", "  \t \n ").toDF("text")
+      "tab\tsep\nand newline\r\nmix", "x y z x y z x y", "  \t \n ",
+      "Re: ORDER #A12-b7, qty=003!! x9Y_z... (to: ann@EX.com) -- 42nd").toDF("text")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(50).select($"text").union(weird)
     val gramsHof = when(size(wsHof($"text")) >= 5,
       transform(sequence(lit(1), size(wsHof($"text")) - 4),
         i => array_join(slice(wsHof($"text"), i, lit(5)), " ")))
       .otherwise(array().cast("array<string>"))
+    val alnumHof = filter(split(lower($"text"), "[^a-z0-9]+"), x => length(x) > 0)
+    val alnumGramsHof = when(size(alnumHof) >= 5,
+      transform(sequence(lit(1), size(alnumHof) - 4),
+        i => array_join(slice(alnumHof, i, lit(5)), " ")))
+      .otherwise(array().cast("array<string>"))
     val cmp = docs.select(
         wsTokenCount($"text").as("nat_n"), size(wsHof(lower($"text"))).as("hof_n"),
         wordGrams($"text", 5).as("nat_g"), gramsHof.as("hof_g"),
         wordGramCounts($"text", 5).as("nat_c"),
         gopherStats($"text").as("st"),
-        size(array_distinct(wsHof($"text"))).as("hof_distinct"))
+        size(array_distinct(wsHof($"text"))).as("hof_distinct"),
+        alnumGrams($"text", 5).as("nat_a"), alnumGramsHof.as("hof_a"))
       .collect()
     assert(cmp.nonEmpty)
     cmp.foreach { r =>
@@ -171,6 +179,7 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val st = r.getStruct(5)
       assert(st.getInt(0) == r.getInt(0), "gopher n_words mismatch")
       assert(st.getInt(1) == r.getInt(6), "gopher n_distinct mismatch")
+      assert(r.getSeq[String](7) == r.getSeq[String](8), "alnum_grams mismatch")
     }
   }
 
@@ -193,16 +202,17 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(wsTokenCount($"text").as("n"), wordGrams($"text", 5).as("g"),
-        wordGramCounts($"text", 5).as("c"), gopherStats($"text").as("st"))
+        wordGramCounts($"text", 5).as("c"), gopherStats($"text").as("st"),
+        alnumGrams($"text", 5).as("a"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*("),
       "word-gram family fell out of whole-stage codegen:\n" + p.take(800))
   }
 
-  test("hashed_gram_buckets / hashed_gram_micro_sum match the HOF hashing") {
+  /** Native hashed-gram buckets and micro-sum against the HOF hashing, for one seed. */
+  private def hashedGramParity(seed: Long): Unit = {
     import spark.implicits._
-    val seed = 424242L
     val B = 256
     val table = Array.tabulate(B)(i => i.toLong * 7 - 100)
     val tl = typedLit(table.toSeq)
@@ -210,7 +220,7 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the interpreted formulations the exprs replaced (ta_dsir_weights /
     // ta_lm_perplexity pre-r4): per-char HOF hash per gram
     def bucketHof(c: org.apache.spark.sql.Column) =
-      pmod(polyHashStr(c, seed), lit(B.toLong))
+      pmod(polyHashStrHof(c, seed), lit(B.toLong))
     val bgs = when(size($"toks") >= 2,
       transform(sequence(lit(1), size($"toks") - 1),
         i => concat(element_at($"toks", i), lit(" "), element_at($"toks", i + 1))))
@@ -234,6 +244,11 @@ class TextHashExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getSeq[Long](2) == r.getSeq[Long](3), "bigram buckets mismatch")
       assert(r.getLong(4) == r.getLong(5), "micro-sum mismatch")
     }
+  }
+
+  test("hashed_gram_buckets / hashed_gram_micro_sum match the HOF hashing") {
+    // the negative seed pins pmod semantics at every hash step and bucket
+    Seq(424242L, -424242L).foreach(hashedGramParity)
   }
 
   test("the hashed-gram family stays inside whole-stage codegen") {

@@ -6,11 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextFunctions
 
-/** The native vector expressions (CosineSimExpr, HyperplaneBucketExpr,
-  * HyperplaneBandsExpr) asserted BIT-EQUAL to the higher-order-function
-  * forms they replace, on the regimes the catalog queries hit: float
-  * corpus vectors, double perturbed vectors, and the null/degenerate
-  * edges (empty, zero-norm, length mismatch, null element). Any drift
+/** The native vector expressions (CosineSimExpr, and HyperplaneBandsExpr
+  * whose one-band key is the single LSH bucket) asserted BIT-EQUAL to the
+  * higher-order-function forms they replace, on the regimes the catalog
+  * queries hit: float corpus vectors, double perturbed vectors, and the
+  * null/degenerate edges (empty, zero-norm, length mismatch, null
+  * element). Any drift
   * here would silently break the DuckDB oracle hashes of five catalog
   * entries, so the HOF forms stay in test scope (HofVecReference) as the
   * executable spec.

@@ -68,6 +68,12 @@ def risky(t):
     return t.startswith("DECIMAL(")
 
 
+# Spark `int` against DuckDB `BIGINT` (COUNT, integer sums and lengths
+# come back BIGINT in DuckDB): a standing difference that the value
+# comparison already covers, reported once instead of per query.
+INT_WIDENING = ("INTEGER", "BIGINT")
+
+
 def extras(got, want):
     return f"extra spark={got[len(want):][:1]} extra oracle={want[len(got):][:1]}"
 
@@ -79,6 +85,7 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = o_pass = o_fail = 0
+    widened = []
     for name, sql in sorted(oracle.items()):
         try:
             got_cols, got_types, got_seq = ordered_rows_of(
@@ -91,12 +98,16 @@ def main(sf_dir, out_dir):
             continue
         got, want = sort_rows(got_seq), sort_rows(want_seq)
         flagged = sorted({t for t in got_types + want_types if risky(t)})
-        if got_types != want_types:
-            drift = [(c, a, b) for c, a, b in
-                     zip(got_cols, got_types, want_types) if a != b]
+        drift = [(c, a, b) for c, a, b in
+                 zip(got_cols, got_types, want_types) if a != b]
+        int_only = drift and all((a, b) == INT_WIDENING for _, a, b in drift)
+        if got_types != want_types and not int_only:
             print(f"WARN {name}: type drift {drift}")
-        elif flagged:
-            print(f"WARN {name}: hash-risky terminal types {flagged}")
+        else:
+            if int_only:
+                widened.append(name)
+            if flagged:
+                print(f"WARN {name}: hash-risky terminal types {flagged}")
         if got_cols != want_cols:
             print(f"FAIL {name}: columns spark={got_cols} oracle={want_cols}")
             n_fail += 1
@@ -118,6 +129,9 @@ def main(sf_dir, out_dir):
             o_fail += 1
         else:
             o_pass += 1
+    if widened:
+        print(f"WARN type drift INTEGER->BIGINT only in {len(widened)} queries: "
+              + ", ".join(widened))
     print(f"== {n_pass} pass, {n_fail} fail ==")
     print(f"== ORDERED: {o_pass} pass, {o_fail} fail ==")
     return 1 if n_fail or o_fail else 0
