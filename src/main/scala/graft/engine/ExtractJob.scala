@@ -129,10 +129,10 @@ object ExtractJob {
       /** optional JDBC mirror of the results (K1) — see [[Sinks]] */
       jdbc: Option[Sinks.JdbcConfig] = None)
 
-  /** The one per-turn extraction operator, which the batch job and the
-    * stream both project: `extract_turn` over `text`, a null text read as
-    * "" so that it quarantines as `failed:empty`, as the pure extractor
-    * does. (SQL `extract_turn(NULL)` stays NULL.)
+  /** The one per-turn extraction operator, which the batch job projects:
+    * `extract_turn` over `text`, a null text read as "" so that it
+    * quarantines as `failed:empty`, as the pure extractor does. (SQL
+    * `extract_turn(NULL)` stays NULL.)
     */
   val turnExtract: Column = TextFunctions.extractTurn(coalesce(col("text"), lit("")))
 
@@ -153,6 +153,8 @@ object ExtractJob {
   def extract(spark: SparkSession, turns: DataFrame, salted: Boolean,
       saltBuckets: Int, presorted: Boolean = false,
       lineageAcc: Option[LineageAccumulator] = None): Dataset[ResultRow] = {
+    // checked on the driver: pmod by 0 would fail only inside a task
+    require(!salted || saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
     val withFile = turns
       .select(col("conv_id"), col("turn_idx"), col("text"),
         coalesce(input_file_name(), lit("")).as("input_file"))

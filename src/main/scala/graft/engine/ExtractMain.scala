@@ -11,16 +11,27 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExtractMain <tableDir> <outDir> [--gen nConvs giantScale buckets snapshots] [--salted] [--salt N]")
+    val usage = "usage: ExtractMain <tableDir> <outDir> [--gen nConvs giantScale buckets snapshots] [--salted] [--salt N]"
+    require(args.length >= 2, usage)
     val tableDir = args(0)
     val outDir = args(1)
     val rest = args.drop(2)
-    def intAfter(flag: String, default: Int): Int = {
+    // every argument is checked here, before the session is built
+    def intsAfter(flag: String, n: Int): Option[Seq[Int]] = {
       val i = rest.indexOf(flag)
-      if (i >= 0 && i + 1 < rest.length) rest(i + 1).toInt else default
+      if (i < 0) None
+      else {
+        val v = rest.slice(i + 1, i + 1 + n).flatMap(_.toIntOption).toSeq
+        require(v.length == n, s"$flag takes $n int(s); $usage")
+        Some(v)
+      }
     }
     val salted = rest.contains("--salted")
-    val salt = intAfter("--salt", 16)
+    val salt = intsAfter("--salt", 1).fold(16)(_.head)
+    require(salt >= 1, s"--salt must be >= 1, got $salt; $usage")
+    val gen = intsAfter("--gen", 4)
+    gen.foreach(g => require(g(2) >= 1 && g(3) >= 1,
+      s"--gen buckets and snapshots must be >= 1, got ${g(2)} and ${g(3)}; $usage"))
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -33,12 +44,7 @@ object ExtractMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val gi = rest.indexOf("--gen")
-    if (gi >= 0) {
-      val nConvs = rest(gi + 1).toInt
-      val giant = rest(gi + 2).toInt
-      val buckets = rest(gi + 3).toInt
-      val nSnaps = rest(gi + 4).toInt
+    gen.foreach { case Seq(nConvs, giant, buckets, nSnaps) =>
       val per = math.max(1, nConvs / nSnaps)
       var off = 0
       for (s <- 1 to nSnaps) {

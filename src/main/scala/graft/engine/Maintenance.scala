@@ -38,15 +38,6 @@ object Maintenance {
   def readCurrent(spark: SparkSession, base: String): DataFrame =
     spark.read.parquet(versionDir(base, requireCurrent(base)))
 
-  /** Time travel: read a specific retained version (any v <= current
-    * that vacuum has not yet reclaimed).
-    */
-  def readVersion(spark: SparkSession, base: String, v: Long): DataFrame = {
-    require(Files.exists(Paths.get(versionDir(base, v))),
-      s"version $v not retained under $base (vacuumed or never written)")
-    spark.read.parquet(versionDir(base, v))
-  }
-
   /** Atomic pointer swap: write to a temp file in the same directory,
     * then ATOMIC_MOVE over the pointer. A crash before the move leaves
     * the previous version current; after it, the new one — never a

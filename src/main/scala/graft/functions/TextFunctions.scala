@@ -195,8 +195,10 @@ object TextFunctions {
   /** Sum of a broadcast micro-log table over the hashed word n-grams of
     * a token array (graft.plans.TextHashBridge.hashedGramMicroSum) — the
     * scoring pass of the hashed-feature model family (DSIR weights,
-    * LM-perplexity gate). Bucket = polyHash(gram, seed) % table.length;
-    * the table rides along as one long[] literal.
+    * LM-perplexity gate), whose training pass is the same buckets'
+    * histogram (graft.plans.BigramHistAgg.hashedGramHist). Bucket =
+    * polyHash(gram, seed) % table.length; the table rides along as one
+    * long[] literal.
     */
   def hashedGramMicroSum(toks: Column, n: Int, seed: Long,
       table: Array[Long]): Column = {
@@ -204,16 +206,6 @@ object TextFunctions {
     require(table.nonEmpty, "hashed_gram_micro_sum needs a non-empty table")
     invoke(TextHashBridge, "hashedGramMicroSum", LongType, toks, Literal(n),
       Literal(seed), Literal.fromObject(table), Literal(table.length.toLong))
-  }
-
-  /** Bucket ids of a token array's hashed word n-grams
-    * (graft.plans.TextHashBridge.hashedGramBuckets) — the train-pass
-    * companion of [[hashedGramMicroSum]].
-    */
-  def hashedGramBuckets(toks: Column, n: Int, seed: Long, mod: Long): Column = {
-    require(n >= 1 && mod >= 1, "hashed_gram_buckets needs n >= 1, mod >= 1")
-    invoke(TextHashBridge, "hashedGramBuckets", ArrayType(LongType, containsNull = false),
-      toks, Literal(n), Literal(seed), Literal(mod))
   }
 
   /** [n, sum c_i * micro-ln(c_i)] over the byte histogram

@@ -83,9 +83,10 @@ case object CharBigrams extends DenseHist(128 * 128) {
   * pmod(TextHashBridge.gramHash, mod) — the gram hash the scoring pass
   * uses — with no per-row bucket array; partials merged by vector add.
   * Replaces the explode(hashed_gram_buckets) + groupBy(bucket) model
-  * build, which materialized one row per gram occurrence of the corpus
-  * through a Generate — the histogram computes identical counts with
-  * O(mod) state and no bucket-keyed shuffle.
+  * build (now the test reference GramBucketsReference), which
+  * materialized one row per gram occurrence of the corpus through a
+  * Generate — the histogram computes identical counts with O(mod)
+  * state and no bucket-keyed shuffle.
   */
 case class HashedGrams(n: Int, seed: Long, mod: Int) extends DenseHist(mod) {
   require(n >= 1 && mod >= 1, "hashed_gram_hist needs n >= 1, mod >= 1")

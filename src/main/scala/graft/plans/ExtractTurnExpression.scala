@@ -29,7 +29,7 @@ object ExtractTurnBridge {
 
 /** `extract_turn(text)` — the fused per-turn extractor as a Catalyst
   * scalar expression returning a typed struct: the engine's one
-  * extraction operator, which `ExtractJob` and the stream project.
+  * extraction operator, which `ExtractJob` and the catalog project.
   * Preference path (b) of the operator policy: composes into any
   * expression pipeline (filters/projections around it stay codegen'd and
   * pushdown-able).

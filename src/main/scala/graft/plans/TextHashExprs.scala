@@ -271,22 +271,6 @@ object TextHashBridge {
     sum
   }
 
-  /** Bucket ids of the token array's word n-grams, pmod([[gramHash]],
-    * mod) per gram — the compiled TRAIN-side companion of
-    * [[hashedGramMicroSum]] (the model pass explodes these Longs instead
-    * of interpreting a per-char HOF hash over materialized gram strings).
-    */
-  def hashedGramBuckets(toks: ArrayData, n: Int, seed: Long,
-      mod: Long): ArrayData = {
-    val out = new Array[Any](gramCount(toks, n))
-    var i = 0
-    while (i < out.length) {
-      out(i) = Math.floorMod(gramHash(toks, i, n, seed), mod)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Count of maximal non-whitespace runs — `size(filter(split(text,
     * "\\s+"), length > 0))` as one compiled scan with zero allocations.
     */

@@ -125,12 +125,11 @@ object PipelineQueries {
   /** doc_id, lang, n_tok, nll under the corpus-trained hashed unigram LM
     * (1024 buckets, add-one smoothing, integer micro-log scoring) —
     * the shared model of ta_lm_perplexity (the keep/drop gate) and
-    * ta_ccnet_bucket (the head/middle/tail tertiles). Model pass:
-    * codegen'd bucket ids (hashedGramBuckets) through one
-    * map-side-combined shuffle over a 1024-key space, collected to a
-    * dense driver-side table (8 KiB — broadcast-friendly at any corpus
-    * size); scoring pass: row-local compiled scan (hashedGramMicroSum),
-    * zero data shuffle.
+    * ta_ccnet_bucket (the head/middle/tail tertiles). Model pass: one
+    * bounded-state histogram aggregate over the 1024 buckets
+    * (BigramHistAgg.hashedGramHist), merged to a dense driver-side table
+    * (8 KiB — broadcast-friendly at any corpus size); scoring pass:
+    * row-local compiled scan (hashedGramMicroSum), zero data shuffle.
     */
   private def lmNllFrame(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2292,9 +2291,9 @@ object PipelineQueries {
     // per-doc sum, so the aggregation is order-independent integer math
     // (Spark's shuffle-order double sums would otherwise race the
     // oracle); the only float op is one ln on identical rationals,
-    // rounded at 1e-6 on both engines. Scale shape: the model pass
-    // explodes codegen'd bucket ids (hashed_gram_buckets) and shuffles
-    // a 256-key space with map-side combine; the SCORING pass is
+    // rounded at 1e-6 on both engines. Scale shape: the model pass is
+    // one bounded-state histogram aggregate over the 256 buckets
+    // (BigramHistAgg.hashedGramHist), no explode; the SCORING pass is
     // entirely row-local — one compiled scan (hashed_gram_micro_sum)
     // summing the broadcast micro-log table over each doc's hashed
     // bigrams, no explode, no join-back, zero data shuffle (only the
@@ -2308,10 +2307,9 @@ object PipelineQueries {
     // bucket -> rint(ln p * 1e6), each doc sums its tokens' micro-logs
     // in one compiled scan (hashed_gram_micro_sum), and only the final
     // per-doc average is a rounded double — no float accumulation order
-    // can diverge between engines. Model pass: codegen'd bucket ids
-    // through one map-side-combined shuffle over a 1024-key space;
-    // scoring pass: row-local, zero data shuffle (only the
-    // presentation sort).
+    // can diverge between engines. Model pass: one bounded-state
+    // histogram aggregate over the 1024 buckets; scoring pass:
+    // row-local, zero data shuffle (only the presentation sort).
     "ta_lm_perplexity" -> Entry(
       (s, d) => {
         import s.implicits._

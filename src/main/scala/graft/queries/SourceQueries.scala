@@ -313,15 +313,4 @@ object SourceQueries {
              |  FROM documents)
              |ORDER BY col_name""".stripMargin))
   )
-
-  /** The partitioned-layout frame for PlanSpec's pruning assertion:
-    * written once, read with the pruning predicate.
-    */
-  def partitionedScanForPlan(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val out = tmp("graft-srcrt-planprobe")
-    rd(s, d, "documents")
-      .write.mode("overwrite").partitionBy("source").parquet(out)
-    s.read.parquet(out).filter($"source" === "src3").select($"doc_id")
-  }
 }

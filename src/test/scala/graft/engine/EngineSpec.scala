@@ -76,6 +76,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val salted = engineRows(dir, salted = true)
     assert(unsalted == golden, "unsalted engine output differs from oracle")
     assert(salted == golden, "salted engine output differs from oracle")
+    // a salt bucket count < 1 is refused on the driver, before any plan
+    val turns = TranscriptsTable.readAll(spark, dir)
+    for (bad <- Seq(0, -1))
+      intercept[IllegalArgumentException](
+        ExtractJob.extract(spark, turns, salted = true, saltBuckets = bad))
   }
 
   test("typed view recovers structs from the JSON sink form") {

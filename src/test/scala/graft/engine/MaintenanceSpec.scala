@@ -91,13 +91,12 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     Maintenance.mergeUpsert(spark, base,
       Seq((3L, "c")).toDF("id", "v"), Seq("id"))
     assert(Maintenance.currentVersion(base) === Some(3L))
-    // time travel: v2 readable (and distinct from v3) until vacuumed
-    assert(Maintenance.readVersion(spark, base, 2L).count() === 2L)
+    // v2 stays readable (and distinct from v3) until vacuumed
+    assert(spark.read.parquet(s"$base/v2").count() === 2L)
     // an entry named plain `v` is no version directory: skipped, not parsed
     Files.createDirectories(java.nio.file.Paths.get(s"$base/v"))
     val removed = Maintenance.vacuum(base)
-    assertThrows[IllegalArgumentException](
-      Maintenance.readVersion(spark, base, 2L))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/v2")))
     assert(removed === Seq(1L, 2L))
     // current version intact and fully readable
     assert(Maintenance.readCurrent(spark, base).count() === 3L)

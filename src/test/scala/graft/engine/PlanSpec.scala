@@ -532,7 +532,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partition predicate prunes at the directory level, not post-scan") {
-    val df = graft.queries.SourceQueries.partitionedScanForPlan(spark, sf)
+    val out = java.nio.file.Files.createTempDirectory("graft-plan-partitioned").toString
+    spark.read.parquet(s"$sf/documents.parquet")
+      .write.mode("overwrite").partitionBy("source").parquet(out)
+    val df = spark.read.parquet(out).filter("source = 'src3'").select("doc_id")
     val p = plan(df)
     assert(p.contains("PartitionFilters"), p.take(1500))
     // the source predicate must appear among the partition filters

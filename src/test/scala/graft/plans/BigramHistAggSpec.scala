@@ -64,7 +64,7 @@ class BigramHistAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hashed-gram histogram equals the exploded bucket groupBy, n=1 and n=2") {
     import spark.implicits._
-    import graft.functions.TextFunctions.hashedGramBuckets
+    import GramBucketsReference.hashedGramBuckets
     val rows = (0 until 300).map(i => s"alpha beta g$i delta ${"rep " * (i % 4)}end")
     val df = spark.createDataset(rows).repartition(8)
       .select(split($"value", " ").as("toks"))

@@ -71,16 +71,12 @@ class ExtractTurnExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = df.select(et.getField("status")).as[String].collect()
     assert(rows.count(_ == "failed:empty") == 1) // the empty string
     assert(rows.count(_ == null) == 1)           // null propagates null
-    // the batch job and the stream read a null text as "": failed:empty
+    // the batch job reads a null text as "": failed:empty
     val turns = Seq(Some(""), None, Some("x")).zipWithIndex
       .map { case (t, i) => ("c", i, t) }.toDF("conv_id", "turn_idx", "text")
-      .withColumn("ts", current_timestamp())
     val want = Seq("failed:empty", "failed:empty", "ok")
     val batch = graft.engine.ExtractJob.extract(spark, turns, salted = false, 4)
       .collect().sortBy(_.turn_idx).map(_.status).toSeq
-    val stream = graft.streaming.StreamingExtract.extractStream(spark, turns)
-      .orderBy("turn_idx").select("status").as[String].collect().toSeq
     assert(batch == want, s"ExtractJob.extract statuses $batch")
-    assert(stream == want, s"extractStream statuses $stream")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextFunctions._
+import graft.plans.GramBucketsReference.hashedGramBuckets
 import graft.plans.HofHashReference.polyHashStrHof
 
 /** The native MinHash/SimHash expressions must be bit-identical to the
