@@ -71,12 +71,10 @@ object BenchWorker {
       // bench table). Size so each sorted run stays ~10-20 MB; at
       // production scale size by bytes (~128 MB) or let AQE coalesce.
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          (if (salted) 16 * totalCores else totalCores).toString).toInt)
+        if (salted) 16 * totalCores else totalCores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"))
+      .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "0")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import graft.engine.TranscriptsTable
+import graft.engine.{LocalFiles, TranscriptsTable}
 
 /** Dev probes around the catalog and the scaling gate:
   * `sbt -batch "runMain graft.Probe <subcommand> [args]"`, subcommands in
@@ -262,7 +262,7 @@ object Probe {
     val skipAt100 = Set("sp_minhash_lsh_all")
 
     val dirs: Map[Int, String] = factors.map { f =>
-      val d = Files.createTempDirectory(s"graft-scale-${f}x").toString
+      val d = LocalFiles.scratchDir(s"graft-scale-${f}x")
       val t0 = System.nanoTime()
       buildScaled(spark, base, d, f)
       System.err.println(f"[scale] built ${f}x corpus in ${(System.nanoTime() - t0) / 1e9}%.1fs")

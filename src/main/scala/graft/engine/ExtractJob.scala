@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   GraftColumnBridge, SparkSession}
@@ -125,9 +125,7 @@ object ExtractJob {
       outDir: String,
       runId: String = "run-0",
       salted: Boolean = false,
-      saltBuckets: Int = 16,
-      /** optional JDBC mirror of the results (K1) — see [[Sinks]] */
-      jdbc: Option[Sinks.JdbcConfig] = None)
+      saltBuckets: Int = 16)
 
   /** The one per-turn extraction operator, which the batch job projects:
     * `extract_turn` over `text`, a null text read as "" so that it
@@ -273,32 +271,13 @@ object ExtractJob {
     val resPath = s"${cfg.outDir}/results/snapshot=${snap.id}"
     Sinks.writeParquet(results.toDF(), resPath)
     val stats = acc.value
-    // Default mirror is AT-LEAST-ONCE: a crash between this append and
-    // the commit marker re-runs the snapshot and re-appends. Rows carry
-    // snapshot_id so a consumer (or a MERGE-capable load job) can dedupe
-    // on (snapshot_id, conv_id, turn_idx); plain JDBC append cannot be
-    // exactly-once without sink-side transactions. The parquet system of
-    // record stays exactly-once via overwrite + marker. `staged` mirrors
-    // into a per-snapshot staging table with overwrite-on-replay instead,
-    // making consumer-side dedup optional (Sinks.mirrorToJdbcStaged).
-    // (The mirror re-reads the written parquet — config-gated, and the
-    // mirror needs the durably committed rows, not the plan.)
-    cfg.jdbc.foreach { j =>
-      val withSnap = spark.read.parquet(resPath).withColumn("snapshot_id",
-        org.apache.spark.sql.functions.lit(snap.id))
-      if (j.staged) Sinks.mirrorToJdbcStaged(withSnap, j, snap.id)
-      else Sinks.mirrorToJdbc(withSnap, j)
-    }
     lineageFromStats(spark, stats, cfg.runId, snap.id)
       .write.mode("overwrite").parquet(s"${cfg.outDir}/lineage/snapshot=${snap.id}")
     val n = stats.valuesIterator.map(_.turnCount).sum
-    // temp+rename commit record — the resume checkpoint
+    // the resume checkpoint
     val marker = commitMarker(cfg.outDir, snap.id)
     Files.createDirectories(marker.getParent)
-    val tmp = Paths.get(marker.toString + ".tmp")
-    Files.writeString(tmp, s"""{"snapshot":${snap.id},"turns":$n}""")
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    LocalFiles.atomicWrite(marker, s"""{"snapshot":${snap.id},"turns":$n}""")
     n
   }
 

@@ -1,7 +1,8 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Table-maintenance operators for the parquet system of record:
@@ -38,17 +39,12 @@ object Maintenance {
   def readCurrent(spark: SparkSession, base: String): DataFrame =
     spark.read.parquet(versionDir(base, requireCurrent(base)))
 
-  /** Atomic pointer swap: write to a temp file in the same directory,
-    * then ATOMIC_MOVE over the pointer. A crash before the move leaves
-    * the previous version current; after it, the new one — never a
-    * partial state.
+  /** Atomic pointer swap ([[LocalFiles.atomicWrite]]): a crash before
+    * the rename leaves the previous version current; after it, the new
+    * one — never a partial state.
     */
-  private def commitVersion(base: String, v: Long): Unit = {
-    val tmp = Paths.get(base, s"_VERSION.tmp.$v")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, pointerPath(base),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def commitVersion(base: String, v: Long): Unit =
+    LocalFiles.atomicWrite(pointerPath(base), v.toString)
 
   /** Create the table as version 1. */
   def initTable(spark: SparkSession, base: String, df: DataFrame): Unit = {
@@ -112,20 +108,11 @@ object Maintenance {
       if (n.matches("v\\d+")) {
         val v = n.drop(1).toLong
         if (v < cur) {
-          deleteRecursively(p)
+          JavaUtils.deleteRecursively(p.toFile)
           removed += v
         }
       }
     } finally st.close()
     removed.toSeq.sorted
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val st = Files.list(p)
-      try st.iterator().forEachRemaining(deleteRecursively)
-      finally st.close()
-    }
-    Files.delete(p)
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,11 +72,8 @@ object TranscriptsTable {
   }
 
   private def writeManifest(baseDir: String, snaps: Seq[SnapshotRef]): Unit = {
-    val tmp = Paths.get(manifestPath(baseDir) + ".tmp")
     Files.createDirectories(Paths.get(baseDir))
-    Files.writeString(tmp, renderManifest(baseDir, snaps))
-    Files.move(tmp, Paths.get(manifestPath(baseDir)),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    LocalFiles.atomicWrite(Paths.get(manifestPath(baseDir)), renderManifest(baseDir, snaps))
   }
 
   /** Distributed snapshot write: conversations are generated ON EXECUTORS

@@ -837,7 +837,11 @@ object Extract {
   /** Answer a query bank from the document's KV anchors: a query is
     * answered by the first anchor whose normalized key equals the query
     * key case-insensitively. Duplicate query keys overwrite (Python dict
-    * assignment order, Facesheet.py:168/175).
+    * assignment order, Facesheet.py:168/175). The reference splits a bank
+    * past its API's 15-query cap into calls whose answers land in one
+    * dict (queryCodes/AttemptedMergeQueryCodes:49-52); an answer depends
+    * only on its key and the text, so that split cannot change the map
+    * and one pass over the whole bank is the same.
     */
   def queryBank(queries: Seq[String], text: String): Map[String, String] = {
     val byKey = anchorLookup(text)
@@ -851,8 +855,8 @@ object Extract {
 
   /** The reference's MERGED-LIST bank form (queryCodes/
     * AttemptedMergeQueryCodes:88-112): queries carry an (text, alias)
-    * pair, batches of `batchSize` run in order, every batch's
-    * (query text, alias, answer) triples are concatenated and
+    * pair; the (query text, alias, answer) triples of the whole bank, in
+    * order (the concatenation of the reference's batches), are
     * deduplicated on the EXACT triple (:95-100 — a repeated query with
     * the same alias and same answer is kept once; a differing answer
     * would keep both), then the kept triples are sorted by
@@ -862,12 +866,12 @@ object Extract {
     * sort preserves their relative order). Unanswered queries carry ""
     * (the engine's uniform convention, same as [[queryBank]]).
     */
-  def queryBankMerged(queries: Seq[(String, String)], text: String,
-      batchSize: Int = 15): Vector[(String, String, String)] = {
+  def queryBankMerged(queries: Seq[(String, String)],
+      text: String): Vector[(String, String, String)] = {
     val byKey = anchorLookup(text)
     val processed = scala.collection.mutable.HashSet.empty[(String, String, String)]
     val out = Vector.newBuilder[(String, String, String)]
-    for (batch <- queries.grouped(batchSize); (q, alias) <- batch) {
+    for ((q, alias) <- queries) {
       val key = queryKey(q)
       val triple = (q, alias, byKey.getOrElse(normalizeKey(key).toLowerCase, ""))
       if (processed.add(triple)) out += triple
@@ -877,22 +881,6 @@ object Extract {
     val order = queries.zipWithIndex.map { case ((_, a), i) => a -> i }.toMap
     out.result().sortBy(t => order.getOrElse(t._2, Int.MaxValue))
   }
-
-  /** B1 batching for banks past the per-call cap: the reference's API
-    * rejects >15 queries per request, so banks are split into batches of
-    * `batchSize` (queryCodes/AttemptedMergeQueryCodes:49-52) and each
-    * batch's answers land in the shared document_data dict. Merge order:
-    * later batches overwrite earlier ones per derived key — Python dict
-    * assignment (finalcodes/Facesheet.py:168,175); the reference's
-    * triple-dedup variant (AttemptedMergeQueryCodes:95-100) differs only
-    * when two identical query TEXTS answer differently, which cannot
-    * happen against one document.
-    */
-  def queryBankBatched(queries: Seq[String], text: String,
-      batchSize: Int = 15): Map[String, String] =
-    queries.grouped(batchSize)
-      .map(batch => queryBank(batch, text))
-      .foldLeft(Map.empty[String, String])(_ ++ _)
 
   // -------------------------------------------------------------------------
   // R8 field bank with "<Field> not found" defaults — the Lauren-style
@@ -1151,17 +1139,26 @@ object Extract {
       rowIds(i) = r
       i += 1
     }
+    val colOf = xClusters(spans, colGap)
+    byY.indices.map(i => (rowIds(i), colOf(byY(i).x), byY(i).text))
+      .sortBy(t => (t._1, t._2, t._3))
+  }
+
+  /** Column ids from the page's x profile: the distinct x positions,
+    * sorted, start a new cluster wherever the gap to the previous one
+    * exceeds `gap`; each x maps to its cluster's rank.
+    */
+  private def xClusters(spans: Seq[PosSpan], gap: Double): scala.collection.Map[Double, Int] = {
     val xs = spans.map(_.x).distinct.sorted
     val colOf = scala.collection.mutable.HashMap.empty[Double, Int]
     var c = 0
     var j = 0
     while (j < xs.length) {
-      if (j > 0 && xs(j) - xs(j - 1) > colGap) c += 1
+      if (j > 0 && xs(j) - xs(j - 1) > gap) c += 1
       colOf(xs(j)) = c
       j += 1
     }
-    byY.indices.map(i => (rowIds(i), colOf(byY(i).x), byY(i).text))
-      .sortBy(t => (t._1, t._2, t._3))
+    colOf
   }
 
   /** Anchored field-value SPANS: for every `Key: value` line, the
@@ -1278,15 +1275,7 @@ object Extract {
     */
   def readingOrder(spans: Seq[PosSpan], colGap: Double = 0.3): Seq[(Int, String)] = {
     if (spans.isEmpty) return Seq.empty
-    val xs = spans.map(_.x).distinct.sorted
-    val colOf = scala.collection.mutable.HashMap.empty[Double, Int]
-    var c = 0
-    var j = 0
-    while (j < xs.length) {
-      if (j > 0 && xs(j) - xs(j - 1) > colGap) c += 1
-      colOf(xs(j)) = c
-      j += 1
-    }
+    val colOf = xClusters(spans, colGap)
     spans.sortBy(s => (colOf(s.x), s.y, s.x, s.text))
       .zipWithIndex.map { case (s, i) => (i, s.text) }
   }

@@ -58,8 +58,8 @@ object OpQueries {
   /** The reference's two 15-query facesheet banks verbatim
     * (finalcodes/Facesheet.py:104-120 and :126-142, including the
     * misspelled "Garuntor"/"Refering"/"verifiaction" aliases), plus a
-    * 31st query whose derived key duplicates "MRN" — exercising the
-    * >15-per-call batching split AND the duplicate-derived-key overwrite.
+    * 31st query whose derived key duplicates "MRN" — a bank past the
+    * reference's 15-per-call cap, with a duplicate-derived-key overwrite.
     */
   private val Facesheet15Queries: Seq[String] = Seq(
     "What is the Patient Name?",
@@ -95,10 +95,9 @@ object OpQueries {
     "Tell me the MRN?")
 
   /** InsuranceCard1's 15-query bank verbatim (finalcodes/
-    * InsuranceCard1.py:92-107) — EXACTLY the per-call cap, so the batched
-    * path must keep it as ONE call. The first query carries no "?" (the
-    * reference's own text), exercising the no-question-mark arm of key
-    * derivation.
+    * InsuranceCard1.py:92-107) — exactly the reference's per-call cap.
+    * The first query carries no "?" (the reference's own text),
+    * exercising the no-question-mark arm of key derivation.
     */
   private[graft] val Insurance15Queries: Seq[String] = Seq(
     "What is the Member Name",
@@ -624,88 +623,54 @@ object OpQueries {
       }),
 
     // KV0 at reference breadth: the full 30-query facesheet bank (both
-    // 15-query calls) + a duplicate-derived-key query, answered through
-    // the batched path (batches of 15 — the reference API cap). Gates:
-    // 31 queries -> 30 keys (duplicate "MRN" overwrites with the same
-    // anchor answer), batching drops nothing past query 15, unanswered
+    // of the reference's 15-query calls) + a duplicate-derived-key query.
+    // Gates: 31 queries -> 30 keys (duplicate "MRN" overwrites with the
+    // same anchor answer), nothing past query 15 is dropped, unanswered
     // keys stay as "" and drive A1 confidence (10 answered / 30).
-    "q_bank_facesheet15" -> Entry(
-      (s, d) => {
-        import s.implicits._
-        val first = element_at(typedLit(Kv4Firsts), (pmod($"doc_id", lit(5)) + 1).cast("int"))
-        val last = element_at(typedLit(Kv4Lasts), (pmod($"doc_id", lit(7)) + 1).cast("int"))
-        val gFirst = element_at(typedLit(Kv4Firsts), (pmod($"doc_id" + 1, lit(5)) + 1).cast("int"))
-        val gLast = element_at(typedLit(Kv4Lasts), (pmod($"doc_id" + 3, lit(7)) + 1).cast("int"))
-        val payload = concat(
+    "q_bank_facesheet15" -> bankEntry(
+      Facesheet15Queries,
+      {
+        val first = element_at(typedLit(Kv4Firsts), (pmod(col("doc_id"), lit(5)) + 1).cast("int"))
+        val last = element_at(typedLit(Kv4Lasts), (pmod(col("doc_id"), lit(7)) + 1).cast("int"))
+        val gFirst = element_at(typedLit(Kv4Firsts), (pmod(col("doc_id") + 1, lit(5)) + 1).cast("int"))
+        val gLast = element_at(typedLit(Kv4Lasts), (pmod(col("doc_id") + 3, lit(7)) + 1).cast("int"))
+        concat(
           lit("FACESHEET\nPatient Name: "), upper(last), lit(", "), upper(first),
-          lit("\nPatient Date of Birth: "), dateCol($"doc_id"),
+          lit("\nPatient Date of Birth: "), dateCol(col("doc_id")),
           lit("\nPatient Phone Number: ("),
-          (lit(200) + pmod($"doc_id", lit(700))).cast("string"), lit(") 555-"),
-          lpad(pmod($"doc_id", lit(10000)).cast("string"), 4, "0"),
-          lit("\nMRN: "), (lit(1000000) + $"doc_id").cast("string"),
+          (lit(200) + pmod(col("doc_id"), lit(700))).cast("string"), lit(") 555-"),
+          lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
+          lit("\nMRN: "), (lit(1000000) + col("doc_id")).cast("string"),
           lit("\nEncounter Date: 07/13/2024"),
           lit("\nPatient Address: "),
-          (lit(100) + pmod($"doc_id", lit(900))).cast("string"), lit(" Oak St"),
-          lit("\nPatient insurance provider: Prov"), pmod($"doc_id", lit(5)).cast("string"),
+          (lit(100) + pmod(col("doc_id"), lit(900))).cast("string"), lit(" Oak St"),
+          lit("\nPatient insurance provider: Prov"), pmod(col("doc_id"), lit(5)).cast("string"),
           lit("\nHospital Account number: H"),
-          (lit(50000) + pmod($"doc_id", lit(40000))).cast("string"),
+          (lit(50000) + pmod(col("doc_id"), lit(40000))).cast("string"),
           lit("\nGaruntor Name: "), gFirst, lit(" "), gLast,
           lit("\nGaruntor Phone number: (300) 555-0100"))
-        // output-order exchange FIRST, on the narrow (doc_id) scan: a
-        // terminal orderBy above the extractor re-executes the whole
-        // extraction for range-partition sampling (RangePartitioner
-        // consumes every child partition to sketch bounds); sorting the
-        // scan before the 1:1 order-preserving mapPartitions yields the
-        // same globally ordered output with the extractor run ONCE.
-        val df = rd(s, d, "documents").select($"doc_id").orderBy($"doc_id")
-          .select($"doc_id", payload.as("p"))
-        df.select(col("doc_id").cast("long"), col("p")).as[(Long, String)]
-          .mapPartitions(_.map { case (id, p) =>
-            val dd = Extract.queryBankBatched(Facesheet15Queries, p)
-            (id, dd.size, Extract.fieldsToJson(dd),
-              String.valueOf(math.rint(Extract.confidenceA1(dd) * 1e6) / 1e6))
-          })
-          .toDF("doc_id", "n_keys", "document_data", "confidence")
       },
-      Some {
-        val firstSql = s"($sqlKv4Firsts)[doc_id % 5 + 1]"
-        val lastSql = s"($sqlKv4Lasts)[doc_id % 7 + 1]"
-        val gFirstSql = s"($sqlKv4Firsts)[(doc_id + 1) % 5 + 1]"
-        val gLastSql = s"($sqlKv4Lasts)[(doc_id + 3) % 7 + 1]"
-        val answered = Map(
-          "Patient Name" -> s"upper($lastSql)||', '||upper($firstSql)",
-          "Patient Date of Birth" -> sqlDate,
-          "Patient Phone Number" ->
-            "'('||CAST(200 + doc_id % 700 AS VARCHAR)||') 555-'||lpad(CAST(doc_id % 10000 AS VARCHAR),4,'0')",
-          "MRN" -> "CAST(1000000 + doc_id AS VARCHAR)",
-          "Encounter Date" -> "'07/13/2024'",
-          "Patient Address" -> "CAST(100 + doc_id % 900 AS VARCHAR)||' Oak St'",
-          "Patient insurance provider" -> "'Prov'||CAST(doc_id % 5 AS VARCHAR)",
-          "Hospital Account number" -> "'H'||CAST(50000 + doc_id % 40000 AS VARCHAR)",
-          "Garuntor Name" -> s"$gFirstSql||' '||$gLastSql",
-          "Garuntor Phone number" -> "'(300) 555-0100'")
-        // keys sorted by char code — exactly fieldsToJson's sortBy(_._1)
-        val keys = Facesheet15Queries.map(Extract.queryKey).distinct.sorted
-        val jsonSql = keys.map { k =>
-          answered.get(k) match {
-            case Some(v) => s"'\"$k\":\"'||$v||'\"'"
-            case None    => s"""'"$k":""'"""
-          }
-        }.mkString("'{'||", "||','||", "||'}'")
-        s"""SELECT doc_id, ${keys.size} AS n_keys,
-           |  $jsonSql AS document_data,
-           |  '0.333333' AS confidence
-           |FROM documents ORDER BY doc_id""".stripMargin
-      }),
+      Map(
+        "Patient Name" -> s"upper(($sqlKv4Lasts)[doc_id % 7 + 1])||', '||upper(($sqlKv4Firsts)[doc_id % 5 + 1])",
+        "Patient Date of Birth" -> sqlDate,
+        "Patient Phone Number" ->
+          "'('||CAST(200 + doc_id % 700 AS VARCHAR)||') 555-'||lpad(CAST(doc_id % 10000 AS VARCHAR),4,'0')",
+        "MRN" -> "CAST(1000000 + doc_id AS VARCHAR)",
+        "Encounter Date" -> "'07/13/2024'",
+        "Patient Address" -> "CAST(100 + doc_id % 900 AS VARCHAR)||' Oak St'",
+        "Patient insurance provider" -> "'Prov'||CAST(doc_id % 5 AS VARCHAR)",
+        "Hospital Account number" -> "'H'||CAST(50000 + doc_id % 40000 AS VARCHAR)",
+        "Garuntor Name" -> s"($sqlKv4Firsts)[(doc_id + 1) % 5 + 1]||' '||($sqlKv4Lasts)[(doc_id + 3) % 7 + 1]",
+        "Garuntor Phone number" -> "'(300) 555-0100'"),
+      confidence = "0.333333"),
 
     // KV0 at reference breadth, remaining doctype banks. Shared gate
-    // shape (bankEntry): the REAL batched bank runs per doc on Spark,
-    // the oracle reconstructs the exact sorted-key JSON; any drift in
-    // key derivation, batching, anchor lookup or A1 confidence breaks
-    // the hash compare.
+    // shape (bankEntry): the REAL bank runs per doc on Spark, the oracle
+    // reconstructs the exact sorted-key JSON; any drift in key
+    // derivation, anchor lookup or A1 confidence breaks the hash compare.
 
     // InsuranceCard1's 15-query bank (InsuranceCard1.py:92-107) —
-    // EXACTLY the per-call cap: one batch, no split; the no-"?" query
+    // exactly the reference's per-call cap; the no-"?" query
     // ("What is the Member Name") derives its key without truncation.
     // 9 of 15 answered -> A1 = 0.6.
     "q_bank_insurance15" -> bankEntry(
@@ -737,12 +702,12 @@ object OpQueries {
         "Generic Copay" -> "'$'||CAST(5 + doc_id % 20 AS VARCHAR)"),
       confidence = "0.6"),
 
-    // Prescription1's batched 15+2 bank (Prescription1.py:104-119,
-    // :126-128): two calls like the reference's two analyze_document
-    // invocations; typo keys ("Memeber Sex", "Presciber") are preserved
-    // verbatim — key derivation is textual, the typos ARE the field
-    // names. Cross-batch merge lands "Supply Quantity" next to batch-1's
-    // "Supply". 10 of 17 answered -> A1 = 0.588235.
+    // Prescription1's 15+2 bank (Prescription1.py:104-119, :126-128),
+    // which the reference sends as two analyze_document calls; typo keys
+    // ("Memeber Sex", "Presciber") are preserved verbatim — key
+    // derivation is textual, the typos ARE the field names. Query 17
+    // ("Supply Quantity") lands next to query 15's "Supply".
+    // 10 of 17 answered -> A1 = 0.588235.
     "q_bank_rx17" -> bankEntry(
       Prescription17Queries,
       {
@@ -776,7 +741,7 @@ object OpQueries {
         "Supply Quantity" -> "CAST(1 + doc_id % 6 AS VARCHAR)"),
       confidence = "0.588235"),
 
-    // BreastPump's 9-query bank (BreastPump.py:110-119): single batch,
+    // BreastPump's 9-query bank (BreastPump.py:110-119):
     // 6 of 9 answered -> A1 = 0.666667.
     "q_bank_pump9" -> bankEntry(
       Pump9Queries,
@@ -807,12 +772,12 @@ object OpQueries {
     // InsuranceCard2/Prescription2's shared 11-query bank — BOTH forms:
     // document_data keyed by query text (InsuranceCard2.py:138-151,
     // 7 of 11 answered -> A1 = 7/11) AND the merged-triple form with an
-    // exact duplicate of the first query appended in a later batch
-    // (batchSize 6 -> two batches), pinning AttemptedMergeQueryCodes'
-    // (text, alias, answer) triple-dedup (:95-100 — the identical
-    // re-answer is dropped) and its alias-LAST-position sort (:110-112 —
-    // the duplicate alias "clientname" sends both Member triples to the
-    // END of the merged list, stable between them).
+    // exact duplicate of the first query appended at the end, pinning
+    // AttemptedMergeQueryCodes' (text, alias, answer) triple-dedup
+    // (:95-100 — the identical re-answer is dropped) and its
+    // alias-LAST-position sort (:110-112 — the duplicate alias
+    // "clientname" sends both Member triples to the END of the merged
+    // list, stable between them).
     "q_bank_insurance11" -> Entry(
       (s, d) => {
         import s.implicits._
@@ -833,8 +798,8 @@ object OpQueries {
         df.select(col("doc_id").cast("long"), col("p")).orderBy(col("doc_id"))
           .as[(Long, String)]
           .mapPartitions(_.map { case (id, p) =>
-            val dd = Extract.queryBankBatched(texts, p)
-            val merged = Extract.queryBankMerged(mergedBank, p, batchSize = 6)
+            val dd = Extract.queryBank(texts, p)
+            val merged = Extract.queryBankMerged(mergedBank, p)
               .map { case (_, alias, ans) => s"$alias=$ans" }.mkString("; ")
             (id, dd.size, Extract.fieldsToJson(dd),
               String.valueOf(math.rint(Extract.confidenceA1(dd) * 1e6) / 1e6),
@@ -1155,9 +1120,9 @@ object OpQueries {
   )
 
   /** Shared gate shape for the reference query banks: Spark runs the
-    * REAL batched bank ([[Extract.queryBankBatched]], batches of 15 — the
-    * reference API cap) over a constructed payload; the oracle rebuilds
-    * the exact sorted-key JSON from `answeredSql` (missing keys -> "").
+    * REAL bank ([[Extract.queryBank]]) over a constructed payload; the
+    * oracle rebuilds the exact sorted-key JSON from `answeredSql`
+    * (missing keys -> "").
     * `confidence` is the A1 value as `String.valueOf` renders it.
     */
   private def bankEntry(bank: Seq[String], payload: => Column,
@@ -1175,7 +1140,7 @@ object OpQueries {
         df.select(col("doc_id").cast("long"), col("p")).orderBy(col("doc_id"))
           .as[(Long, String)]
           .mapPartitions(_.map { case (id, p) =>
-            val dd = Extract.queryBankBatched(bank, p)
+            val dd = Extract.queryBank(bank, p)
             (id, dd.size, Extract.fieldsToJson(dd),
               String.valueOf(math.rint(Extract.confidenceA1(dd) * 1e6) / 1e6))
           })

@@ -1,9 +1,8 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.LocalFiles
 
 /** Source/sink FORMAT coverage beyond parquet: JSONL and CSV, the two
   * interchange formats a corpus actually arrives in (crawler dumps are
@@ -23,9 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object SourceQueries {
   import Q._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   val entries: Seq[(String, Entry)] = Seq(
 
@@ -87,7 +83,7 @@ object SourceQueries {
     "src_jsonl_roundtrip" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-jsonl")
+        val out = LocalFiles.scratchDir("graft-srcrt-jsonl")
         rd(s, d, "documents")
           .select($"doc_id", $"source", $"n_chars", $"text")
           .write.mode("overwrite").json(out)
@@ -105,7 +101,7 @@ object SourceQueries {
     "src_csv_roundtrip" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-csv")
+        val out = LocalFiles.scratchDir("graft-srcrt-csv")
         rd(s, d, "documents")
           .select($"doc_id", $"source", $"n_chars", md5($"text").as("h"))
           .write.mode("overwrite").option("header", "true").csv(out)
@@ -126,7 +122,7 @@ object SourceQueries {
     "src_orc_roundtrip" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-orc")
+        val out = LocalFiles.scratchDir("graft-srcrt-orc")
         rd(s, d, "documents")
           .select($"doc_id", $"source", $"n_chars", $"text")
           .write.mode("overwrite").orc(out)
@@ -145,7 +141,7 @@ object SourceQueries {
     "src_parquet_zstd_roundtrip" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-zstd")
+        val out = LocalFiles.scratchDir("graft-srcrt-zstd")
         rd(s, d, "documents")
           .select($"doc_id", $"source", $"n_chars", $"text")
           .write.mode("overwrite").option("compression", "zstd").parquet(out)
@@ -167,7 +163,7 @@ object SourceQueries {
     "src_partitioned_pruning" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-part")
+        val out = LocalFiles.scratchDir("graft-srcrt-part")
         rd(s, d, "documents")
           .write.mode("overwrite").partitionBy("source").parquet(out)
         s.read.parquet(out)
@@ -189,7 +185,7 @@ object SourceQueries {
     "src_jsonl_corrupt_permissive" -> Entry(
       (s, d) => {
         import s.implicits._
-        val out = tmp("graft-srcrt-corrupt")
+        val out = LocalFiles.scratchDir("graft-srcrt-corrupt")
         rd(s, d, "documents")
           .select(
             when(pmod($"doc_id", lit(9)) === 4, lit("{broken json"))

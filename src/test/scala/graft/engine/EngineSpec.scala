@@ -22,8 +22,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-test").toString
+  private def tmpDir(): String = LocalFiles.scratchDir("graft-test")
 
   /** Canonical comparable form of one extracted row — the sink-boundary
     * JSON form, i.e. the exact strings the results table stores.
@@ -58,7 +57,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir()
     TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 5, 8, buckets = 2)
     val before = TranscriptsTable.readAll(spark, dir).count()
-    val moved = dir + "-moved"
+    val moved = tmpDir() + "/moved"
     Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(moved))
     val snaps = TranscriptsTable.readManifest(moved)
     assert(snaps.nonEmpty && snaps.forall(_.path.startsWith(moved)),

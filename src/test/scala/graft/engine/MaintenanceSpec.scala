@@ -25,7 +25,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshBase(): String =
-    Files.createTempDirectory("graft-maint").toString + "/results"
+    LocalFiles.scratchDir("graft-maint") + "/results"
 
   test("mergeUpsert replaces matched keys and inserts new ones") {
     import spark.implicits._
@@ -103,7 +103,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/v1")))
     assert(Files.exists(java.nio.file.Paths.get(s"$base/v")))
     // no _VERSION pointer: the same clear error readCurrent gives
-    val empty = Files.createTempDirectory("graft-maint").toString
+    val empty = LocalFiles.scratchDir("graft-maint")
     assertThrows[IllegalStateException](Maintenance.compact(spark, empty, 1L << 20))
     assertThrows[IllegalStateException](Maintenance.vacuum(empty))
   }

@@ -532,7 +532,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partition predicate prunes at the directory level, not post-scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft-plan-partitioned").toString
+    val out = LocalFiles.scratchDir("graft-plan-partitioned")
     spark.read.parquet(s"$sf/documents.parquet")
       .write.mode("overwrite").partitionBy("source").parquet(out)
     val df = spark.read.parquet(out).filter("source = 'src3'").select("doc_id")
@@ -576,7 +576,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("presorted bucketed extract is a narrow plan: zero shuffles") {
-    val dir = java.nio.file.Files.createTempDirectory("plan-test").toString
+    val dir = LocalFiles.scratchDir("plan-test")
     TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 5, 8, buckets = 2)
     val turns = TranscriptsTable.readAll(spark, dir)
     val ds = ExtractJob.extract(spark, turns, salted = false, 4, presorted = true)

@@ -10,7 +10,8 @@ import graft.extract.Extract
   * q_bank_insurance15 / q_bank_rx17 / q_bank_pump9 gate the distributed
   * path against DuckDB; these tests pin the bank semantics the oracles
   * assume — key derivation (incl. the no-"?" query and typo keys),
-  * batching boundaries, answered/empty splits and A1 confidence.
+  * banks at and past the reference's 15-per-call cap, answered/empty
+  * splits and A1 confidence.
   */
 class BankSpec extends AnyFunSuite {
 
@@ -19,7 +20,7 @@ class BankSpec extends AnyFunSuite {
       "INSURANCE CARD\nMember Name: LI, ANA\nMember ID: M100007\n" +
         "PCP: Dr Novak\nEffective Date: 08/08/1987\nGroup No.: G7\n" +
         "Plan Type: HMO1\nBIN: 610007\nRx PCN: PCN0\nGeneric Copay: $12"
-    val dd = Extract.queryBankBatched(OpQueries.Insurance15Queries, payload)
+    val dd = Extract.queryBank(OpQueries.Insurance15Queries, payload)
     assert(dd.size == 15)
     // no-"?" query derives its key without truncation
     assert(dd("Member Name") == "LI, ANA")
@@ -29,8 +30,6 @@ class BankSpec extends AnyFunSuite {
     assert(dd("phone number of the PCP") == "") // mid-string "the " kept
     assert(dd.valuesIterator.count(_.nonEmpty) == 9)
     assert(Extract.confidenceA1(dd) == 0.6)
-    // at exactly the cap the batched path is ONE call
-    assert(dd == Extract.queryBank(OpQueries.Insurance15Queries, payload))
   }
 
   test("rx17: 15+2 batched like the reference's two calls, typo keys kept") {
@@ -39,12 +38,12 @@ class BankSpec extends AnyFunSuite {
         "Member DOB: 03/03/1982\nMember Phone: (202) 555-0002\n" +
         "Member ID: R200002\nPresciber: Dr Kim\nGroup Name: Grp2\n" +
         "Rx GRP: RXG2\nSupply: pump kit 2\nSupply Quantity: 3"
-    val dd = Extract.queryBankBatched(OpQueries.Prescription17Queries, payload)
+    val dd = Extract.queryBank(OpQueries.Prescription17Queries, payload)
     assert(dd.size == 17)
     // the typos ARE the field names (textual key derivation)
     assert(dd("Memeber Sex") == "F")
     assert(dd("Presciber") == "Dr Kim")
-    // batch 2 (queries 16-17) merges next to batch 1's "Supply"
+    // the reference's second call (queries 16-17) lands next to "Supply"
     assert(dd("Supply") == "pump kit 2")
     assert(dd("Supply Quantity") == "3")
     assert(dd("Supply Duration") == "")
@@ -60,7 +59,7 @@ class BankSpec extends AnyFunSuite {
         "Patient Phone Number: (202) 555-0002\n" +
         "Patient Date of Birth: 03/03/1982\nPhysician Name: Dr Kim\n" +
         "NPI Number: 1500000002\nInfant Name: Baby John"
-    val dd = Extract.queryBankBatched(OpQueries.Pump9Queries, payload)
+    val dd = Extract.queryBank(OpQueries.Pump9Queries, payload)
     assert(dd.size == 9)
     assert(dd("Mother Name") == "Ana Li")
     assert(dd("Patient Name") == "")    // distinct from Mother Name
@@ -76,7 +75,7 @@ class BankSpec extends AnyFunSuite {
         "PCP: Dr Novak\nEffective Date: 08/08/1987\nGroup Name: Grp7\n" +
         "RS BIN: 610007\nRx PCN: PCN0"
     val texts = OpQueries.Insurance11Queries.map(_._1)
-    val dd = Extract.queryBankBatched(texts, payload)
+    val dd = Extract.queryBank(texts, payload)
     // keying is by query TEXT, so the duplicate ALIAS (clientname on both
     // Member queries) cannot collide in document_data
     assert(dd.size == 11)
@@ -90,9 +89,9 @@ class BankSpec extends AnyFunSuite {
 
   test("merged form: triple-dedup drops identical re-answers, alias sorts by LAST position") {
     val payload = "Member Name: LI, ANA\nMember ID: C7\nPCP: Dr Novak"
-    // exact duplicate of query 0 in a second batch (batchSize 6)
+    // exact duplicate of query 0 at the end of the bank
     val bank = OpQueries.Insurance11Queries :+ OpQueries.Insurance11Queries.head
-    val merged = Extract.queryBankMerged(bank, payload, batchSize = 6)
+    val merged = Extract.queryBankMerged(bank, payload)
     // the duplicate (text, alias, answer) triple is dropped -> 11 kept
     assert(merged.size == 11)
     // alias sort uses the alias's LAST bank position (the dict
@@ -106,12 +105,10 @@ class BankSpec extends AnyFunSuite {
     assert(merged(1) == ("What is the phone number of the PCP?", "renderphone", ""))
     // a DIFFERING answer for a repeated (text, alias) is kept, not deduped
     val differing = Extract.queryBankMerged(
-      Seq("What is the X?" -> "a", "What is the X?" -> "a"), "X: one",
-      batchSize = 1)
+      Seq("What is the X?" -> "a", "What is the X?" -> "a"), "X: one")
     assert(differing.size == 1) // same text+alias+answer -> deduped
     val kept = Extract.queryBankMerged(
-      Seq("What is the X?" -> "a", "What is the X?" -> "b"), "X: one",
-      batchSize = 1)
+      Seq("What is the X?" -> "a", "What is the X?" -> "b"), "X: one")
     assert(kept.size == 2) // alias differs -> triple differs -> both kept
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import graft.engine.LocalFiles
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -26,7 +26,7 @@ class ExactSubstrSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Write docs as a documents.parquet table dir and run a catalog entry. */
   private def run(name: String, docs: Seq[(Long, String)]): Seq[Seq[Any]] = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("exactsubstr-spec").toString
+    val dir = LocalFiles.scratchDir("exactsubstr-spec")
     docs.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")

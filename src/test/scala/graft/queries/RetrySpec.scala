@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import graft.engine.LocalFiles
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -31,7 +31,7 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def run(docs: Seq[(Long, String)]): Seq[Seq[Any]] = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("retry-spec").toString
+    val dir = LocalFiles.scratchDir("retry-spec")
     docs.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")

@@ -72,10 +72,10 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.fill(1 + i % 3)(s"word$i abc")
     }.zipWithIndex.map { case (t, i) => (i.toLong, t, "s0", t.length.toLong) }
       .toDF("doc_id", "text", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-hll")
+    val dir = graft.engine.LocalFiles.scratchDir("graft-sketch-hll")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SketchQueries.entries.toMap
-      .apply("sk_hll_distinct").fn(spark, dir.toString)
+      .apply("sk_hll_distinct").fn(spark, dir)
       .collect()
     assert(out.length === 1)
     val row = out(0)
@@ -95,10 +95,10 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text")
       .withColumn("source", lit("s0"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-cms")
+    val dir = graft.engine.LocalFiles.scratchDir("graft-sketch-cms")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SketchQueries.entries.toMap
-      .apply("sk_cms_heavy_hitters").fn(spark, dir.toString)
+      .apply("sk_cms_heavy_hitters").fn(spark, dir)
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>
