@@ -115,8 +115,9 @@ object BenchWorker {
     }
 
     /** The timed unit: extract + results write (lineage via the write
-      * job's own accumulator) + the tiny driver-local lineage write —
-      * every job pays its own setup + commit tail.
+      * job's own accumulator) + the driver's write of the lineage rows
+      * that `ExtractJob.runSnapshot` also does — the job pays its own
+      * setup + commit tail.
       */
     def runTimed(turns: org.apache.spark.sql.DataFrame, out: String,
         label: String): Double = {
@@ -127,8 +128,7 @@ object BenchWorker {
         presorted = !salted, lineageAcc = Some(acc))
       results.write.mode("overwrite").parquet(out)
       val tExtract = System.nanoTime()
-      ExtractJob.lineageFromStats(spark, acc.value, "bench", 1)
-        .write.mode("overwrite").parquet(s"$out-lineage")
+      ExtractJob.writeLineage(spark, acc.value, "bench", 1, s"$out-lineage")
       val secs = (System.nanoTime() - t0) / 1e9
       System.err.println(
         f"BENCH_PHASES extract=${(tExtract - t0) / 1e9}%.3f " +

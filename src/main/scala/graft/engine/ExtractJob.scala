@@ -1,7 +1,15 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.TaskContext
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.{SPARK_VERSION_SHORT, TaskContext}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,9 +36,10 @@ final case class ResultRow(
 /** The extraction pipeline (SURVEY.md §7): scan → [optional salted
   * repartition] → sortWithinPartitions(conv_id, turn_idx) → the
   * `extract_turn` projection → results + per-partition lineage, committed
-  * per snapshot for checkpoint-resume. A snapshot is two Spark jobs: the
-  * results write and a one-task lineage write. The scan declares the
-  * table's schema, so no schema-inference job runs.
+  * per snapshot for checkpoint-resume. A presorted snapshot is one Spark
+  * job, the results write: its own tasks count the lineage, and the
+  * driver writes the few lineage rows as one parquet file. The scan
+  * declares the table's schema, so no schema-inference job runs.
   *
   * Scale notes (100 TB / 1000 executors):
   *  - The extract stage is NARROW: when the input is already bucketed by
@@ -47,6 +56,9 @@ final case class ResultRow(
   *    registered per extract task at iterator exhaustion) — the output is
   *    never re-scanned. At 100 TB the alternative (a second job over the
   *    written results) re-reads the entire output for KB of counters.
+  *    Its rows, one per partition, are written by the driver: a Spark
+  *    job for them would cost more than the rows (a fixed price per job
+  *    and per task; Scaling Spark in the Real World, VLDB 2015).
   */
 object ExtractJob {
 
@@ -85,7 +97,7 @@ object ExtractJob {
     override def value: Map[Int, PartitionLineage] = m.toMap
   }
 
-  /** Lineage row in its sink schema (matches [[lineage]]'s output). */
+  /** Lineage row in its sink schema. */
   final case class LineageRow(
       run_id: String, snapshot_id: Long, partition_id: Int,
       input_files: Seq[String], turn_count: Long, ok_count: Long,
@@ -96,18 +108,80 @@ object ExtractJob {
   private val ResultRowEncoder: Encoder[ResultRow] = Encoders.product[ResultRow]
   private val LineageRowEncoder: Encoder[LineageRow] = Encoders.product[LineageRow]
 
-  /** Accumulated stats → the lineage table, driver-local (KB scale).
-    * Empty partitions are dropped to match [[lineage]]'s groupBy shape.
-    * The rows are already in `partition_id` order, so `coalesce(1)` makes
-    * the write one task and one file without a shuffle.
+  /** Accumulated stats → the lineage rows (KB scale), in `partition_id`
+    * order. Empty partitions are dropped: a group-by over the results
+    * has no row for them.
+    */
+  private def lineageRows(stats: Map[Int, PartitionLineage], runId: String,
+      snapshotId: Long): Seq[LineageRow] =
+    stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
+      .map(s => LineageRow(runId, snapshotId, s.partitionId, s.inputFiles,
+        s.turnCount, s.okCount, s.failCount))
+
+  /** The lineage rows as a DataFrame, driver-local; `coalesce(1)` makes a
+    * write of it one task and one file without a shuffle.
+    * [[writeLineage]] writes the same rows without a Spark job.
     */
   def lineageFromStats(spark: SparkSession,
       stats: Map[Int, PartitionLineage], runId: String,
-      snapshotId: Long): DataFrame = {
-    val rows = stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
-      .map(s => LineageRow(runId, snapshotId, s.partitionId, s.inputFiles,
-        s.turnCount, s.okCount, s.failCount))
-    spark.createDataset(rows)(LineageRowEncoder).toDF().coalesce(1)
+      snapshotId: Long): DataFrame =
+    spark.createDataset(lineageRows(stats, runId, snapshotId))(LineageRowEncoder)
+      .toDF().coalesce(1)
+
+  /** [[LineageRow]]'s parquet schema, as Spark writes it. */
+  private val LineageParquetSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary run_id (STRING);
+      |  required int64 snapshot_id;
+      |  required int32 partition_id;
+      |  optional group input_files (LIST) {
+      |    repeated group list {
+      |      optional binary element (STRING);
+      |    }
+      |  }
+      |  required int64 turn_count;
+      |  required int64 ok_count;
+      |  required int64 fail_count;
+      |}""".stripMargin)
+
+  /** Write the lineage rows into directory `dir` as one snappy parquet
+    * file, on the driver, with no Spark job: the schema, the rows and the
+    * footer's Spark schema are those of a Spark write of
+    * [[lineageFromStats]], so `spark.read.parquet(dir)` reads the same
+    * table. `dir` is replaced (a resumed snapshot rewrites it), and the
+    * file appears under its name by an atomic rename.
+    */
+  def writeLineage(spark: SparkSession, stats: Map[Int, PartitionLineage],
+      runId: String, snapshotId: Long, dir: String): Unit = {
+    val d = Paths.get(dir)
+    JavaUtils.deleteRecursively(d.toFile)
+    Files.createDirectories(d)
+    val tmp = d.resolve(".part-00000.snappy.parquet.tmp") // readers skip `.` names
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withType(LineageParquetSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withExtraMetaData(Map(
+        "org.apache.spark.version" -> SPARK_VERSION_SHORT,
+        "org.apache.spark.sql.parquet.row.metadata" -> LineageRowEncoder.schema.json).asJava)
+      .build()
+    try {
+      val rows = new SimpleGroupFactory(LineageParquetSchema)
+      for (r <- lineageRows(stats, runId, snapshotId)) {
+        val g = rows.newGroup()
+          .append("run_id", r.run_id)
+          .append("snapshot_id", r.snapshot_id)
+          .append("partition_id", r.partition_id)
+          .append("turn_count", r.turn_count)
+          .append("ok_count", r.ok_count)
+          .append("fail_count", r.fail_count)
+        val files = g.addGroup("input_files")
+        r.input_files.foreach(f => files.addGroup("list").append("element", f))
+        writer.write(g)
+      }
+    } finally writer.close()
+    Files.move(tmp, d.resolve("part-00000.snappy.parquet"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Schemas for recovering typed columns from the JSON sink form:
@@ -208,27 +282,6 @@ object ExtractJob {
     }
   }
 
-  /** Per-partition lineage rows (north rule) RECOMPUTED from a results
-    * DataFrame — the audit variant, for verifying a committed snapshot
-    * after the fact. The production path ([[runSnapshot]]) collects the
-    * identical rows during the write via [[LineageAccumulator]] and never
-    * re-scans the output; this recompute costs a full (column-pruned)
-    * second scan and exists to cross-check it.
-    */
-  def lineage(spark: SparkSession, results: DataFrame, runId: String,
-      snapshotId: Long): DataFrame =
-    results
-      .groupBy(col("partition_id"))
-      .agg(
-        sort_array(collect_set(col("input_file"))).as("input_files"),
-        count(lit(1)).as("turn_count"),
-        sum(when(col("status") === "ok", 1L).otherwise(0L)).as("ok_count"),
-        sum(when(col("status") =!= "ok", 1L).otherwise(0L)).as("fail_count"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("snapshot_id", lit(snapshotId))
-      .select("run_id", "snapshot_id", "partition_id", "input_files",
-        "turn_count", "ok_count", "fail_count")
-
   def commitMarker(outDir: String, snapshotId: Long): java.nio.file.Path =
     Paths.get(s"$outDir/_commits/snapshot-$snapshotId.done")
 
@@ -253,11 +306,12 @@ object ExtractJob {
     * paths are snapshot-scoped and written with overwrite, so a retry
     * after a crash before the marker is idempotent (exactly-once per
     * snapshot without ACID tables). The whole snapshot costs ONE pass
-    * over the input and two Spark jobs: the results write, and a one-task
-    * write of the lineage rows, which come with the committed-turn count
-    * from the [[LineageAccumulator]] filled by the results job's own
-    * tasks, not a second scan of the output. The scan declares the table
-    * schema, so no schema-inference job runs before them.
+    * over the input and, presorted, one Spark job: the results write.
+    * Its tasks fill the [[LineageAccumulator]] with the lineage rows and
+    * the committed-turn count, so the output is not scanned again, and
+    * the driver writes those rows itself ([[writeLineage]]). The salted
+    * path adds the job of its shuffle-map stage. The scan declares the
+    * table schema, so no schema-inference job runs before them.
     */
   def runSnapshot(spark: SparkSession, cfg: Config,
       snap: TranscriptsTable.SnapshotRef): Long = {
@@ -271,8 +325,7 @@ object ExtractJob {
     val resPath = s"${cfg.outDir}/results/snapshot=${snap.id}"
     Sinks.writeParquet(results.toDF(), resPath)
     val stats = acc.value
-    lineageFromStats(spark, stats, cfg.runId, snap.id)
-      .write.mode("overwrite").parquet(s"${cfg.outDir}/lineage/snapshot=${snap.id}")
+    writeLineage(spark, stats, cfg.runId, snap.id, s"${cfg.outDir}/lineage/snapshot=${snap.id}")
     val n = stats.valuesIterator.map(_.turnCount).sum
     // the resume checkpoint
     val marker = commitMarker(cfg.outDir, snap.id)

@@ -1,6 +1,7 @@
 package graft.extract
 
-import java.util.regex.Pattern
+import java.util.Locale
+import java.util.regex.{Matcher, Pattern}
 import graft.model.{ExtractedTurn, Section}
 
 /** Pure extraction core — zero Spark dependencies.
@@ -39,7 +40,7 @@ object Extract {
     if (text == null || text.isEmpty) Vector.empty
     else
       tokenSplit
-        .split(text.toLowerCase)
+        .split(text.toLowerCase(Locale.ROOT))
         .iterator
         .filter(_.length > 2)
         .toVector
@@ -382,9 +383,63 @@ object Extract {
   // the current one; text before any header lands in "PARAGRAPH".
   // -------------------------------------------------------------------------
   def isAllCapsHeader(line: String): Boolean = {
-    val t = line.trim
-    t.nonEmpty && t.length <= 60 && t.exists(_.isLetter) &&
-    t == t.toUpperCase && !t.contains(":")
+    val a = trimFrom(line, 0, line.length)
+    isCapsHeader(line, a, trimTo(line, a, line.length))
+  }
+
+  /** [[isAllCapsHeader]] of the already trimmed s[a, b). An ASCII
+    * lowercase letter settles it (upper-casing never shortens a string,
+    * so that char would change); only a line with non-ASCII chars pays for
+    * an upper-cased copy.
+    */
+  private def isCapsHeader(s: String, a: Int, b: Int): Boolean = {
+    if (b <= a || b - a > 60) return false
+    var letter = false
+    var ascii = true
+    var i = a
+    while (i < b) {
+      val c = s.charAt(i)
+      if (c == ':' || (c >= 'a' && c <= 'z')) return false
+      if (c >= 128) ascii = false
+      if (Character.isLetter(c)) letter = true
+      i += 1
+    }
+    letter && (ascii || {
+      val t = s.substring(a, b)
+      t == t.toUpperCase(Locale.ROOT)
+    })
+  }
+
+  // String.trim bounds of s[from, end): chars <= ' ' are cut at both ends
+  private def trimFrom(s: String, from: Int, end: Int): Int = {
+    var i = from
+    while (i < end && s.charAt(i) <= ' ') i += 1
+    i
+  }
+
+  private def trimTo(s: String, from: Int, end: Int): Int = {
+    var i = end
+    while (i > from && s.charAt(i - 1) <= ' ') i -= 1
+    i
+  }
+
+  /** The index of each `\n` of `text`, then text.length: line k is
+    * [ends(k - 1) + 1, ends(k)), the lines of `split("\n", -1)`.
+    * [[segment]] and [[kvAnchors]] of one turn share it.
+    */
+  private def lineEnds(text: String): Array[Int] = {
+    var ends = new Array[Int](16)
+    var n = 0
+    var i = text.indexOf('\n')
+    while (i >= 0) {
+      if (n == ends.length) ends = java.util.Arrays.copyOf(ends, n * 2)
+      ends(n) = i
+      n += 1
+      i = text.indexOf('\n', i + 1)
+    }
+    ends = java.util.Arrays.copyOf(ends, n + 1)
+    ends(n) = text.length
+    ends
   }
 
   /** Sections are emitted as spans into the input text (start/len of the
@@ -392,7 +447,9 @@ object Extract {
     * lines of a section are always contiguous in the input), without
     * tripling the bytes carried per row.
     */
-  def segment(text: String): Vector[Section] = {
+  def segment(text: String): Vector[Section] = segment(text, lineEnds(text))
+
+  private def segment(text: String, ends: Array[Int]): Vector[Section] = {
     val out = Vector.newBuilder[Section]
     var header = "PARAGRAPH"
     var bodyStart = -1
@@ -407,19 +464,21 @@ object Extract {
       }
       bodyStart = -1; bodyEnd = -1
     }
-    var off = 0
-    for (line <- text.split("\n", -1)) {
-      if (isAllCapsHeader(line)) {
+    var ls = 0
+    for (le <- ends) {
+      val a = trimFrom(text, ls, le)
+      val b = trimTo(text, a, le)
+      if (isCapsHeader(text, a, b)) {
         flush()
-        header = line.trim
-      } else if (line.trim.isEmpty) {
+        header = text.substring(a, b)
+      } else if (a == b) {
         flush()
         header = "PARAGRAPH"
       } else {
-        if (bodyStart < 0) bodyStart = off
-        bodyEnd = off + line.length
+        if (bodyStart < 0) bodyStart = ls
+        bodyEnd = le
       }
-      off += line.length + 1
+      ls = le + 1
     }
     flush()
     out.result()
@@ -449,6 +508,9 @@ object Extract {
     "patient name", "mrn", "facesheet", "patient information", "guarantor",
     "patient date of birth", "patient phone", "admit date")
 
+  /** How many of `kws` `lowText` contains (the reference-parity arm's
+    * scorer; [[classifyLow]] counts the same from one literal scan).
+    */
   def keywordScore(lowText: String, kws: Vector[String]): Int =
     kws.count(lowText.contains)
 
@@ -459,7 +521,7 @@ object Extract {
     * classifier.
     */
   def classifyFilename(key: String): Option[String] = {
-    val k = key.toLowerCase
+    val k = key.toLowerCase(Locale.ROOT)
     if (k.contains("insurancecard")) Some("INSURANCE")
     else if (k.contains("facesheet")) Some("FACESHEET")
     else if (k.contains("signed_agreement") ||
@@ -472,17 +534,20 @@ object Extract {
   def classifyWithFilename(key: String, text: String): String =
     classifyFilename(key).getOrElse(classify(text))
 
-  def classify(text: String): String = classifyLow(text.toLowerCase)
+  def classify(text: String): String = classifyLow(text.toLowerCase(Locale.ROOT))
 
-  /** classify() body over an already-lowercased text: the fused extractor
-    * lowercases each turn once and shares the copy across the classifier,
-    * the signature detector, and the bank guards.
+  /** classify() body over an already-lowercased text (`Locale.ROOT`). */
+  def classifyLow(low: String): String = classifyFirst(literals.firstIndices(low))
+
+  /** The classifier ladder over a [[literals]] scan: a list's score is how
+    * many of its keywords occur.
     */
-  def classifyLow(low: String): String = {
-    val fs = keywordScore(low, facesheetKeywords)
-    val ins = keywordScore(low, insuranceKeywords)
-    val rx = keywordScore(low, prescriptionKeywords)
-    val ag = keywordScore(low, agreementKeywords)
+  private def classifyFirst(first: Array[Int]): String = {
+    def score(ids: Array[Int]): Int = ids.count(first(_) >= 0)
+    val fs = score(FacesheetIds)
+    val ins = score(InsuranceIds)
+    val rx = score(PrescriptionIds)
+    val ag = score(AgreementIds)
     if (fs >= 3 && fs >= ins) "FACESHEET"
     else if (ins >= 2) "INSURANCE"
     else if (rx >= 3 && rx > ag) "PRESCRIPTION"
@@ -516,7 +581,7 @@ object Extract {
     * ag >= 3 wins ties; POSSIBLE_* at >= 2; UNKNOWN carries count 0.
     */
   def classifyReference(text: String): (String, Int) = {
-    val low = text.toLowerCase
+    val low = text.toLowerCase(Locale.ROOT)
     val rx = keywordScore(low, refPrescriptionKeywords)
     val ag = keywordScore(low, refAgreementKeywords)
     val ins = keywordScore(low, refInsuranceKeywords)
@@ -533,35 +598,81 @@ object Extract {
   // Key normalized (P1): trim, drop leading "the ", drop trailing "?".
   // First occurrence of a key wins (reference dict insert order).
   // -------------------------------------------------------------------------
-  private val kvLine =
-    Pattern.compile("^([A-Za-z][A-Za-z0-9 .#/()'?-]{0,48}?)\\s*:\\s*(.*)$")
-
   def normalizeKey(k: String): String = {
     var s = k.trim
-    if (s.toLowerCase.startsWith("the ")) s = s.substring(4)
+    if (s.toLowerCase(Locale.ROOT).startsWith("the ")) s = s.substring(4)
     if (s.endsWith("?")) s = s.dropRight(1)
     s.trim
   }
 
   def kvAnchors(text: String): Vector[(String, String)] = {
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for (line <- text.split("\n", -1)) {
-      // necessary conditions of kvLine, checked without the regex engine:
-      // the key starts with an ASCII letter ("^([A-Za-z]...") and a colon
-      // must appear within the first 50 key chars plus whitespace — most
-      // non-KV lines exit here (measured 11.9 us/turn -> the regex now
-      // runs only on candidate lines)
-      val c0 = if (line.isEmpty) ' ' else line.charAt(0)
-      val isLetter = (c0 >= 'A' && c0 <= 'Z') || (c0 >= 'a' && c0 <= 'z')
-      if (isLetter && line.indexOf(':') > 0) {
-        val m = kvLine.matcher(line)
-        if (m.matches()) {
-          val k = normalizeKey(m.group(1))
-          if (k.nonEmpty && !seen.contains(k)) seen += k -> m.group(2).trim
+    kvLines(text, lineEnds(text), (k, v) => if (!seen.contains(k)) seen += k -> v)
+    seen.toVector
+  }
+
+  /** Calls `f(key, value)` for each `Key: Value` line, in order: a hand
+    * scan equal to `matches()` of the line regex
+    * `^([A-Za-z][A-Za-z0-9 .#/()'?-]{0,48}?)\s*:\s*(.*)$` (kept in the
+    * tests as the oracle `RegexBanks.kvAnchors`), with the key normalized
+    * and the value trimmed; an empty key is skipped. Neither the key nor
+    * the `\s` before the colon can hold a `:`, so the colon is the line's
+    * first, and the lazy key ends where the `\s` run before it starts.
+    * `.` takes no line terminator, so a value holding a `\r`, U+0085,
+    * U+2028 or U+2029 after its leading `\s` run fails the line.
+    */
+  private def kvLines(text: String, ends: Array[Int], f: (String, String) => Unit): Unit = {
+    var colon = -1 // the first `:` at or after the line start, once looked up
+    var ls = 0
+    var k = 0
+    while (k < ends.length && colon < text.length) {
+      val le = ends(k)
+      if (colon < ls) {
+        colon = text.indexOf(':', ls)
+        if (colon < 0) colon = text.length // no `:` left: no line can match
+      }
+      if (colon < le && isAsciiLetter(text.charAt(ls))) {
+        var j = colon
+        while (j > ls && isRegexWs(text.charAt(j - 1))) j -= 1
+        if (j - ls <= 49 && keyChars(text, ls + 1, j)) {
+          var v = colon + 1
+          while (v < le && isRegexWs(text.charAt(v))) v += 1
+          if (!hasLineTerminator(text, v, le)) {
+            val key = normalizeKey(text.substring(ls, j))
+            if (key.nonEmpty) f(key, text.substring(v, le).trim)
+          }
         }
       }
+      ls = le + 1
+      k += 1
     }
-    seen.toVector
+  }
+
+  private def isAsciiLetter(c: Char): Boolean = (c | 0x20) >= 'a' && (c | 0x20) <= 'z'
+
+  /** Java regex `\s`: `[ \t\n\x0B\f\r]`. */
+  private def isRegexWs(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Whether every char of s[from, until) is in `[A-Za-z0-9 .#/()'?-]`. */
+  private def keyChars(s: String, from: Int, until: Int): Boolean = {
+    var i = from
+    while (i < until) {
+      val c = s.charAt(i)
+      if (!(isAsciiLetter(c) || (c >= '0' && c <= '9') || " .#/()'?-".indexOf(c) >= 0))
+        return false
+      i += 1
+    }
+    true
+  }
+
+  private def hasLineTerminator(s: String, from: Int, until: Int): Boolean = {
+    var i = from
+    while (i < until) {
+      val c = s.charAt(i)
+      if (c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029') return true
+      i += 1
+    }
+    false
   }
 
   // -------------------------------------------------------------------------
@@ -604,17 +715,12 @@ object Extract {
   private val signedBy = p(SignedByRe)
   val excludedSignerPhrases: Vector[String] = Vector(
     "date", "signature", "customer", "n/a", "none", "x")
-  private val icdBullet = p(IcdBulletRe)
   private val icdPlain = p(IcdPlainRe)
   private val icdGeneric = p(IcdGenericRe)
-  // R5 section-bounded checkbox items
-  private val necessitySection =
-    p("(?is)Section\\s+II\\.?\\s*Medical Necessity(.*?)(?:Section\\s+III|$)")
-  private val checkboxItem = p("(?m)^\\s*[X\\u2713]\\s*(\\d+)\\.\\s*([^\\n]+)")
-  // R6 tabular tri-group — deliberately case-SENSITIVE: with (?i) the
-  // negated class [^C] would also exclude lowercase 'c' ("Electric").
-  private val qtyTriGroup =
-    p("QTY\\s*(\\d+)\\s*([^C\\n]+?)\\s*Code\\s*(\\w+)")
+  // R5 section-bounded checkbox items, R6 the tabular tri-group (case
+  // sensitive: with (?i) the negated class [^C] would also exclude
+  // lowercase 'c', "Electric"), P9/P10 the name helpers, and the
+  // bullet-aware ICD-10 form of R4 are hand scans: see [[BankScans]]
   private val lengthOfNeed = p("(?i)Length of Need\\s*:?\\s*(\\d+)")
   // R9 unanchored entity sweep (phone) — note Java handles the reference's
   // lazy `??` quantifier (data_extract_kailey.py:43) identically here.
@@ -626,14 +732,6 @@ object Extract {
     "(?i)breast\\s+pump.{0,40}?double\\s+electric",
     "(?i)E0603",
     "(?i)pump\\s+depot").map(p)
-  // one necessary literal per pump pattern, in the same order — the bank
-  // probes `low.contains(guard)` before running the corresponding regex
-  private val pumpGuards = Vector("double", "breast", "e0603", "pump")
-  // P9/P10 name helpers
-  private val physicianNpi =
-    p("(?i)Physicians?\\s*Name\\s*:\\s*([^\\n-]+?)\\s*(?:,\\s*MD)?\\s*-\\s*(\\d{6,10})")
-  private val memberNameId =
-    p("(?i)Member\\s*Name\\s+([A-Za-z .'-]+?)\\s+([A-Z]\\d{6,12})\\b")
 
   def firstMatch(pat: Pattern, text: String, group: Int = 1): Option[String] = {
     val m = pat.matcher(text)
@@ -654,7 +752,7 @@ object Extract {
   def validName(n: String): Boolean = {
     val t = n.trim
     t.length > 2 && t.length < 50 &&
-    !excludedSignerPhrases.contains(t.toLowerCase)
+    !excludedSignerPhrases.contains(t.toLowerCase(Locale.ROOT))
   }
 
   /** P9: split "Last, First" vs "First Last" into (first, last). */
@@ -694,104 +792,114 @@ object Extract {
   // Per-type field banks. Each returns fields in canonical-name space.
   // -------------------------------------------------------------------------
   def facesheetBank(text: String): Map[String, String] =
-    facesheetBank(text, text.toLowerCase)
-
-  /** Guarded fast path: `low` MUST be `text.toLowerCase`. Each guard is a
-    * necessary condition of its pattern (a literal the regex cannot match
-    * without), so a skipped regex could never have matched — measured: the
-    * banks dominated the 47 us/turn extract cost, and most patterns lose
-    * their anchor literal on most turns of their doc type.
-    */
-  private def facesheetBank(text: String, low: String): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    if (low.contains("name")) firstMatch(patientName, text).foreach { v =>
-      b += "patient_name" -> v
-      val (f, l) = splitName(v)
-      b += "patient_first_name" -> f
-      b += "patient_last_name" -> l
-    }
-    if (low.contains("dob") || low.contains("date of birth"))
-      firstMatch(patientDob, text).foreach(b += "patient_dob" -> _)
-    if (low.contains("phone"))
-      firstMatch(patientPhone, text).foreach(b += "patient_phone" -> _)
-    b.result()
-  }
+    bankMap(text, facesheetInto)
 
   def prescriptionBank(text: String): Map[String, String] =
-    prescriptionBank(text, text.toLowerCase)
+    bankMap(text, prescriptionInto)
 
-  private def prescriptionBank(text: String, low: String): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    if (low.contains("name"))
-      firstMatch(patientName, text).foreach(b += "patient_name" -> _)
-    if (low.contains("dob") || low.contains("date of birth"))
-      firstMatch(patientDob, text).foreach(b += "patient_dob" -> _)
-    val icd =
-      (if (low.contains("icd-10"))
-        firstMatch(icdBullet, text).orElse(firstMatch(icdPlain, text))
-      else None).orElse(firstMatch(icdGeneric, text))
-    icd.foreach(b += "icd10" -> _)
-    if (low.contains("medical necessity")) {
-      val items = checkboxItems(text)
-      if (items.nonEmpty) b += "necessity_items" -> items.mkString("; ")
-    }
-    if (text.contains("QTY")) { // qtyTriGroup is deliberately case-sensitive
-      val tri = qtyTriGroup.matcher(text)
-      if (tri.find()) {
-        b += "qty" -> tri.group(1).trim
-        b += "item_description" -> tri.group(2).trim
-        b += "item_code" -> tri.group(3).trim
-      }
-    }
-    if (low.contains("length of need"))
-      firstMatch(lengthOfNeed, text).foreach(b += "length_of_need" -> _)
-    if (pumpPatterns.zip(pumpGuards).exists { case (pt, g) =>
-        low.contains(g) && pt.matcher(text).find() })
-      b += "pump_type" -> "Double Electric Breast Pump"
-    if (low.contains("physician")) {
-      val phys = physicianNpi.matcher(text)
-      if (phys.find()) {
-        b += "physician_name" -> phys.group(1).trim
-        b += "physician_npi" -> phys.group(2).trim
-      }
-    }
-    b.result()
-  }
-
-  def agreementBank(text: String): Map[String, String] = {
-    // Reference applies the agreement bank to the last-15-lines window
-    // (SignedAgreementFinalDB:146-148).
-    val tail = lastLines(text, 15)
-    val tailLow = tail.toLowerCase
-    val b = Map.newBuilder[String, String]
-    if (tailLow.contains("signed by customer") ||
-        tailLow.contains("firmado por el cliente"))
-      firstMatch(signedBy, tail).filter(validName).foreach { v =>
-        b += "signed_by" -> v
-      }
-    val anchoredDate =
-      if (tailLow.contains("date") || tailLow.contains("fecha"))
-        firstMatch(dateTimeFull, tail).orElse(firstMatch(dateAnchored, tail))
-      else None
-    anchoredDate.orElse(firstMatch(dateBare, tail))
-      .foreach(b += "signed_date" -> _)
-    b.result()
-  }
+  def agreementBank(text: String): Map[String, String] =
+    bankMap(text, agreementInto)
 
   def insuranceBank(text: String): Map[String, String] =
-    insuranceBank(text, text.toLowerCase)
+    bankMap(text, insuranceInto)
 
-  private def insuranceBank(text: String, low: String): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    if (low.contains("member")) {
-      val m = memberNameId.matcher(text)
-      if (m.find()) {
-        b += "member_name" -> m.group(1).trim
-        b += "member_id" -> m.group(2).trim
+  private def bankMap(text: String, bank: (Scan, FieldBuf) => Unit): Map[String, String] = {
+    val fb = new FieldBuf
+    bank(new Scan(text), fb)
+    fb.fieldsMap
+  }
+
+  /** Each guard is a necessary condition of its pattern (a literal the
+    * regex cannot match without), read from the turn's one literal scan,
+    * so a skipped pattern could never have matched.
+    */
+  private def facesheetInto(sc: Scan, b: FieldBuf): Unit = {
+    if (sc.has(LName)) {
+      val v = firstAt(patientName, sc.text, 0, sc, NameStarts)
+      if (v != null) {
+        b.put("patient_name", v)
+        val (f, l) = splitName(v)
+        b.put("patient_first_name", f)
+        b.put("patient_last_name", l)
       }
     }
-    b.result()
+    if (sc.has(LDob) || sc.has(LDateOfBirth))
+      b.putIf("patient_dob", firstAt(patientDob, sc.text, 0, sc, DobStarts))
+    if (sc.has(LPhone))
+      b.putIf("patient_phone", firstAt(patientPhone, sc.text, 0, sc, PhoneStarts))
   }
+
+  private def prescriptionInto(sc: Scan, b: FieldBuf): Unit = {
+    val text = sc.text
+    if (sc.has(LName))
+      b.putIf("patient_name", firstAt(patientName, text, 0, sc, NameStarts))
+    if (sc.has(LDob) || sc.has(LDateOfBirth))
+      b.putIf("patient_dob", firstAt(patientDob, text, 0, sc, DobStarts))
+    var icd: String = null
+    if (sc.has(LIcd)) {
+      if (BankScans.hasBullet(text)) icd = BankScans.icdBullet(text, sc.start(LIcd))
+      if (icd == null) icd = firstAt(icdPlain, text, 0, sc, IcdStarts)
+    }
+    if (icd == null) icd = firstMatch(icdGeneric, text).orNull
+    b.putIf("icd10", icd)
+    if (sc.has(LNecessity) && sc.start(LSection) >= 0) {
+      val items = checkboxItems(text, sc.start(LSection))
+      if (items.nonEmpty) b.put("necessity_items", items.mkString("; "))
+    }
+    val tri = BankScans.qty(text)
+    if (tri != null) {
+      b.put("qty", tri(0))
+      b.put("item_description", tri(1))
+      b.put("item_code", tri(2))
+    }
+    if (sc.has(LLengthOfNeed))
+      b.putIf("length_of_need", firstAt(lengthOfNeed, text, 0, sc, LengthOfNeedStarts))
+    if (PumpGuards.indices.exists { k =>
+        sc.has(PumpGuards(k)) &&
+          matchAt(pumpPatterns(k), text, 0, sc, Array(PumpGuards(k))) != null })
+      b.put("pump_type", "Double Electric Breast Pump")
+    if (sc.has(LPhysician)) {
+      val phys = BankScans.physician(text, sc.start(LPhysician))
+      if (phys != null) {
+        b.put("physician_name", phys(0))
+        b.put("physician_npi", phys(1))
+      }
+    }
+  }
+
+  /** Reference applies the agreement bank to the last-15-lines window
+    * (SignedAgreementFinalDB:146-148). The window is a suffix that starts
+    * a line, so its lowercase copy is `low`'s suffix from the same offset
+    * when the two are aligned.
+    */
+  private def agreementInto(sc: Scan, b: FieldBuf): Unit = {
+    val tail = lastLines(sc.text, 15)
+    val off = sc.text.length - tail.length
+    val tailLow = if (sc.aligned) null else tail.toLowerCase(Locale.ROOT)
+    def inTail(id: Int): Boolean =
+      if (tailLow != null) tailLow.contains(literals.literals(id))
+      else sc.first(id) >= off || sc.has(id) && sc.low.indexOf(literals.literals(id), off) >= 0
+    if (inTail(LSignedByCustomer) || inTail(LFirmado)) {
+      val v = firstAt(signedBy, tail, off, sc, SignedByStarts)
+      if (v != null && validName(v)) b.put("signed_by", v)
+    }
+    var date: String = null
+    if (inTail(LDate) || inTail(LFecha)) {
+      date = firstAt(dateTimeFull, tail, off, sc, DateStarts)
+      if (date == null) date = firstAt(dateAnchored, tail, off, sc, DateFechaStarts)
+    }
+    if (date == null) date = firstMatch(dateBare, tail).orNull
+    b.putIf("signed_date", date)
+  }
+
+  private def insuranceInto(sc: Scan, b: FieldBuf): Unit =
+    if (sc.has(LMember)) {
+      val m = BankScans.member(sc.text, sc.start(LMember))
+      if (m != null) {
+        b.put("member_name", m(0))
+        b.put("member_id", m(1))
+      }
+    }
 
   /** R9 entity sweep — all phone numbers anywhere in the text. */
   def phoneNumbers(text: String): Vector[String] = allMatches(phoneSweep, text)
@@ -799,13 +907,199 @@ object Extract {
   /** R5 section-bounded checkbox items, exposed for direct gating: the
     * checked item texts inside the Medical Necessity section only.
     */
-  def checkboxItems(text: String): Vector[String] =
-    firstMatch(necessitySection, text).map { sec =>
-      val m = checkboxItem.matcher(sec)
-      val items = Vector.newBuilder[String]
-      while (m.find()) items += m.group(2).trim
-      items.result()
-    }.getOrElse(Vector.empty)
+  def checkboxItems(text: String): Vector[String] = checkboxItems(text, 0)
+
+  // `from`: a bound below the start of the section's first match
+  private def checkboxItems(text: String, from: Int): Vector[String] =
+    Option(BankScans.necessitySection(text, from))
+      .fold(Vector.empty[String])(BankScans.checkboxItems)
+
+  // -------------------------------------------------------------------------
+  // One literal scan per turn: every classifier keyword, bank guard,
+  // pattern start and signature cue, with its first index in the turn's
+  // lowercase copy.
+  // -------------------------------------------------------------------------
+  private val literalBuf = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def lit(s: String): Int = {
+    val i = literalBuf.indexOf(s)
+    if (i >= 0) i else { literalBuf += s; literalBuf.length - 1 }
+  }
+  private val FacesheetIds = facesheetKeywords.map(lit).toArray
+  private val InsuranceIds = insuranceKeywords.map(lit).toArray
+  private val PrescriptionIds = prescriptionKeywords.map(lit).toArray
+  private val AgreementIds = agreementKeywords.map(lit).toArray
+  // bank guards, and the literals every match of a pattern starts with
+  private val LName = lit("name")
+  private val NameStarts = Array(lit("mother"), lit("patient"))
+  private val LDob = lit("dob")
+  private val LDateOfBirth = lit("date of birth")
+  private val DobStarts = Array(LDob, LDateOfBirth)
+  private val LPhone = lit("phone")
+  private val PhoneStarts = Array(LPhone)
+  private val LIcd = lit("icd-10")
+  private val IcdStarts = Array(LIcd)
+  private val LNecessity = lit("medical necessity")
+  private val LSection = lit("section")
+  private val LLengthOfNeed = lit("length of need")
+  private val LengthOfNeedStarts = Array(LLengthOfNeed)
+  // one necessary literal per pump pattern, in the same order, each the
+  // literal its pattern starts with
+  private val PumpGuards = Array("double", "breast", "e0603", "pump").map(lit)
+  private val LPhysician = lit("physician")
+  private val LMember = lit("member")
+  private val LSignedByCustomer = lit("signed by customer")
+  private val LFirmado = lit("firmado por el cliente")
+  private val SignedByStarts = Array(LSignedByCustomer, LFirmado)
+  private val LDate = lit("date")
+  private val LFecha = lit("fecha")
+  private val DateStarts = Array(LDate)
+  private val DateFechaStarts = Array(LDate, LFecha)
+  // signature cues
+  private val LSlashS = lit("/s/")
+  private val LSignatureColon = lit("signature:")
+  private val LSignature = lit("signature")
+  private val LSigned = lit("signed")
+  private[extract] val literals = new LiteralSet(literalBuf.toArray)
+
+  /** A turn's text, its `Locale.ROOT` lowercase copy and the [[literals]]
+    * scan of that copy. The copy is aligned with the text (same length,
+    * so char i of one is char i of the other lowered) unless the text
+    * holds U+0130, the one char whose lowercase is two chars. An ASCII
+    * case-insensitive match of a literal in the text is that literal in
+    * the aligned copy at the same index, so the copy's first index is a
+    * lower bound on every match that starts with the literal.
+    */
+  private final class Scan(val text: String) {
+    val low: String = text.toLowerCase(Locale.ROOT)
+    val aligned: Boolean = low.length == text.length
+    val first: Array[Int] = literals.firstIndices(low)
+    def has(id: Int): Boolean = first(id) >= 0
+    /** Where a match that starts with literal `id` can start at the
+      * earliest: -1 for nowhere, 0 when the copy is not aligned.
+      */
+    def start(id: Int): Int = if (aligned) first(id) else 0
+  }
+
+  /** `pat`'s first match in `in`, the suffix of the turn text from `off`,
+    * or null. Every match starts with one of the literals `starts`, so on
+    * an aligned copy `lookingAt` runs only at their occurrences, in
+    * ascending order, with transparent and non-anchoring bounds: the
+    * first that matches is what `find()` returns, and the positions in
+    * between are never tried. Otherwise it is `find()`.
+    */
+  private def matchAt(pat: Pattern, in: String, off: Int, sc: Scan,
+      starts: Array[Int]): Matcher = {
+    val m = pat.matcher(in)
+    if (!sc.aligned) return if (m.find()) m else null
+    m.useTransparentBounds(true).useAnchoringBounds(false)
+    def from(k: Int, i: Int): Int = {
+      val f = sc.first(starts(k))
+      if (f < 0 || f >= i) f else sc.low.indexOf(literals.literals(starts(k)), i)
+    }
+    val at = Array.tabulate(starts.length)(from(_, off))
+    while (true) {
+      val j = at.foldLeft(-1)((j, a) => if (a >= 0 && (j < 0 || a < j)) a else j)
+      if (j < 0) return null
+      m.region(j - off, in.length)
+      if (m.lookingAt()) return m
+      for (k <- at.indices if at(k) == j) at(k) = from(k, j + 1)
+    }
+    null
+  }
+
+  /** [[firstMatch]] through [[matchAt]]: group 1 of the first match,
+    * trimmed, or null when there is none or it is blank.
+    */
+  private def firstAt(pat: Pattern, in: String, off: Int, sc: Scan,
+      starts: Array[Int]): String = {
+    val m = matchAt(pat, in, off, sc, starts)
+    if (m == null || m.group(1) == null) null
+    else {
+      val v = m.group(1).trim
+      if (v.isEmpty) null else v
+    }
+  }
+
+  /** A turn's fields as parallel arrays: KV anchors first (the first of a
+    * key wins), then the bank's values, which replace an anchor of the
+    * same key and are marked as pattern-sourced. Past 16 keys an index
+    * keeps lookups constant-time.
+    */
+  private final class FieldBuf {
+    var keys = new Array[String](16)
+    var vals = new Array[String](16)
+    var pattern = new Array[Boolean](16)
+    var size = 0
+    private var index: java.util.HashMap[String, Integer] = null
+
+    private def indexOf(k: String): Int =
+      if (index != null) {
+        val i = index.get(k)
+        if (i == null) -1 else i.intValue
+      } else {
+        var i = 0
+        while (i < size && keys(i) != k) i += 1
+        if (i < size) i else -1
+      }
+
+    private def append(k: String, v: String, fromPattern: Boolean): Unit = {
+      if (size == keys.length) {
+        keys = java.util.Arrays.copyOf(keys, size * 2)
+        vals = java.util.Arrays.copyOf(vals, size * 2)
+        pattern = java.util.Arrays.copyOf(pattern, size * 2)
+      }
+      keys(size) = k
+      vals(size) = v
+      pattern(size) = fromPattern
+      size += 1
+      if (index != null) index.put(k, size - 1)
+      else if (size == 16) {
+        index = new java.util.HashMap[String, Integer](64)
+        for (i <- 0 until size) index.put(keys(i), i)
+      }
+    }
+
+    def anchor(k: String, v: String): Unit = if (indexOf(k) < 0) append(k, v, false)
+
+    def put(k: String, v: String): Unit = {
+      val i = indexOf(k)
+      if (i < 0) append(k, v, true)
+      else {
+        vals(i) = v
+        pattern(i) = true
+      }
+    }
+
+    def putIf(k: String, v: String): Unit = if (v != null) put(k, v)
+
+    /** Whether the bank set `k` to a non-empty value. */
+    def bankNonEmpty(k: String): Boolean = {
+      val i = indexOf(k)
+      i >= 0 && pattern(i) && vals(i).nonEmpty
+    }
+
+    def fieldsMap: Map[String, String] =
+      (0 until size).iterator.map(i => keys(i) -> vals(i)).toMap
+
+    /** Indices in key order (`String.compareTo`, as the JSON writer sorts). */
+    def sortedOrder: Array[Int] = {
+      val order = Array.range(0, size)
+      if (size <= 32) {
+        var i = 1
+        while (i < size) {
+          val o = order(i)
+          var j = i
+          while (j > 0 && keys(order(j - 1)).compareTo(keys(o)) > 0) {
+            order(j) = order(j - 1)
+            j -= 1
+          }
+          order(j) = o
+          i += 1
+        }
+        order
+      } else order.sortBy(keys(_))
+    }
+  }
 
   // -------------------------------------------------------------------------
   // Query-driven dynamic extraction — the reference's primary mechanism:
@@ -830,7 +1124,7 @@ object Extract {
   private def anchorLookup(text: String): Map[String, String] =
     kvAnchors(text).foldLeft(Map.empty[String, String]) {
       case (m, (k, v)) =>
-        val kl = k.toLowerCase
+        val kl = k.toLowerCase(Locale.ROOT)
         if (m.contains(kl)) m else m + (kl -> v)
     }
 
@@ -848,7 +1142,7 @@ object Extract {
     val out = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for (q <- queries) {
       val key = queryKey(q)
-      out(key) = byKey.getOrElse(normalizeKey(key).toLowerCase, "")
+      out(key) = byKey.getOrElse(normalizeKey(key).toLowerCase(Locale.ROOT), "")
     }
     out.toMap
   }
@@ -873,7 +1167,7 @@ object Extract {
     val out = Vector.newBuilder[(String, String, String)]
     for ((q, alias) <- queries) {
       val key = queryKey(q)
-      val triple = (q, alias, byKey.getOrElse(normalizeKey(key).toLowerCase, ""))
+      val triple = (q, alias, byKey.getOrElse(normalizeKey(key).toLowerCase(Locale.ROOT), ""))
       if (processed.add(triple)) out += triple
     }
     // Python `{alias: i for i, q in enumerate(...)}`: later index wins —
@@ -954,7 +1248,7 @@ object Extract {
 
     // keyword routing over the KV anchors (skip terms first, elif order)
     for ((k, v) <- kvAnchors(text)) {
-      val kl = k.toLowerCase
+      val kl = k.toLowerCase(Locale.ROOT)
       if (!routeSkipTerms.exists(kl.contains)) {
         if (routePatientTerms.exists(kl.contains)) patient(k) = v
         else if (routeDoctorTerms.exists(kl.contains)) doctor(k) = v
@@ -982,14 +1276,14 @@ object Extract {
       pa.remove(k)
     // 2. physician/doctor keys move from patient to doctor (first wins)
     for (k <- pa.keys.toVector;
-         if k.toLowerCase.contains("physician") || k.toLowerCase.contains("doctor")) {
+         if k.toLowerCase(Locale.ROOT).contains("physician") || k.toLowerCase(Locale.ROOT).contains("doctor")) {
       val v = pa.remove(k).get
       if (!dr.contains("Doctor Name")) dr("Doctor Name") = v
     }
     // 3. infant fields re-labeled "Infant <field>"
     val infant = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for (k <- pa.keys.toVector;
-         if k.toLowerCase.contains("infant") || k.toLowerCase.contains("baby")) {
+         if k.toLowerCase(Locale.ROOT).contains("infant") || k.toLowerCase(Locale.ROOT).contains("baby")) {
       infant(k.replace("Infant ", "").replace("Baby ", "")) = pa.remove(k).get
     }
     for ((k, v) <- infant) pa(s"Infant $k") = v
@@ -1071,13 +1365,15 @@ object Extract {
   // "Signed by customer:" implication.
   // -------------------------------------------------------------------------
   def detectSignature(text: String): Boolean =
-    detectSignatureLow(text.toLowerCase)
+    detectSignatureLow(text.toLowerCase(Locale.ROOT))
 
   /** detectSignature() over an already-lowercased text (see classifyLow). */
-  def detectSignatureLow(low: String): Boolean = {
-    low.contains("/s/") || low.contains("signed by customer") ||
-    low.contains("firmado por el cliente") || low.contains("signature:") ||
-    (low.contains("signature") && low.contains("signed"))
+  def detectSignatureLow(low: String): Boolean = signatureFirst(literals.firstIndices(low))
+
+  private def signatureFirst(first: Array[Int]): Boolean = {
+    def has(id: Int) = first(id) >= 0
+    has(LSlashS) || has(LSignedByCustomer) || has(LFirmado) || has(LSignatureColon) ||
+    (has(LSignature) && has(LSigned))
   }
 
   /** Layout span: page-normalized bounding box of a text-less line block
@@ -1285,22 +1581,21 @@ object Extract {
   // -------------------------------------------------------------------------
   /** A1: (keyCount - emptyCount) / keyCount, 0.0 when empty map. */
   def confidenceA1(fields: Map[String, String]): Double =
-    if (fields.isEmpty) 0.0
-    else {
-      val keyCount = fields.size
-      val emptyCount = fields.valuesIterator.count(_.isEmpty)
-      (keyCount - emptyCount).toDouble / keyCount
-    }
+    a1(fields.size, fields.valuesIterator.count(_.isEmpty))
+
+  private def a1(keyCount: Int, emptyCount: Int): Double =
+    if (keyCount == 0) 0.0 else (keyCount - emptyCount).toDouble / keyCount
 
   /** A2: 3-point — +1 per non-empty of {signed_by, signed_date, signature},
     * /3, rounded to 2 decimals (half-up, matching Python round for these
     * values: 0.0, 0.33, 0.67, 1.0).
     */
-  def confidenceA2(fields: Map[String, String], sig: Boolean): Double = {
-    var pts = 0
-    if (fields.get("signed_by").exists(_.nonEmpty)) pts += 1
-    if (fields.get("signed_date").exists(_.nonEmpty)) pts += 1
-    if (sig) pts += 1
+  def confidenceA2(fields: Map[String, String], sig: Boolean): Double =
+    a2(fields.get("signed_by").exists(_.nonEmpty),
+      fields.get("signed_date").exists(_.nonEmpty), sig)
+
+  private def a2(signedBy: Boolean, signedDate: Boolean, sig: Boolean): Double = {
+    val pts = (if (signedBy) 1 else 0) + (if (signedDate) 1 else 0) + (if (sig) 1 else 0)
     math.round(pts / 3.0 * 100.0) / 100.0
   }
 
@@ -1312,100 +1607,134 @@ object Extract {
   // table stores these as canonical JSON strings and `from_json` recovers
   // the typed form when needed. Keys sorted for determinism.
   // -------------------------------------------------------------------------
-  private def jsonEscape(sb: StringBuilder, s: String): Unit = {
+  private val Hex = "0123456789abcdef"
+
+  /** `s` as a JSON string: `"`, `\` and the C0 controls escaped (`\n`,
+    * `\r`, `\t` by name, the rest as `\u00xx`), runs without them copied
+    * whole.
+    */
+  private def jsonString(sb: java.lang.StringBuilder, s: String): Unit = {
     sb.append('"')
+    var from = 0
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      c match {
-        case '"'  => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
+      if (c < ' ' || c == '"' || c == '\\') {
+        sb.append(s, from, i)
+        c match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ => sb.append("\\u00").append(Hex.charAt(c >> 4)).append(Hex.charAt(c & 15))
+        }
+        from = i + 1
       }
       i += 1
     }
-    sb.append('"')
+    sb.append(s, from, s.length).append('"')
+  }
+
+  /** `{"k":"v",…}` of keys already sorted, with their values in step. */
+  private def objectJson(keys: Array[String], vals: Array[String]): String = {
+    val sb = new java.lang.StringBuilder(64)
+    sb.append('{')
+    for (i <- keys.indices) {
+      if (i > 0) sb.append(',')
+      jsonString(sb, keys(i))
+      sb.append(':')
+      jsonString(sb, vals(i))
+    }
+    sb.append('}').toString
   }
 
   def fieldsToJson(fields: Map[String, String]): String = {
-    val sb = new StringBuilder(64)
-    sb.append('{')
-    var first = true
-    for ((k, v) <- fields.toSeq.sortBy(_._1)) {
-      if (!first) sb.append(',')
-      first = false
-      jsonEscape(sb, k); sb.append(':'); jsonEscape(sb, v)
-    }
-    sb.append('}')
-    sb.result()
+    val keys = fields.keys.toArray.sorted
+    objectJson(keys, keys.map(fields))
   }
 
   def sectionsToJson(sections: Seq[Section]): String = {
-    val sb = new StringBuilder(64)
+    val sb = new java.lang.StringBuilder(64)
     sb.append('[')
     var first = true
     for (s <- sections) {
       if (!first) sb.append(',')
       first = false
-      sb.append("{\"header\":"); jsonEscape(sb, s.header)
+      sb.append("{\"header\":")
+      jsonString(sb, s.header)
       sb.append(",\"start\":").append(s.start)
       sb.append(",\"len\":").append(s.len).append('}')
     }
-    sb.append(']')
-    sb.result()
+    sb.append(']').toString
   }
 
   // -------------------------------------------------------------------------
   // Fused per-turn extractor — the body of `extract_turn` and the oracle.
   // -------------------------------------------------------------------------
-  def extractTurn(convId: String, turnIdx: Int, text: String): ExtractedTurn = {
-    if (text == null || text.isEmpty)
-      return ExtractedTurn(convId, turnIdx, "UNKNOWN", "", Vector.empty,
-        Map.empty, Map.empty, signature_present = false, 0.0, "failed:empty")
-    if (text.length > MaxTextChars)
-      return ExtractedTurn(convId, turnIdx, "UNKNOWN", "", Vector.empty,
-        Map.empty, Map.empty, signature_present = false, 0.0, "failed:oversize")
+  /** One turn's extraction, computed once for both of its forms: the
+    * [[ExtractedTurn]] of [[extractTurn]] and the sink's JSON strings that
+    * the `extract_turn` expression writes. Fields are held sorted by key,
+    * each with its source (anchor or pattern).
+    */
+  final class TurnOutput private[Extract] (
+      val status: String, val docType: String, val text: String,
+      val sections: Vector[Section], keys: Array[String], vals: Array[String],
+      fromPattern: Array[Boolean], val signature: Boolean, val confidence: Double) {
+    def fieldsJson: String = objectJson(keys, vals)
+    def fieldSrcJson: String = objectJson(keys, fromPattern.map(src))
+    def sectionsJson: String = sectionsToJson(sections)
+
+    def toExtractedTurn(convId: String, turnIdx: Int): ExtractedTurn =
+      ExtractedTurn(convId, turnIdx, docType, text, sections,
+        keys.iterator.zip(vals.iterator).toMap,
+        keys.iterator.zip(fromPattern.iterator.map(src)).toMap,
+        signature, confidence, status)
+  }
+
+  private def src(fromPattern: Boolean): String = if (fromPattern) "pattern" else "anchor"
+
+  private def failed(status: String): TurnOutput =
+    new TurnOutput(status, "UNKNOWN", "", Vector.empty, Array.empty, Array.empty,
+      Array.empty, signature = false, confidence = 0.0)
+
+  /** The extractor over one turn's text: HTML strip → segment → one
+    * lowercase copy and literal scan → classify → KV anchors → the
+    * doc type's bank → merge (pattern beats anchor, §3.3) → signature →
+    * confidence. An empty, oversize or throwing turn is quarantined with
+    * a `failed:*` status (E1: never abort the job on one bad row).
+    */
+  def turn(text: String): TurnOutput = {
+    if (text == null || text.isEmpty) return failed("failed:empty")
+    if (text.length > MaxTextChars) return failed("failed:oversize")
     try {
       val stripped = extractText(text)
-      val sections = segment(stripped)
-      // one lowercase copy per turn, shared by the classifier, the
-      // signature detector, and the bank pattern guards
-      val low = stripped.toLowerCase
-      val docType = classifyLow(low)
-      val anchors = kvAnchors(stripped).toMap
+      val ends = lineEnds(stripped)
+      val sections = segment(stripped, ends)
+      val sc = new Scan(stripped)
+      val docType = classifyFirst(sc.first)
+      val fb = new FieldBuf
+      kvLines(stripped, ends, fb.anchor)
       // Substring routing like the reference's `"PRESCRIPTION" in
       // doc_type` / `"AGREEMENT" in doc_type` dispatch: POSSIBLE_* tiers
       // run the same bank as their confident counterparts.
-      val bank =
-        if (docType == "FACESHEET") facesheetBank(stripped, low)
-        else if (docType.contains("PRESCRIPTION")) prescriptionBank(stripped, low)
-        else if (docType.contains("AGREEMENT")) agreementBank(stripped)
-        else if (docType == "INSURANCE") insuranceBank(stripped, low)
-        else Map.empty[String, String]
-      // Merge precedence: pattern-bank result beats KV anchor (§3.3).
-      val fields = anchors ++ bank
-      // provenance mirrors the merge exactly: a key in `bank` was
-      // produced (or overridden) by the pattern arm, anything else by
-      // its KV anchor
-      val fieldSrc = fields.map { case (k, _) =>
-        k -> (if (bank.contains(k)) "pattern" else "anchor")
-      }
-      val sig = detectSignatureLow(low)
+      if (docType == "FACESHEET") facesheetInto(sc, fb)
+      else if (docType.contains("PRESCRIPTION")) prescriptionInto(sc, fb)
+      else if (docType.contains("AGREEMENT")) agreementInto(sc, fb)
+      else if (docType == "INSURANCE") insuranceInto(sc, fb)
+      val sig = signatureFirst(sc.first)
       val conf =
-        if (docType.contains("AGREEMENT")) confidenceA2(bank, sig)
-        else confidenceA1(fields)
-      ExtractedTurn(convId, turnIdx, docType, stripped, sections, fields,
-        fieldSrc, sig, conf, "ok")
+        if (docType.contains("AGREEMENT"))
+          a2(fb.bankNonEmpty("signed_by"), fb.bankNonEmpty("signed_date"), sig)
+        else a1(fb.size, (0 until fb.size).count(fb.vals(_).isEmpty))
+      val order = fb.sortedOrder
+      new TurnOutput("ok", docType, stripped, sections, order.map(fb.keys),
+        order.map(fb.vals), order.map(fb.pattern), sig, conf)
     } catch {
-      case e: Exception =>
-        // E1 quarantine: never abort the job on one bad row.
-        ExtractedTurn(convId, turnIdx, "UNKNOWN", "", Vector.empty,
-          Map.empty, Map.empty, signature_present = false, 0.0,
-          s"failed:${e.getClass.getSimpleName}")
+      case e: Exception => failed(s"failed:${e.getClass.getSimpleName}")
     }
   }
+
+  def extractTurn(convId: String, turnIdx: Int, text: String): ExtractedTurn =
+    turn(text).toExtractedTurn(convId, turnIdx)
 }

@@ -1,6 +1,7 @@
 package graft.gen
 
 import java.sql.Timestamp
+import java.util.Locale
 import graft.model.Turn
 
 /** Deterministic, seedable RNG — SplitMix64 (public-domain algorithm,
@@ -90,7 +91,7 @@ object TranscriptGen {
   }
 
   def prescription(r: Rng): String = {
-    val mother = s"${r.pick(firstNames).toLowerCase.capitalize} ${r.pick(lastNames).toLowerCase.capitalize}"
+    val mother = s"${r.pick(firstNames).toLowerCase(Locale.ROOT).capitalize} ${r.pick(lastNames).toLowerCase(Locale.ROOT).capitalize}"
     val icd = s"Z39.${r.nextInt(9)}"
     val npi = (1000000000L + (r.nextLong() & Long.MaxValue) % 9000000000L).toString.take(10)
     s"""The Breast Pump Depot
@@ -103,11 +104,11 @@ object TranscriptGen {
        |QTY ${1 + r.nextInt(3)} Double Electric Breast Pump Code E0603
        |Length of Need: ${1 + r.nextInt(12)}
        |Refills: ${r.nextInt(4)}
-       |Physicians Name: ${r.pick(firstNames).take(1)}. ${r.pick(lastNames).toLowerCase.capitalize}, MD - $npi""".stripMargin
+       |Physicians Name: ${r.pick(firstNames).take(1)}. ${r.pick(lastNames).toLowerCase(Locale.ROOT).capitalize}, MD - $npi""".stripMargin
   }
 
   def agreement(r: Rng): String = {
-    val signer = s"${r.pick(firstNames).toLowerCase.capitalize} ${r.pick(lastNames).toLowerCase.capitalize}"
+    val signer = s"${r.pick(firstNames).toLowerCase(Locale.ROOT).capitalize} ${r.pick(lastNames).toLowerCase(Locale.ROOT).capitalize}"
     val spanish = r.nextInt(4) == 0
     val missingSig = r.nextInt(5) == 0
     val body = (0 until 3 + r.nextInt(4))

@@ -14,14 +14,14 @@ import graft.extract.Extract
   */
 object ExtractTurnBridge {
   def eval(text: UTF8String): InternalRow = {
-    val e = Extract.extractTurn("", 0, text.toString)
+    val e = Extract.turn(text.toString)
     new GenericInternalRow(Array[Any](
-      UTF8String.fromString(e.doc_type),
-      UTF8String.fromString(e.extracted_text),
-      UTF8String.fromString(Extract.fieldsToJson(e.fields)),
-      UTF8String.fromString(Extract.fieldsToJson(e.field_src)),
-      UTF8String.fromString(Extract.sectionsToJson(e.sections)),
-      e.signature_present,
+      UTF8String.fromString(e.docType),
+      UTF8String.fromString(e.text),
+      UTF8String.fromString(e.fieldsJson),
+      UTF8String.fromString(e.fieldSrcJson),
+      UTF8String.fromString(e.sectionsJson),
+      e.signature,
       e.confidence,
       UTF8String.fromString(e.status)))
   }

@@ -107,7 +107,7 @@ object TextHashBridge {
     * `Char`, so a function argument would box every character.
     */
   private def words(s: UTF8String, alnum: Boolean): java.util.ArrayList[String] = {
-    val str = s.toLowerCase.toString
+    val str = s.toString.toLowerCase(java.util.Locale.ROOT)
     def isTok(c: Char): Boolean =
       if (alnum) (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') else !isWsChar(c)
     val words = new java.util.ArrayList[String]()

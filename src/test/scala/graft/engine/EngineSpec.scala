@@ -148,24 +148,39 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // input_files recorded
     val files = lin.select("input_files").as[Seq[String]].collect().flatten
     assert(files.exists(_.contains("snapshot=1")))
-    // the single-pass (accumulator) lineage written by runSnapshot must
-    // equal the audit recompute over the committed results, row for row
-    val audit = ExtractJob.lineage(spark,
-      spark.read.parquet(s"$out/results/snapshot=1"), cfg.runId, 1L)
-    val key = (df: org.apache.spark.sql.DataFrame) => df
-      .select("run_id", "snapshot_id", "partition_id", "input_files",
-        "turn_count", "ok_count", "fail_count")
-      .collect().map(_.toString).sorted.toVector
-    assert(key(lin) == key(audit),
-      "accumulator lineage differs from the audit recompute")
+    // the lineage file the driver wrote from the accumulator must equal
+    // the audit recompute over the committed results, on schema and rows
+    val cols = Seq("run_id", "snapshot_id", "partition_id", "input_files",
+      "turn_count", "ok_count", "fail_count")
+    val shape = (df: org.apache.spark.sql.DataFrame) =>
+      df.schema.fields.map(f => f.name -> f.dataType.simpleString).toVector
+    val key = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toString).sorted.toVector
+    def sameAsAudit(outDir: String, runId: String): Unit = {
+      val written = spark.read.parquet(s"$outDir/lineage/snapshot=1")
+      val audit = LineageAudit.lineage(
+        spark.read.parquet(s"$outDir/results/snapshot=1"), runId, 1L)
+      assert(shape(written) == shape(audit), "lineage schema differs from the audit's")
+      assert(key(written) == key(audit), "accumulator lineage differs from the audit recompute")
+    }
+    sameAsAudit(out, cfg.runId)
     // the same on the salted path, whose shuffle interleaves input files
     val saltedOut = tmpDir()
     val saltedCfg = cfg.copy(outDir = saltedOut, salted = true, saltBuckets = 4)
     ExtractJob.runSnapshot(spark, saltedCfg, snap)
-    val saltedAudit = ExtractJob.lineage(spark,
-      spark.read.parquet(s"$saltedOut/results/snapshot=1"), saltedCfg.runId, 1L)
-    assert(key(spark.read.parquet(s"$saltedOut/lineage/snapshot=1")) == key(saltedAudit),
-      "salted accumulator lineage differs from the audit recompute")
+    sameAsAudit(saltedOut, saltedCfg.runId)
+    // and the driver's file reads as a Spark write of the same rows does
+    val stats = Map(
+      0 -> ExtractJob.PartitionLineage(0, Seq("a", "b"), 3, 2, 1),
+      1 -> ExtractJob.PartitionLineage(1, Seq.empty, 0, 0, 0),
+      2 -> ExtractJob.PartitionLineage(2, Seq("c"), 5, 5, 0))
+    val (byDriver, bySpark) = (tmpDir(), tmpDir())
+    ExtractJob.writeLineage(spark, stats, "r", 7L, byDriver)
+    ExtractJob.lineageFromStats(spark, stats, "r", 7L).write.mode("overwrite").parquet(bySpark)
+    val (d, k) = (spark.read.parquet(byDriver), spark.read.parquet(bySpark))
+    assert(d.schema == k.schema, s"${d.schema.treeString} != ${k.schema.treeString}")
+    assert(key(d) == key(k) && key(d).length == 2)
   }
 
   test("readAll spans multiple snapshots (sibling snapshot= roots, one table)") {
@@ -188,7 +203,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"declared ${all.schema.treeString} != inferred ${inferred.schema.treeString}")
   }
 
-  test("a presorted snapshot is two Spark jobs: results write, one-task lineage write") {
+  test("a presorted snapshot is one Spark job, and its lineage one parquet file") {
     val dir = tmpDir(); val out = tmpDir()
     val snap = TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 20, 32, buckets = 2)
     val sc = spark.sparkContext
@@ -202,7 +217,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       ExtractJob.runSnapshot(spark, ExtractJob.Config(dir, out), snap)
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 2, s"${jobs.get} jobs ran; expected the results and lineage writes")
+    assert(jobs.get == 1, s"${jobs.get} jobs ran; expected the results write only")
     val st = Files.list(Paths.get(s"$out/lineage/snapshot=1"))
     val parquet = try st.iterator().asScala.count(_.toString.endsWith(".parquet"))
       finally st.close()
@@ -237,5 +252,37 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.select("conv_id", "turn_idx").distinct().count() == res.count())
     // idempotent: a third run does nothing
     assert(ExtractJob.run(spark, cfg).isEmpty)
+  }
+
+  test("resume: a snapshot with results and lineage written but no commit marker is redone") {
+    val dir = tmpDir()
+    TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 12, 32, buckets = 2)
+    def digest(out: String): (Long, Long, Long, String) = {
+      val res = spark.read.parquet(s"$out/results/snapshot=1")
+      val lin = spark.read.parquet(s"$out/lineage/snapshot=1")
+      val h = (df: org.apache.spark.sql.DataFrame) =>
+        df.selectExpr("sum(hash(*))").head().getLong(0)
+      (res.count(), h(res), h(lin),
+        Files.readString(ExtractJob.commitMarker(out, 1)))
+    }
+    val clean = tmpDir()
+    ExtractJob.run(spark, ExtractJob.Config(dir, clean))
+    // the crash state, built by hand: a run wrote results and lineage and
+    // died before the marker, after an earlier attempt left a part file
+    // of its own in each directory
+    val crashed = tmpDir()
+    val cfg = ExtractJob.Config(dir, crashed)
+    ExtractJob.run(spark, cfg)
+    Files.delete(ExtractJob.commitMarker(crashed, 1))
+    for (sub <- Seq("results", "lineage")) {
+      val d = Paths.get(s"$crashed/$sub/snapshot=1")
+      val st = Files.list(d)
+      val part = try st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
+        finally st.close()
+      Files.copy(part, d.resolve("part-99999-earlier-attempt.parquet"))
+    }
+    assert(ExtractJob.committedSnapshots(crashed).isEmpty)
+    assert(ExtractJob.run(spark, cfg).map(_._1) == Seq(1L))
+    assert(digest(crashed) == digest(clean))
   }
 }

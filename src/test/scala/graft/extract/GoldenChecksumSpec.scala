@@ -1,5 +1,6 @@
 package graft.extract
 
+import java.util.Locale
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.TranscriptGen
 
@@ -17,21 +18,35 @@ class GoldenChecksumSpec extends AnyFunSuite {
   // (POSSIBLE_* tiers + substring-routed banks).
   private val Expected = "713cf133b8db052b1cf7338f3540848d"
 
-  test("extraction semantics checksum is stable across rounds") {
+  private def checksum(): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     for (c <- 0 until 40; t <- 0 until TranscriptGen.convSize(c, 32)) {
       val turn = TranscriptGen.turn(c, t)
       val e = Extract.extractTurn(turn.conv_id, turn.turn_idx, turn.text)
       val line = Seq(e.conv_id, e.turn_idx, e.doc_type, e.extracted_text,
         Extract.sectionsToJson(e.sections), Extract.fieldsToJson(e.fields),
-        e.signature_present, e.confidence, e.status).mkString("")
+        e.signature_present, e.confidence, e.status).mkString("\u0001")
       md.update(line.getBytes("UTF-8"))
       md.update(0: Byte)
     }
-    val got = md.digest().map("%02x".format(_)).mkString
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  test("extraction semantics checksum is stable across rounds") {
+    val got = checksum()
     assert(got == Expected,
       s"extraction semantics drifted: checksum $got != $Expected — if the " +
         "change is intentional, update Expected in the same commit and " +
         "document why")
+  }
+
+  test("the checksum does not depend on the JVM default locale") {
+    // Turkish lowercases `I` to dotless `i` (U+0131): "DATE OF BIRTH" would no
+    // longer contain "date of birth", and the generator's names would change
+    val saved = Locale.getDefault
+    try {
+      Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+      assert(checksum() == Expected)
+    } finally Locale.setDefault(saved)
   }
 }

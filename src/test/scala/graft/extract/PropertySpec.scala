@@ -232,4 +232,40 @@ class PropertySpec extends AnyFunSuite {
       assert(ratio < 3.0, s"'$unit': t(2n)/t(n) = $ratio")
     }
   }
+
+  // --- field banks: the ROADMAP item-1 probes ---------------------------
+
+  /** A classifier-passing header (no line of it matches the bank
+    * pattern) plus a repeated unit, as the probes that found the
+    * quadratic `qtyTriGroup`, `physicianNpi` and `memberNameId` forms.
+    */
+  private val bankProbes = Seq(
+    ("qty", "PRESCRIPTION\nBreast Pump\nICD-10 Code: Z39.1\nPhysician NPI\n", "QTY 9 x "),
+    ("physician", "PRESCRIPTION\nBreast Pump\nICD-10 Code: Z39.1\nPhysician NPI\n",
+      "Physician Name: a "),
+    ("member", "Member ID\nCopay\nBIN\n", "Member Name a "))
+
+  private def probe(header: String, unit: String, chars: Int): String =
+    header + unit * ((chars - header.length) / unit.length)
+
+  private def turnNanos(t: String): Long = {
+    val t0 = System.nanoTime()
+    Extract.extractTurn("c", 0, t)
+    System.nanoTime() - t0
+  }
+
+  test("each bank probe's time is linear in the length, and 1 MiB takes under 50 ms") {
+    for ((name, header, unit) <- bankProbes) {
+      val (small, large) = (probe(header, unit, 64 << 10), probe(header, unit, 128 << 10))
+      assert(Extract.extractTurn("c", 0, small).status == "ok")
+      (1 to 5).foreach(_ => turnNanos(large)) // JIT warm-up
+      // median over back-to-back pairs, so host drift hits both sizes alike
+      val ratios = (1 to 15).map(_ => turnNanos(large).toDouble / turnNanos(small)).sorted
+      val ratio = ratios(ratios.length / 2)
+      assert(ratio < 3.0, s"$name: t(2n)/t(n) = $ratio")
+      val mib = probe(header, unit, 1 << 20)
+      val best = (1 to 3).map(_ => turnNanos(mib)).min / 1e6
+      assert(best < 50.0, f"$name: 1 MiB took $best%.1f ms")
+    }
+  }
 }
