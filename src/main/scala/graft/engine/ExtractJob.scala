@@ -7,11 +7,11 @@ import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.LocalOutputFile
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.{SPARK_VERSION_SHORT, TaskContext}
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions
@@ -128,21 +128,11 @@ object ExtractJob {
     spark.createDataset(lineageRows(stats, runId, snapshotId))(LineageRowEncoder)
       .toDF().coalesce(1)
 
-  /** [[LineageRow]]'s parquet schema, as Spark writes it. */
-  private val LineageParquetSchema = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  optional binary run_id (STRING);
-      |  required int64 snapshot_id;
-      |  required int32 partition_id;
-      |  optional group input_files (LIST) {
-      |    repeated group list {
-      |      optional binary element (STRING);
-      |    }
-      |  }
-      |  required int64 turn_count;
-      |  required int64 ok_count;
-      |  required int64 fail_count;
-      |}""".stripMargin)
+  /** [[LineageRow]]'s parquet schema, derived as Spark's writer derives
+    * it (standard, non-legacy LIST groups).
+    */
+  private val LineageParquetSchema =
+    new SparkToParquetSchemaConverter().convert(LineageRowEncoder.schema)
 
   /** Write the lineage rows into directory `dir` as one snappy parquet
     * file, on the driver, with no Spark job: the schema, the rows and the
@@ -168,16 +158,19 @@ object ExtractJob {
       .build()
     try {
       val rows = new SimpleGroupFactory(LineageParquetSchema)
+      val names = LineageRowEncoder.schema.fieldNames
       for (r <- lineageRows(stats, runId, snapshotId)) {
         val g = rows.newGroup()
-          .append("run_id", r.run_id)
-          .append("snapshot_id", r.snapshot_id)
-          .append("partition_id", r.partition_id)
-          .append("turn_count", r.turn_count)
-          .append("ok_count", r.ok_count)
-          .append("fail_count", r.fail_count)
-        val files = g.addGroup("input_files")
-        r.input_files.foreach(f => files.addGroup("list").append("element", f))
+        // the row's fields in schema order; a null leaves its column unset
+        r.productIterator.zip(names).foreach {
+          case (v: String, n) => g.append(n, v)
+          case (v: Long, n) => g.append(n, v)
+          case (v: Int, n) => g.append(n, v)
+          case (v: Seq[_], n) =>
+            val list = g.addGroup(n)
+            v.foreach(e => list.addGroup("list").append("element", e.toString))
+          case (null, _) =>
+        }
         writer.write(g)
       }
     } finally writer.close()

@@ -302,16 +302,6 @@ private[extract] object BankScans {
 
   private val Bullets = "\u2022\u2756\u2605\u2726\u25CF\u25A0\u25AA"
 
-  /** Whether t holds one of the bullet chars the pattern needs. */
-  def hasBullet(t: String): Boolean = {
-    var i = 0
-    while (i < t.length) {
-      if (Bullets.indexOf(t.charAt(i)) >= 0) return true
-      i += 1
-    }
-    false
-  }
-
   /** The code after the first bullet within 40 code points of an
     * `ICD-10 Code(s)` label at or after `from`, or null. The optional
     * `(`, `s` and `)` are taken when present: giving one back only moves

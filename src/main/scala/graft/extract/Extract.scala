@@ -509,7 +509,7 @@ object Extract {
     "patient date of birth", "patient phone", "admit date")
 
   /** How many of `kws` `lowText` contains (the reference-parity arm's
-    * scorer; [[classifyLow]] counts the same from one literal scan).
+    * scorer; [[classify]] counts the same from one literal scan).
     */
   def keywordScore(lowText: String, kws: Vector[String]): Int =
     kws.count(lowText.contains)
@@ -534,10 +534,8 @@ object Extract {
   def classifyWithFilename(key: String, text: String): String =
     classifyFilename(key).getOrElse(classify(text))
 
-  def classify(text: String): String = classifyLow(text.toLowerCase(Locale.ROOT))
-
-  /** classify() body over an already-lowercased text (`Locale.ROOT`). */
-  def classifyLow(low: String): String = classifyFirst(literals.firstIndices(low))
+  def classify(text: String): String =
+    classifyFirst(literals.firstIndices(text.toLowerCase(Locale.ROOT)))
 
   /** The classifier ladder over a [[literals]] scan: a list's score is how
     * many of its keywords occur.
@@ -837,7 +835,7 @@ object Extract {
       b.putIf("patient_dob", firstAt(patientDob, text, 0, sc, DobStarts))
     var icd: String = null
     if (sc.has(LIcd)) {
-      if (BankScans.hasBullet(text)) icd = BankScans.icdBullet(text, sc.start(LIcd))
+      icd = BankScans.icdBullet(text, sc.start(LIcd))
       if (icd == null) icd = firstAt(icdPlain, text, 0, sc, IcdStarts)
     }
     if (icd == null) icd = firstMatch(icdGeneric, text).orNull
@@ -1020,27 +1018,21 @@ object Extract {
     }
   }
 
-  /** A turn's fields as parallel arrays: KV anchors first (the first of a
-    * key wins), then the bank's values, which replace an anchor of the
-    * same key and are marked as pattern-sourced. Past 16 keys an index
-    * keeps lookups constant-time.
+  /** A turn's fields as parallel arrays, with a key index: KV anchors
+    * first (the first of a key wins), then the bank's values, which
+    * replace an anchor of the same key and are marked as pattern-sourced.
     */
   private final class FieldBuf {
     var keys = new Array[String](16)
     var vals = new Array[String](16)
     var pattern = new Array[Boolean](16)
     var size = 0
-    private var index: java.util.HashMap[String, Integer] = null
+    private val index = new java.util.HashMap[String, Integer](32)
 
-    private def indexOf(k: String): Int =
-      if (index != null) {
-        val i = index.get(k)
-        if (i == null) -1 else i.intValue
-      } else {
-        var i = 0
-        while (i < size && keys(i) != k) i += 1
-        if (i < size) i else -1
-      }
+    private def indexOf(k: String): Int = {
+      val i = index.get(k)
+      if (i == null) -1 else i.intValue
+    }
 
     private def append(k: String, v: String, fromPattern: Boolean): Unit = {
       if (size == keys.length) {
@@ -1051,12 +1043,8 @@ object Extract {
       keys(size) = k
       vals(size) = v
       pattern(size) = fromPattern
+      index.put(k, size)
       size += 1
-      if (index != null) index.put(k, size - 1)
-      else if (size == 16) {
-        index = new java.util.HashMap[String, Integer](64)
-        for (i <- 0 until size) index.put(keys(i), i)
-      }
     }
 
     def anchor(k: String, v: String): Unit = if (indexOf(k) < 0) append(k, v, false)
@@ -1082,23 +1070,7 @@ object Extract {
       (0 until size).iterator.map(i => keys(i) -> vals(i)).toMap
 
     /** Indices in key order (`String.compareTo`, as the JSON writer sorts). */
-    def sortedOrder: Array[Int] = {
-      val order = Array.range(0, size)
-      if (size <= 32) {
-        var i = 1
-        while (i < size) {
-          val o = order(i)
-          var j = i
-          while (j > 0 && keys(order(j - 1)).compareTo(keys(o)) > 0) {
-            order(j) = order(j - 1)
-            j -= 1
-          }
-          order(j) = o
-          i += 1
-        }
-        order
-      } else order.sortBy(keys(_))
-    }
+    def sortedOrder: Array[Int] = Array.range(0, size).sortBy(keys(_))
   }
 
   // -------------------------------------------------------------------------
@@ -1364,17 +1336,16 @@ object Extract {
   // `detect_signature` methods 3 ("signature"/"signed"//s/) and the
   // "Signed by customer:" implication.
   // -------------------------------------------------------------------------
-  def detectSignature(text: String): Boolean =
-    detectSignatureLow(text.toLowerCase(Locale.ROOT))
+  def detectSignature(text: String): Boolean = {
+    // six cues: a few `contains` beat a pass of the whole literal scan
+    val low = text.toLowerCase(Locale.ROOT)
+    signature(id => low.contains(literals.literals(id)))
+  }
 
-  /** detectSignature() over an already-lowercased text (see classifyLow). */
-  def detectSignatureLow(low: String): Boolean = signatureFirst(literals.firstIndices(low))
-
-  private def signatureFirst(first: Array[Int]): Boolean = {
-    def has(id: Int) = first(id) >= 0
+  /** The text-indicator arm over `has`: whether literal `id` occurs. */
+  private def signature(has: Int => Boolean): Boolean =
     has(LSlashS) || has(LSignedByCustomer) || has(LFirmado) || has(LSignatureColon) ||
     (has(LSignature) && has(LSigned))
-  }
 
   /** Layout span: page-normalized bounding box of a text-less line block
     * (the OCR geometry the reference's Method 2 inspects). Transcripts
@@ -1722,7 +1693,7 @@ object Extract {
       else if (docType.contains("PRESCRIPTION")) prescriptionInto(sc, fb)
       else if (docType.contains("AGREEMENT")) agreementInto(sc, fb)
       else if (docType == "INSURANCE") insuranceInto(sc, fb)
-      val sig = signatureFirst(sc.first)
+      val sig = signature(sc.has)
       val conf =
         if (docType.contains("AGREEMENT"))
           a2(fb.bankNonEmpty("signed_by"), fb.bankNonEmpty("signed_date"), sig)

@@ -87,8 +87,8 @@ class KernelSpec extends AnyFunSuite {
       val low = t.toLowerCase(Locale.ROOT)
       val first = Extract.literals.firstIndices(low)
       for (i <- lits.indices) assert(first(i) == low.indexOf(lits(i)), lits(i))
-      assert(Extract.classifyLow(low) == RegexBanks.classifyLow(low))
-      assert(Extract.detectSignatureLow(low) == RegexBanks.detectSignatureLow(low))
+      assert(Extract.classify(t) == RegexBanks.classifyLow(low))
+      assert(Extract.detectSignature(t) == RegexBanks.detectSignatureLow(low))
     }
   }
 
@@ -149,7 +149,7 @@ class KernelSpec extends AnyFunSuite {
       val want = RegexBanks.icdBulletCode(t)
       assert(BankScans.icdBullet(t, 0) == want)
       val f = from(t, "icd-10")
-      assert((if (f < 0 || !BankScans.hasBullet(t)) null else BankScans.icdBullet(t, f)) == want)
+      assert((if (f < 0) null else BankScans.icdBullet(t, f)) == want)
     }
   }
 
